@@ -271,6 +271,94 @@ def test_cli_db_loads_star_schema_into_mysql(spark, raw_dir):
         con.close()
 
 
+def test_records_failing_beyond_eventdate_are_exported_not_repaired(spark, tmp_path):
+    """Only a record whose every detail is on eventDate goes through the
+    date repair. One that also fails another field (an individualCount
+    of "x", a missing latitude) must land in the error export: merged
+    back, it aborted the typed union with CAST_INVALID_INPUT or broke
+    the NOT NULL load of the star schema."""
+    import sqlite3
+
+    from whale_sightings_spark.cli import main
+    from whale_sightings_spark.sources.files import read_error_json
+
+    base = {"species": "Delphinapterus leucas", "speciesid": 137115,
+            "decimalLatitude": 60.0, "decimalLongitude": -150.0}
+    rows = [
+        {**base, "occurrenceID": "ok", "eventDate": "1913-03-17"},
+        {**base, "occurrenceID": "bad_count", "eventDate": "1914-03-17",
+         "individualCount": "x"},
+        {**base, "occurrenceID": "no_lat", "eventDate": "1915-03-17",
+         "decimalLatitude": None},
+        # a repairable date does not rescue the other failed field
+        {**base, "occurrenceID": "month_and_count", "eventDate": "1925-11",
+         "individualCount": "x"},
+    ]
+    data_dir = tmp_path / "raw"
+    (data_dir / "beluga_whale").mkdir(parents=True)
+    (data_dir / "beluga_whale" / "1900-01-01--1950-12-31.json").write_text(
+        json.dumps({"results": rows}, indent=4)
+    )
+    db_path = str(tmp_path / "whales.db")
+    assert main(["db", "beluga_whale", "--data-dir", str(data_dir),
+                 "--db-url", f"sqlite:///{db_path}"]) == 0
+
+    exported = read_error_json(spark, f"{data_dir}/beluga_whale/errors").collect()
+    locs = {r["data"]["occurrenceID"]: {d["loc"] for d in r["details"]} for r in exported}
+    assert locs == {
+        "bad_count": {"individualCount"},
+        "no_lat": {"decimalLatitude"},
+        "month_and_count": {"eventDate", "individualCount"},
+    }
+    con = sqlite3.connect(db_path)
+    try:
+        ids = [r[0] for r in con.execute("SELECT id FROM occurrences")]
+    finally:
+        con.close()
+    assert ids == ["ok"]
+
+
+def test_run_pipeline_schedules_zero_jobs(spark, raw_dir):
+    """With both dates given and driver-side polygons, building the
+    ingest lineage runs no Spark job: every action waits for a sink."""
+    import numpy as np
+
+    from whale_sightings_spark.operators.spatial import parse_wkt_polygon
+
+    oceans = [(name, np.array(parse_wkt_polygon(w))) for name, w in OCEANS_WKT]
+    ctx = PipelineContext(whale="beluga_whale", startdate="1800-01-01",
+                          enddate="1999-12-31", data_dir=raw_dir)
+    sc = spark.sparkContext
+    group = "lazy-run-pipeline"
+    sc.setJobGroup(group, "run_pipeline builds its lineage")
+    try:
+        run_pipeline(spark, ctx, oceans)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(jobs) == 0, f"run_pipeline scheduled {len(jobs)} Spark jobs"
+
+
+def test_cleaned_lineage_optimizes_without_constraint_inference(spark, result):
+    """One optimisation of the cleaned lineage spends under 1 s in the
+    constraint rules. With constraint propagation on, PruneFilters
+    computed the constraints of the inlined validation array and date
+    cascade under the dedup filter, about 5 s per optimisation; plan
+    size drives it, not data size."""
+    rules = spark._jvm.org.apache.spark.sql.catalyst.rules.RuleExecutor
+    rules.resetMetrics()
+    # a new Dataset: the fixture's own QueryExecution may be optimised already
+    result.cleaned.select("*")._jdf.queryExecution().optimizedPlan()
+    spent_ns = 0
+    for line in rules.dumpTimeSpent().splitlines():
+        parts = line.split()
+        if parts and parts[0].rsplit(".", 1)[-1] in (
+            "PruneFilters", "InferFiltersFromConstraints"
+        ):
+            spent_ns += int(parts[3])  # "<effective> / <total>" time in ns
+    assert spent_ns < 1e9, f"constraint rules took {spent_ns / 1e9:.2f} s"
+
+
 def test_notebook_parity_queries(result):
     """Notebook cells 9-14 queries over the star schema: species join,
     location merge, valid-date sightings-per-year."""

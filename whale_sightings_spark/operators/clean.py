@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from whale_sightings_spark.functions.dates import date_is_valid, with_date_parts
-from whale_sightings_spark.operators.ordinal import global_row_number
 from whale_sightings_spark.operators.validate import ORDINAL_COLS
 from whale_sightings_spark.schemas import DATE_PARTS_FIELDS
 
@@ -23,15 +22,24 @@ DEDUP_KEYS = ("eventDate", "decimalLatitude", "decimalLongitude")
 def explode_error_details(errors: DataFrame) -> DataFrame:
     """F12/F15: flatten errors×details into one row per detail with
     ``detail_type/detail_loc/detail_msg`` columns (the Spark analog of
-    the reference's MultiIndex build, cleaner.py:214-245)."""
+    the reference's MultiIndex build, cleaner.py:214-245).
+
+    ``detail_dates_only`` carries, onto every detail row, whether all of
+    the record's details are on ``eventDate`` — the only field the
+    repair pass can fix."""
+    data_cols = [c for c in errors.columns if c != "details"]
     return errors.select(
-        *[c for c in errors.columns if c != "details"],
+        *data_cols,
+        F.forall("details", lambda d: d["loc"] == "eventDate").alias(
+            "detail_dates_only"
+        ),
         F.explode("details").alias("_d"),
     ).select(
-        *[c for c in errors.columns if c != "details"],
+        *data_cols,
         F.col("_d.type").alias("detail_type"),
         F.col("_d.loc").alias("detail_loc"),
         F.col("_d.msg").alias("detail_msg"),
+        "detail_dates_only",
     )
 
 
@@ -58,19 +66,23 @@ def regroup_error_details(exploded: DataFrame) -> DataFrame:
 def process_error_data(exploded: DataFrame) -> tuple[DataFrame, DataFrame]:
     """P6/P7: second-chance repair of error rows (cleaner.py:290-321).
 
-    split_dates over the raw eventDate; ``processed`` = all six parts
-    nonzero. Repaired rows drop the detail columns and full-row-dedup
-    (U3); unrepaired rows are returned for the JSON export.
+    split_dates over the raw eventDate; ``processed`` = every detail of
+    the record is on eventDate and all six parts are nonzero. A record
+    with any other failed field (an unparseable individualCount, a
+    missing latitude) cannot be repaired by a date split and would fail
+    the typed merge, so it stays unrepaired. Repaired rows drop the
+    detail columns and full-row-dedup (U3); unrepaired rows are
+    returned for the JSON export.
     """
     with_parts = with_date_parts(exploded, src="eventDate")
-    processed_flag = F.lit(True)
+    processed_flag = F.col("detail_dates_only")
     for f in DATE_PARTS_FIELDS:
         processed_flag = processed_flag & (F.col(f) != 0)
     with_parts = with_parts.withColumn("processed", processed_flag)
 
     repaired = (
         with_parts.filter("processed")
-        .drop("detail_type", "detail_loc", "detail_msg", "processed")
+        .drop("detail_type", "detail_loc", "detail_msg", "detail_dates_only", "processed")
         .dropDuplicates()
     )
     unrepaired = with_parts.filter(~F.col("processed")).drop("processed")
@@ -107,21 +119,42 @@ def dedup_keep_first(df: DataFrame, keys=DEDUP_KEYS) -> DataFrame:
 
 def fill_in(df: DataFrame, whale: str) -> DataFrame:
     """W1 + F7/F8 (cleaner.py:56-74): null occurrenceIDs become
-    -1,-2,... in encounter order; null vernacularName filled with the
-    Title-Cased whale name.
+    -1,-2,... in ``(_channel, _ingest_file, _ingest_pos)`` order; null
+    vernacularName filled with the Title-Cased whale name.
 
-    The negative surrogate sequence is order-dependent. A bare global
-    window would serialize the whole null subset onto one partition;
-    instead the numbering comes from the distributed
-    :func:`global_row_number` (range shuffle + parallel per-partition
-    enumeration), so the operator survives a null-heavy 100 TB input.
+    The negative surrogate sequence is order-dependent, but a global
+    window would serialize the whole null subset onto one partition.
+    Instead each ``(_channel, _ingest_file)`` slice is numbered by its
+    own window, in parallel, and shifted by the null count of the slices
+    before it: a cumulative sum over a per-slice count aggregate of at
+    most 2 x files rows, broadcast back. Everything stays lazy, so the
+    numbering runs inside the sinks' jobs.
     """
     whale_title = whale.replace("_", " ").title()
+    slice_cols = ["_channel", "_ingest_file"]
 
-    nulls = df.filter(F.col("occurrenceID").isNull())
-    keyed = global_row_number(
-        nulls, ["_channel", *ORDINAL_COLS], out="_grn"
-    ).withColumn("occurrenceID", (-F.col("_grn")).cast("string")).drop("_grn")
+    local = W.partitionBy(*slice_cols).orderBy("_ingest_pos")
+    nulls = df.filter(F.col("occurrenceID").isNull()).withColumn(
+        "_rn", F.row_number().over(local)
+    )
+    # a slice's null count is its last row number: grouping the numbered
+    # rows by the window's own key reuses the window's shuffle
+    offsets = (
+        nulls.groupBy(*slice_cols)
+        .agg(F.max("_rn").alias("_n"))
+        .withColumn(
+            "_off",
+            F.sum("_n").over(
+                W.orderBy(*slice_cols).rowsBetween(W.unboundedPreceding, -1)
+            ),
+        )
+        .select(*slice_cols, F.coalesce("_off", F.lit(0)).alias("_off"))
+    )
+    keyed = (
+        nulls.join(F.broadcast(offsets), slice_cols)
+        .withColumn("occurrenceID", (-(F.col("_off") + F.col("_rn"))).cast("string"))
+        .drop("_off", "_rn")
+    )
     filled = df.filter(F.col("occurrenceID").isNotNull()).unionByName(keyed)
     return filled.withColumn(
         "vernacularName", F.coalesce(F.col("vernacularName"), F.lit(whale_title))

@@ -3,9 +3,11 @@ lineage from raw-zone JSON to the curated frame + star schema.
 
 Reference lifecycle (``main.py:33-50``): fetch -> validate -> clean ->
 load, eager and single-threaded with file checkpoints between stages.
-Here stages 2-4 are one Catalyst plan; actions happen only at sinks.
-The only wide operators are the dedup window and the dim aggregations —
-every dim join broadcasts (SURVEY §7.0).
+Here stages 2-4 are one Catalyst plan and building it runs no Spark
+job: actions happen only at the sinks, plus one bounds scan when the
+context leaves a start or end date open. The only wide operators are
+the dedup window, the per-file null-ID numbering window and the dim
+aggregations — every dim join broadcasts (SURVEY §7.0).
 """
 
 from __future__ import annotations

@@ -9,7 +9,12 @@ design point:
   in both directions — override per-deploy on a cluster);
 - Arrow enabled for every pandas interchange (vectorized UDF path);
 - session timezone pinned to UTC so timestamp semantics match the
-  DuckDB oracle and are deploy-independent.
+  DuckDB oracle and are deploy-independent;
+- constraint propagation off: inferring constraints under a deep
+  projection (the ingest's inlined validation array and date cascade)
+  cost seconds of ``PruneFilters`` per optimisation (SCALE.md);
+- exact-string JSON parsing off: it re-reads a multiLine document for
+  every number parsed into a string field (SCALE.md).
 """
 
 from __future__ import annotations
@@ -40,6 +45,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.constraintPropagation.enabled", "false")
+        .config("spark.sql.json.enableExactStringParsing", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python Data Source filter pushdown (R2: the obis source
         # absorbs eventDate/species predicates into request params)
