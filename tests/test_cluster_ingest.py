@@ -250,6 +250,7 @@ def test_cluster_compaction_preserves_readers_and_sentinel_rebuilds(
     assert any(d.startswith("bucket=") for d in os.listdir(art + "/bands"))
     # crashed compaction: sentinel present -> cache treats as absent
     from whale_sightings_spark.plans.cluster_store import text_cluster_dir
+    from whale_sightings_spark.plans.store_utils import compacting_sentinel
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(base / "cache"))
     sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -258,10 +259,10 @@ def test_cluster_compaction_preserves_readers_and_sentinel_rebuilds(
     mt0 = os.path.getmtime(marker)
     assert text_cluster_dir(spark, sf) == cached  # cache hit
     assert os.path.getmtime(marker) == mt0
-    with open(DD.cluster_compacting_sentinel(cached), "w") as fh:
+    with open(compacting_sentinel(cached), "w") as fh:
         fh.write("12345")
     assert text_cluster_dir(spark, sf) == cached
-    assert not os.path.exists(DD.cluster_compacting_sentinel(cached))
+    assert not os.path.exists(compacting_sentinel(cached))
     assert os.path.getmtime(marker) > mt0
 
 

@@ -424,6 +424,7 @@ def test_crashed_compaction_reads_as_absent_and_rebuilds(
     as absent — it rebuilds instead of serving a store that may be
     missing a table mid-swap."""
     from whale_sightings_spark.plans.lm_store import lm_artifact_dir
+    from whale_sightings_spark.plans.store_utils import compacting_sentinel
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
     sf_dir = os.environ.get(
@@ -436,11 +437,11 @@ def test_crashed_compaction_reads_as_absent_and_rebuilds(
     assert lm_artifact_dir(spark, sf_dir) == art
     assert os.path.getmtime(marker) == mt0
     # crashed compaction: sentinel present -> full rebuild
-    with open(LM.lm_compacting_sentinel(art), "w") as fh:
+    with open(compacting_sentinel(art), "w") as fh:
         fh.write("12345")
     art2 = lm_artifact_dir(spark, sf_dir)
     assert art2 == art
-    assert not os.path.exists(LM.lm_compacting_sentinel(art))
+    assert not os.path.exists(compacting_sentinel(art))
     assert os.path.exists(marker)
     assert os.path.getmtime(marker) > mt0
 

@@ -1,11 +1,188 @@
-"""Cache-root maintenance: dead-builder staging reap (ADVICE r8 —
-failed/killed builds must not accumulate near-full-size partial stores
-under `.index_cache/`)."""
+"""The artifact-store lifecycle in `plans/store_utils.py`: dead-builder
+staging reap, the build-if-absent key and eviction, torn-remain and
+race handling at publish, the compaction sentinel, and the memoized
+table reads."""
 from __future__ import annotations
 
+import errno
 import os
 
+import pytest
+
+from whale_sightings_spark.plans import store_utils as SU
 from whale_sightings_spark.plans.store_utils import reap_dead_staging
+
+
+# ---------------------------------------------------------------------------
+# lifecycle on a stub family: `write` only creates the marker tables, so
+# these run without Spark
+# ---------------------------------------------------------------------------
+
+
+def _marker(d):
+    return os.path.join(d, "t")
+
+
+def _touch_marker(table):
+    os.makedirs(table)
+    open(os.path.join(table, "_SUCCESS"), "w").close()
+
+
+def _stub(tmp_path, monkeypatch, family="ivfpq", marker=_marker, tables=()):
+    """(build, builds): ``build()`` resolves a stub ``family`` store over
+    a one-file sf dir cached under ``tmp_path/cache/sf_x``; ``builds``
+    lists every staging dir written."""
+    sf = tmp_path / "sf_x"
+    sf.mkdir()
+    (sf / "src.parquet").write_bytes(b"x" * 64)
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "cache"))
+    builds = []
+
+    def write(staging):
+        builds.append(staging)
+        for table in (marker, *tables):
+            _touch_marker(table(staging))
+
+    def build():
+        return SU.artifact_dir(str(sf), "src.parquet", family, 3, marker, write)
+
+    return build, builds
+
+
+def _complete(d):
+    return os.path.exists(os.path.join(_marker(d), "_SUCCESS"))
+
+
+def test_eviction_is_scoped_to_the_family_and_version_prefix(
+    tmp_path, monkeypatch
+):
+    """`ivfpq` is a prefix of `ivfpq_hist<split>`: a rebuild of the
+    full index must evict only its own stale leaves."""
+    build, _ = _stub(tmp_path, monkeypatch)
+    sf_root = tmp_path / "cache" / "sf_x"
+    for leaf in ("ivfpq_v3_old", "ivfpq_hist400_v3_x", "bpe_full_v1_x"):
+        os.makedirs(sf_root / leaf / "t")
+    art = build()
+    assert _complete(art)
+    assert sorted(os.listdir(sf_root)) == sorted(
+        [os.path.basename(art), "ivfpq_hist400_v3_x", "bpe_full_v1_x"]
+    )
+
+
+def test_torn_remain_is_cleared_and_published(tmp_path, monkeypatch):
+    build, _ = _stub(tmp_path, monkeypatch)
+    sig = SU.stat_sig(str(tmp_path / "sf_x" / "src.parquet"))
+    torn = str(tmp_path / "cache" / "sf_x" / f"ivfpq_v3_{sig}")
+    os.makedirs(os.path.join(torn, "t"))
+    open(os.path.join(torn, "junk.parquet"), "w").close()
+    assert build() == torn
+    assert _complete(torn)
+    assert os.listdir(os.path.dirname(torn)) == [os.path.basename(torn)]
+    assert not os.path.exists(os.path.join(torn, "junk.parquet"))
+
+
+def test_sentinel_forces_a_rebuild_and_is_gone_after(tmp_path, monkeypatch):
+    build, builds = _stub(tmp_path, monkeypatch)
+    art = build()
+    assert build() == art and len(builds) == 1  # warm: no rebuild
+    open(SU.compacting_sentinel(art), "w").close()
+    assert build() == art
+    assert len(builds) == 2
+    assert not os.path.exists(SU.compacting_sentinel(art))
+    assert _complete(art)
+
+
+def test_racing_builders_completed_store_wins(tmp_path, monkeypatch):
+    def theirs(staging):
+        # the final dir a racing builder publishes while ours builds
+        return staging.rpartition(".tmp.")[0]
+
+    build, _ = _stub(tmp_path, monkeypatch, tables=(
+        lambda d: _marker(theirs(d)),
+        lambda d: os.path.join(theirs(d), "theirs"),
+    ))
+    art = build()
+    assert _complete(art)
+    assert os.path.isdir(os.path.join(art, "theirs"))
+    assert os.listdir(os.path.dirname(art)) == [os.path.basename(art)]
+
+
+def test_rename_failure_that_is_not_a_race_reraises(tmp_path, monkeypatch):
+    build, _ = _stub(tmp_path, monkeypatch)
+
+    def cross_device(src, dst):
+        raise OSError(errno.EXDEV, "cross-device link", src)
+
+    monkeypatch.setattr(SU.os, "rename", cross_device)
+    with pytest.raises(OSError) as exc:
+        build()
+    assert exc.value.errno == errno.EXDEV
+    # staging dropped, nothing published
+    assert os.listdir(tmp_path / "cache" / "sf_x") == []
+
+
+def test_failed_compaction_leaves_the_sentinel(tmp_path, monkeypatch):
+    """A compaction that dies inside a swap (live table already moved
+    aside, the new one missing) must leave the sentinel, so the next
+    read rebuilds instead of serving a store without its table."""
+    from whale_sightings_spark.operators import dedup as DD
+
+    class _Frame:
+        # every DataFrame call chains; the final parquet() writes nothing
+        def __getattr__(self, name):
+            return self
+
+        def __call__(self, *args, **kwargs):
+            return self
+
+    class _Spark:
+        read = _Frame()
+
+    build, builds = _stub(
+        tmp_path, monkeypatch, "clusters_text",
+        DD.cluster_artifact_paths, (DD.cluster_pairs_path,),
+    )
+    art = build()
+    with pytest.raises(OSError):
+        DD.compact_cluster_artifact(_Spark(), art)
+    assert os.path.exists(SU.compacting_sentinel(art))
+    assert build() == art and len(builds) == 2
+    assert not os.path.exists(SU.compacting_sentinel(art))
+
+
+def test_same_size_rewrite_within_a_second_rekeys_the_store(
+    tmp_path, monkeypatch
+):
+    """A same-size `documents.parquet` swapped in by `os.replace`
+    within the same second must not serve the old corpus's NB model:
+    the key carries mtime_ns and inode, not whole seconds."""
+    from whale_sightings_spark.operators import classify as CL
+    from whale_sightings_spark.plans import queries_classify as QC
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "cache"))
+    monkeypatch.setattr(QC, "load_table", lambda spark, sf_dir, name: None)
+
+    def fake_build(docs, staging):
+        meta = CL.nb_artifact_paths(staging)[1]
+        os.makedirs(meta)
+        open(os.path.join(meta, "_SUCCESS"), "w").close()
+
+    monkeypatch.setattr(CL, "build_nb_artifact", fake_build)
+    sf = tmp_path / "sf_x"
+    sf.mkdir()
+    docs = sf / "documents.parquet"
+    second = 1_792_289_507 * 10**9
+    docs.write_bytes(b"a" * 65_515)
+    os.utime(docs, ns=(second + 10**8, second + 10**8))
+    art1 = QC._nb_artifact_dir(None, str(sf))
+    repl = tmp_path / "new.parquet"
+    repl.write_bytes(b"b" * 65_515)
+    os.replace(repl, docs)
+    os.utime(docs, ns=(second + 6 * 10**8, second + 6 * 10**8))
+    art2 = QC._nb_artifact_dir(None, str(sf))
+    assert art2 != art1
+    assert os.path.exists(os.path.join(CL.nb_artifact_paths(art2)[1], "_SUCCESS"))
+    assert not os.path.exists(art1)
 
 
 def test_reap_removes_dead_pid_staging_only(tmp_path):

@@ -1442,6 +1442,7 @@ def test_shingle_compaction_preserves_readers_and_defrags(
     import time
 
     from whale_sightings_spark.operators import shingles as SH
+    from whale_sightings_spark.plans.store_utils import ingest_batch_dirs
     from whale_sightings_spark.streaming.events import (
         streaming_shingle_index_ingest,
     )
@@ -1486,7 +1487,7 @@ def test_shingle_compaction_preserves_readers_and_defrags(
     raw_df = spark.read.parquet(art + "/df")
     assert raw_df.groupBy("shingle").count().filter("count > 1").count() == 0
     # batch dirs folded away; pruned-probe layout survived
-    assert SH.shingle_ingest_batch_dirs(art) == []
+    assert ingest_batch_dirs(art) == []
     probe = SH.stored_postings(spark, art).filter(F.col("bucket").isin([0, 1]))
     plan = probe.sparkSession._jvm.PythonSQLUtils.explainString(
         probe._jdf.queryExecution(), "formatted"
@@ -1554,8 +1555,8 @@ def test_shingle_crashed_compaction_reads_as_absent_and_rebuilds(
     rebuild (the lm_store v2 contract on the fourth artifact)."""
     import os
 
-    from whale_sightings_spark.operators import shingles as SH
     from whale_sightings_spark.plans.shingle_store import shingle_artifact_dir
+    from whale_sightings_spark.plans.store_utils import compacting_sentinel
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
     sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -1564,11 +1565,11 @@ def test_shingle_crashed_compaction_reads_as_absent_and_rebuilds(
     mt0 = os.path.getmtime(marker)
     assert shingle_artifact_dir(spark, sf) == art  # cache hit
     assert os.path.getmtime(marker) == mt0
-    with open(SH.shingle_compacting_sentinel(art), "w") as fh:
+    with open(compacting_sentinel(art), "w") as fh:
         fh.write("12345")
     art2 = shingle_artifact_dir(spark, sf)
     assert art2 == art
-    assert not os.path.exists(SH.shingle_compacting_sentinel(art))
+    assert not os.path.exists(compacting_sentinel(art))
     assert os.path.getmtime(marker) > mt0
 
 

@@ -856,17 +856,8 @@ def build_cluster_artifact(
     return artifact_dir
 
 
-def cluster_compacting_sentinel(artifact_dir: str) -> str:
-    """Compaction-in-progress marker: while present,
-    `plans.cluster_store._dir_for` treats the artifact as ABSENT and
-    rebuilds — a mid-swap crash can never serve an artifact with a
-    missing table. Compaction requires exclusive access."""
-    return artifact_dir.rstrip("/") + "/COMPACTING"
-
-
 def compact_cluster_artifact(spark, artifact_dir: str) -> dict[str, int]:
-    """Artifact maintenance after streaming ingest (the
-    `compact_lm_store` recipe on the cluster store): every per-batch
+    """Artifact maintenance after streaming ingest: every per-batch
     append fragments the sig/band/pair/label/merge tables by one file
     set; compaction rewrites each table in its own layout (bands and
     pairs keep their bucket partitioning), de-duplicates the merge
@@ -874,14 +865,17 @@ def compact_cluster_artifact(spark, artifact_dir: str) -> dict[str, int]:
     appends are already anti-joined, so there are no partials to
     collapse, only fragmentation to fold.
 
-    Crash contract: a ``COMPACTING`` sentinel is written FIRST and
-    removed LAST; the build-if-absent cache treats an artifact
-    carrying it as absent and rebuilds. ``labels`` (the completeness-
-    marker table) swaps first as belt-and-braces. Tables the embed
-    graph does not materialize (sigs/bands/merges) are skipped."""
-    import glob
+    Runs under the ``COMPACTING`` sentinel (`plans.store_utils`);
+    ``labels``, the completeness-marker table, swaps first. Tables the
+    embed graph does not materialize (sigs/bands/merges) are
+    skipped."""
     import os
-    import shutil
+
+    from whale_sightings_spark.plans.store_utils import (
+        compacting_sentinel,
+        parquet_files,
+        swap_table,
+    )
 
     tables = (
         ("labels", cluster_artifact_paths(artifact_dir)),
@@ -893,25 +887,9 @@ def compact_cluster_artifact(spark, artifact_dir: str) -> dict[str, int]:
         ("ebands", cluster_ebands_path(artifact_dir)),
         ("eband_stats", cluster_eband_stats_path(artifact_dir)),
     )
-
-    def _nfiles() -> int:
-        return sum(
-            len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
-            for _, d in tables
-        )
-
-    def _swap(live: str, write) -> None:
-        staging = live + "__compact"
-        write(staging)
-        old = live + "__old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(live, old)
-        os.rename(staging, live)
-        shutil.rmtree(old)
-
-    before = _nfiles()
-    sentinel = cluster_compacting_sentinel(artifact_dir)
+    roots = [d for _, d in tables]
+    before = parquet_files(*roots)
+    sentinel = compacting_sentinel(artifact_dir)
     with open(sentinel, "w") as fh:
         fh.write(str(os.getpid()))
     for key, live in tables:
@@ -923,7 +901,7 @@ def compact_cluster_artifact(spark, artifact_dir: str) -> dict[str, int]:
         df = df.localCheckpoint()
         if key in ("pairs", "bands", "ebands"):
             part = {"pairs": "pbucket", "bands": "bucket", "ebands": "ebucket"}[key]
-            _swap(
+            swap_table(
                 live,
                 lambda staging, df=df, part=part: (
                     df.repartition(part)
@@ -934,7 +912,7 @@ def compact_cluster_artifact(spark, artifact_dir: str) -> dict[str, int]:
             )
         elif key in ("labels", "merges", "eband_stats"):
             # edge-set-bounded / ledger-sized — one file each
-            _swap(
+            swap_table(
                 live,
                 lambda staging, df=df: (
                     df.coalesce(1).write.mode("overwrite").parquet(staging)
@@ -942,14 +920,14 @@ def compact_cluster_artifact(spark, artifact_dir: str) -> dict[str, int]:
             )
         else:
             # sigs scale with the corpus: defrag without forcing one file
-            _swap(
+            swap_table(
                 live,
                 lambda staging, df=df: (
                     df.write.mode("overwrite").parquet(staging)
                 ),
             )
     os.remove(sentinel)
-    return {"files_before": before, "files_after": _nfiles()}
+    return {"files_before": before, "files_after": parquet_files(*roots)}
 
 
 def _read_stored(spark, path: str, schema=None) -> DataFrame:

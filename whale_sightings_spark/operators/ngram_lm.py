@@ -194,30 +194,6 @@ def lm_ingest_root(artifact_dir: str) -> str:
     return artifact_dir.rstrip("/") + "/ingest"
 
 
-def lm_compacting_sentinel(artifact_dir: str) -> str:
-    """Compaction-in-progress marker: while present (or left behind by
-    a crashed compaction), `plans.lm_store.lm_artifact_dir` treats the
-    store as ABSENT and rebuilds — a mid-swap crash can therefore never
-    serve a store with a missing table. Compaction requires exclusive
-    access (no concurrent ingest/readers of the same artifact)."""
-    return artifact_dir.rstrip("/") + "/COMPACTING"
-
-
-def lm_ingest_batch_dirs(artifact_dir: str) -> list[str]:
-    """Published per-batch ingest dirs, oldest first. ``.tmp.`` staging
-    dirs (torn batches) are invisible by construction."""
-    import os
-
-    root = lm_ingest_root(artifact_dir)
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for d in sorted(os.listdir(root)):
-        if d.startswith("b") and d[1:].isdigit():
-            out.append(os.path.join(root, d))
-    return out
-
-
 # ---------------------------------------------------------------------------
 # event extraction — EXACTLY the inline q120/q185/q216 shapes (postion
 # windows over the raw token array with per-event empty filters), so
@@ -423,12 +399,15 @@ def _read_table(spark, artifact_dir: str, key: str, schema) -> DataFrame:
     independently so bucket partition pruning survives the union."""
     import os
 
-    from whale_sightings_spark.plans.store_utils import read_artifact_table
+    from whale_sightings_spark.plans.store_utils import (
+        ingest_batch_dirs,
+        read_artifact_table,
+    )
 
     base = read_artifact_table(
         spark, lm_artifact_paths(artifact_dir)[key], schema
     )
-    for b in lm_ingest_batch_dirs(artifact_dir):
+    for b in ingest_batch_dirs(artifact_dir):
         t = os.path.join(b, key)
         if os.path.isdir(t):
             base = base.unionByName(read_artifact_table(spark, t, schema))
@@ -647,8 +626,7 @@ def bm25_score_docs_from_store(
 
 
 def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
-    """Store maintenance after streaming ingest (the
-    `compact_ivfpq_index` convention for the sixth artifact): each
+    """Store maintenance after streaming ingest: each
     ``streaming_lm_ingest`` trigger publishes one per-batch sub-store;
     after enough triggers every reader unions ever more batch dirs and
     the sum-at-read readers fold ever-taller partial stacks. Compaction
@@ -660,40 +638,25 @@ def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
     per-doc rows (disjoint, unchanged) or sum partials (sums are
     unchanged by pre-summing).
 
-    Crash contract (ADVICE r8): a ``COMPACTING`` sentinel is written
-    FIRST and removed LAST; `plans.lm_store.lm_artifact_dir` treats a
-    store carrying the sentinel as ABSENT, so a crash anywhere inside
-    compaction — including the un-atomic window inside a directory
-    swap — triggers a full rebuild instead of serving a store with a
-    missing table. ``pairs`` (the completeness-marker table) swaps
-    first as belt-and-braces. Compaction requires exclusive access to
-    the artifact (no concurrent ingest or build-if-absent callers).
-    Returns {"files_before": n, "files_after": m}."""
-    import glob
+    Runs under the ``COMPACTING`` sentinel (`plans.store_utils`);
+    ``pairs``, the completeness-marker table, swaps first. Requires
+    exclusive access to the artifact (no concurrent ingest or
+    build-if-absent callers). Returns {"files_before": n,
+    "files_after": m}."""
     import os
     import shutil
 
+    from whale_sightings_spark.plans.store_utils import (
+        compacting_sentinel,
+        ingest_batch_dirs,
+        parquet_files,
+        swap_table,
+    )
+
     paths = lm_artifact_paths(artifact_dir)
-
-    def _nfiles() -> int:
-        roots = list(paths.values()) + [lm_ingest_root(artifact_dir)]
-        return sum(
-            len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
-            for d in roots
-        )
-
-    def _swap(live: str, write) -> None:
-        staging = live + "__compact"
-        write(staging)
-        old = live + "__old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(live, old)
-        os.rename(staging, live)
-        shutil.rmtree(old)
-
-    before = _nfiles()
-    sentinel = lm_compacting_sentinel(artifact_dir)
+    roots = list(paths.values()) + [lm_ingest_root(artifact_dir)]
+    before = parquet_files(*roots)
+    sentinel = compacting_sentinel(artifact_dir)
     with open(sentinel, "w") as fh:
         fh.write(str(os.getpid()))
     # aggregated tables (pairs FIRST — it carries the completeness
@@ -706,7 +669,7 @@ def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
         ("tri_train", ["w1", "w2", "w3"], "c123"),
     ):
         df = spark.read.parquet(paths[key])
-        for b in lm_ingest_batch_dirs(artifact_dir):
+        for b in ingest_batch_dirs(artifact_dir):
             t = os.path.join(b, key)
             if os.path.isdir(t):
                 df = df.unionByName(spark.read.parquet(t))
@@ -715,7 +678,7 @@ def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
             .agg(F.sum(val).cast("bigint").alias(val))
             .localCheckpoint()
         )
-        _swap(
+        swap_table(
             paths[key],
             lambda staging, m=merged: m.write.mode("overwrite").parquet(
                 staging
@@ -728,7 +691,7 @@ def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
         ("doc_tri", _DOC_TRI_SCHEMA),
     ):
         df = _read_table(spark, artifact_dir, key, schema).localCheckpoint()
-        _swap(
+        swap_table(
             paths[key],
             lambda staging, df=df: (
                 df.repartition("bucket")
@@ -739,21 +702,21 @@ def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
         )
     # the doc-id manifest: de-duplicate base + batches
     ids = stored_doc_ids(spark, artifact_dir).distinct().localCheckpoint()
-    _swap(
+    swap_table(
         paths["doc_ids"],
         lambda staging: ids.write.mode("overwrite").parquet(staging),
     )
     # per-doc lengths: defrag (rows are per-doc and disjoint across
     # batches — a plain rewrite, no re-aggregate)
     dlen = stored_doc_len(spark, artifact_dir).localCheckpoint()
-    _swap(
+    swap_table(
         paths["doc_len"],
         lambda staging: dlen.write.mode("overwrite").parquet(staging),
     )
     # every batch is folded into the base tables — drop the batch dirs
     shutil.rmtree(lm_ingest_root(artifact_dir), ignore_errors=True)
     os.remove(sentinel)
-    return {"files_before": before, "files_after": _nfiles()}
+    return {"files_before": before, "files_after": parquet_files(*roots)}
 
 
 def source_kl_vs_stored(

@@ -51,7 +51,7 @@ On-disk layout (all parquet):
 
 Write order: postings -> df -> doc_stats -> doc_ids -> src5 LAST, so
 the build-if-absent cache can key on ``src5/_SUCCESS`` and a torn
-build is invisible (the `bpe_artifact_paths` torn-write contract).
+build is invisible.
 """
 from __future__ import annotations
 
@@ -133,29 +133,6 @@ def shingle_ingest_root(artifact_dir: str) -> str:
     return artifact_dir.rstrip("/") + "/ingest"
 
 
-def shingle_compacting_sentinel(artifact_dir: str) -> str:
-    """Compaction-in-progress marker: while present,
-    `plans.shingle_store.shingle_artifact_dir` treats the store as
-    ABSENT and rebuilds — a mid-swap crash can never serve a store
-    with a missing table. Compaction requires exclusive access."""
-    return artifact_dir.rstrip("/") + "/COMPACTING"
-
-
-def shingle_ingest_batch_dirs(artifact_dir: str) -> list[str]:
-    """Published per-batch ingest dirs, oldest first; ``.tmp.``
-    staging dirs (torn batches) are invisible by construction."""
-    import os
-
-    root = shingle_ingest_root(artifact_dir)
-    if not os.path.isdir(root):
-        return []
-    return [
-        os.path.join(root, d)
-        for d in sorted(os.listdir(root))
-        if d.startswith("b") and d[1:].isdigit()
-    ]
-
-
 #: per-batch sub-store table names (relative to the batch dir)
 SHINGLE_TABLE_KEYS = ("postings", "df", "doc_stats", "src5", "doc_ids")
 
@@ -181,10 +158,13 @@ def _read_table(spark, artifact_dir: str, key: str, schema) -> DataFrame:
     union."""
     import os
 
-    from whale_sightings_spark.plans.store_utils import read_artifact_table
+    from whale_sightings_spark.plans.store_utils import (
+        ingest_batch_dirs,
+        read_artifact_table,
+    )
 
     base = read_artifact_table(spark, _table_path(artifact_dir, key), schema)
-    for b in shingle_ingest_batch_dirs(artifact_dir):
+    for b in ingest_batch_dirs(artifact_dir):
         t = os.path.join(b, key)
         if os.path.isdir(t):
             base = base.unionByName(read_artifact_table(spark, t, schema))
@@ -309,46 +289,31 @@ def stored_src5(spark: SparkSession, artifact_dir: str) -> DataFrame:
 def compact_shingle_store(
     spark: SparkSession, artifact_dir: str
 ) -> dict[str, int]:
-    """Store maintenance after streaming ingest (the `compact_lm_store`
-    recipe for the shingle index): fold every published batch into the
-    base tables — (a) postings/doc_stats rewritten in the SAME layout
-    (postings keep the bucket partitioning, one file per bucket),
-    (b) df partials collapsed to ONE row per shingle, (c) src5 and the
-    doc-id manifest de-duplicated — then drop the folded batch dirs.
-    Semantically invisible: readers either union doc-disjoint rows
-    (unchanged) or sum/distinct partials (unchanged by pre-folding).
-
-    Crash contract: a ``COMPACTING`` sentinel is written FIRST and
-    removed LAST; `plans.shingle_store.shingle_artifact_dir` treats a
-    store carrying it as ABSENT, so a crash anywhere inside compaction
-    rebuilds instead of serving a store with a missing table. ``src5``
-    (the completeness-marker table) swaps first as belt-and-braces.
-    Requires exclusive access (no concurrent ingest or readers)."""
-    import glob
+    """Store maintenance after streaming ingest: fold every published
+    batch into the base tables — (a) postings/doc_stats rewritten in
+    the SAME layout (postings keep the bucket partitioning, one file
+    per bucket), (b) df partials collapsed to ONE row per shingle,
+    (c) src5 and the doc-id manifest de-duplicated — then drop the
+    folded batch dirs. Semantically invisible: readers either union
+    doc-disjoint rows (unchanged) or sum/distinct partials (unchanged
+    by pre-folding). Runs under the ``COMPACTING`` sentinel
+    (`plans.store_utils`); ``src5``, the completeness-marker table,
+    swaps first. Requires exclusive access (no concurrent ingest or
+    readers)."""
     import os
     import shutil
 
-    def _nfiles() -> int:
-        roots = [
-            _table_path(artifact_dir, k) for k in SHINGLE_TABLE_KEYS
-        ] + [shingle_ingest_root(artifact_dir)]
-        return sum(
-            len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
-            for d in roots
-        )
+    from whale_sightings_spark.plans.store_utils import (
+        compacting_sentinel,
+        parquet_files,
+        swap_table,
+    )
 
-    def _swap(live: str, write) -> None:
-        staging = live + "__compact"
-        write(staging)
-        old = live + "__old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(live, old)
-        os.rename(staging, live)
-        shutil.rmtree(old)
-
-    before = _nfiles()
-    sentinel = shingle_compacting_sentinel(artifact_dir)
+    roots = [_table_path(artifact_dir, k) for k in SHINGLE_TABLE_KEYS] + [
+        shingle_ingest_root(artifact_dir)
+    ]
+    before = parquet_files(*roots)
+    sentinel = compacting_sentinel(artifact_dir)
     with open(sentinel, "w") as fh:
         fh.write(str(os.getpid()))
     # src5 FIRST — it carries the completeness marker
@@ -357,7 +322,7 @@ def compact_shingle_store(
         .distinct()
         .localCheckpoint()
     )
-    _swap(
+    swap_table(
         _table_path(artifact_dir, "src5"),
         lambda staging: src5.write.mode("overwrite").parquet(staging),
     )
@@ -367,14 +332,14 @@ def compact_shingle_store(
         .agg(F.sum("df").cast("bigint").alias("df"))
         .localCheckpoint()
     )
-    _swap(
+    swap_table(
         _table_path(artifact_dir, "df"),
         lambda staging: dfc.write.mode("overwrite").parquet(staging),
     )
     post = _read_table(
         spark, artifact_dir, "postings", _POSTINGS_SCHEMA
     ).localCheckpoint()
-    _swap(
+    swap_table(
         _table_path(artifact_dir, "postings"),
         lambda staging: (
             post.repartition("bucket")
@@ -386,7 +351,7 @@ def compact_shingle_store(
     stats = _read_table(
         spark, artifact_dir, "doc_stats", _DOC_STATS_SCHEMA
     ).localCheckpoint()
-    _swap(
+    swap_table(
         _table_path(artifact_dir, "doc_stats"),
         lambda staging: stats.write.mode("overwrite").parquet(staging),
     )
@@ -395,13 +360,13 @@ def compact_shingle_store(
         .distinct()
         .localCheckpoint()
     )
-    _swap(
+    swap_table(
         _table_path(artifact_dir, "doc_ids"),
         lambda staging: ids.write.mode("overwrite").parquet(staging),
     )
     shutil.rmtree(shingle_ingest_root(artifact_dir), ignore_errors=True)
     os.remove(sentinel)
-    return {"files_before": before, "files_after": _nfiles()}
+    return {"files_before": before, "files_after": parquet_files(*roots)}
 
 
 def capped_postings(

@@ -1789,44 +1789,38 @@ def compact_ivfpq_index(spark, index_dir: str) -> dict[str, int]:
     then pays per-file open cost instead of sequential reads.
     Compaction rewrites the code table in the SAME cell-partitioned
     layout with one file per cell (``spark.sql.files.maxRecordsPerFile``
-    still splits genuinely hot cells), preserving contents exactly.
-
-    The rewrite stages into ``<table>__compact`` then swaps directories
-    (write target ≠ read source, so a torn compaction leaves the live
-    dir untouched; the stale staging dir is overwritten by the next
-    attempt). The v2 plain-PQ code table compacts the same way under
-    its own keys. Returns {"files_before": n, "files_after": m,
-    "rows": r, "pq_files_before": ..., "pq_files_after": ...,
-    "pq_rows": ...} so callers can assert the win."""
-    import glob
+    still splits genuinely hot cells), preserving contents exactly,
+    through `plans.store_utils.swap_table` (write target ≠ read source,
+    so a torn compaction leaves the live dir untouched). The v2
+    plain-PQ code table compacts the same way under its own keys.
+    Returns {"files_before": n, "files_after": m, "rows": r,
+    "pq_files_before": ..., "pq_files_after": ..., "pq_rows": ...} so
+    callers can assert the win."""
     import os
-    import shutil
+
+    from whale_sightings_spark.plans.store_utils import (
+        parquet_files,
+        swap_table,
+    )
 
     _coarse_dir, _rcb_dir, codes_dir = ivfpq_index_paths(index_dir)
     _pqcb_dir, pq_codes_dir = ivfpq_index_extra_paths(index_dir)
 
-    def _nfiles(d: str) -> int:
-        return len(glob.glob(os.path.join(d, "cell=*", "*.parquet")))
-
     def _compact(d: str, cols) -> tuple[int, int, int]:
-        before = _nfiles(d)
+        before = parquet_files(d)
         t = spark.read.parquet(d)
         rows = t.count()
-        staging = d + "__compact"
-        (
-            t.select(*cols)
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(staging)
+        swap_table(
+            d,
+            lambda staging: (
+                t.select(*cols)
+                .repartition("cell")
+                .write.mode("overwrite")
+                .partitionBy("cell")
+                .parquet(staging)
+            ),
         )
-        old = d + "__old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(d, old)
-        os.rename(staging, d)
-        shutil.rmtree(old)
-        return before, _nfiles(d), rows
+        return before, parquet_files(d), rows
 
     b, a, r = _compact(
         codes_dir,

@@ -1,79 +1,46 @@
 """Build-if-absent caches of the persisted near-dup cluster artifact
 (`operators/dedup.py: build_cluster_artifact`) — one per pair graph:
 ``text`` (SimHash near-dup pairs over documents, keyed by the
-documents fingerprint) and ``embed`` (LSH+cosine embedding near-dup
-pairs, keyed by the embeddings fingerprint). The `shingle_store`
-convention: fingerprint + format-version key, prefix-scoped eviction,
-pid staging + atomic rename with torn-remain clearing."""
+documents signature) and ``embed`` (LSH+cosine embedding near-dup
+pairs, keyed by the embeddings signature)."""
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from whale_sightings_spark.operators import dedup as DD
+from whale_sightings_spark.plans.store_utils import (
+    artifact_dir,
+    publish,
+    read_artifact_table,
+    reap_dead_staging,
+    stat_sig,
+)
 from whale_sightings_spark.schemas import load_table
 
 
 def _dir_for(
     spark: SparkSession, sf_dir: str, kind: str, src_file: str, build
 ) -> str:
-    st = os.stat(os.path.join(sf_dir, src_file))
-    fp = f"{st.st_size}_{int(st.st_mtime)}"
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__)))),
-            ".index_cache",
-        ),
-    )
-    sf_root = os.path.join(root, os.path.basename(os.path.normpath(sf_dir)))
-    prefix = f"clusters_{kind}_"
-    leaf = f"{prefix}v{DD.CLUSTER_FORMAT_VERSION}_{fp}"
-    artifact_dir = os.path.join(sf_root, leaf)
-    labels_dir = DD.cluster_artifact_paths(artifact_dir)
-    marker = os.path.join(labels_dir, "_SUCCESS")
+    """The ``clusters_<kind>`` store; ``build(spark, sf_dir)`` returns
+    ``(pairs, sigs[, evecs])`` for `DD.build_cluster_artifact`."""
 
-    def _incomplete() -> bool:
-        # a crashed compaction's sentinel reads as absent (rebuild)
-        return not os.path.exists(marker) or os.path.exists(
-            DD.cluster_compacting_sentinel(artifact_dir)
+    def write(staging: str) -> None:
+        built = build(spark, sf_dir)
+        evecs = built[2] if len(built) > 2 else None
+        DD.build_cluster_artifact(
+            built[0], staging, sigs=built[1], evecs=evecs
         )
 
-    if _incomplete():
-        from whale_sightings_spark.plans.store_utils import reap_dead_staging
-
-        reap_dead_staging(sf_root)  # dead builders' .tmp leftovers
-        if os.path.isdir(sf_root):
-            for d in os.listdir(sf_root):
-                if d != leaf and d.startswith(prefix) and ".tmp." not in d:
-                    shutil.rmtree(os.path.join(sf_root, d), ignore_errors=True)
-        staging = f"{artifact_dir}.tmp.{os.getpid()}"
-        try:
-            built = build(spark, sf_dir)
-            pairs, sigs = built[0], built[1]
-            evecs = built[2] if len(built) > 2 else None
-            DD.build_cluster_artifact(pairs, staging, sigs=sigs, evecs=evecs)
-        except BaseException:
-            # a failed build must not leak a near-full-size staging dir
-            # under the cache root (the eviction sweep skips .tmp.)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        if _incomplete():
-            shutil.rmtree(artifact_dir, ignore_errors=True)
-        try:
-            os.rename(staging, artifact_dir)
-        except OSError:
-            # a racing builder's completed artifact wins and we just
-            # lose our staging; but a NON-race failure (EXDEV, perms)
-            # must surface as itself, not as a confusing path-not-found
-            # from the reader downstream (ADVICE r10)
-            shutil.rmtree(staging, ignore_errors=True)
-            if _incomplete():
-                raise
-    return artifact_dir
+    return artifact_dir(
+        sf_dir,
+        src_file,
+        f"clusters_{kind}",
+        DD.CLUSTER_FORMAT_VERSION,
+        DD.cluster_artifact_paths,
+        write,
+    )
 
 
 def text_cluster_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -118,87 +85,55 @@ def stored_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _derived_table(
     spark: SparkSession,
-    artifact_dir: str,
+    art: str,
     name: str,
     build,
     src_marker: str | None = None,
 ) -> DataFrame:
-    """Build-if-absent DERIVED table of a cluster artifact (round 10):
-    converged graph analytics (PageRank scores, k-core profile) live
-    BESIDE the pairs/labels they were computed from, so they inherit
-    the artifact's corpus-fingerprint staleness key — a corpus change
-    re-keys the whole artifact directory and every derived table with
-    it. pid staging + atomic rename (the `_dir_for` convention); the
-    parquet ``_SUCCESS`` is the completeness marker, so a torn write
-    reads as absent and rebuilds. Tables are node-sized or
-    profile-sized (edge-set-bounded), never corpus-scale.
+    """Build-if-absent DERIVED table of a cluster artifact: converged
+    graph analytics (PageRank scores, k-core profile) live BESIDE the
+    pairs/labels they were computed from, so a corpus change re-keys
+    them with the whole artifact directory. The table's ``_SUCCESS`` is
+    its completeness marker. Tables are node-sized or profile-sized
+    (edge-set-bounded), never corpus-scale.
 
-    Round 12 (ADVICE r11): ``src_marker`` — the ``_SUCCESS`` of the
-    source table this derivation reads — closes the concurrent-append
-    race by generation, not by deletion order: the builder stamps the
-    source generation it read into a ``_GEN`` file inside the staging
-    dir BEFORE computing, and the reader treats a published derived
-    table whose ``_GEN`` disagrees with the source's current marker as
-    absent. A builder that raced a streaming append and published
-    stale scores is therefore never served — its ``_GEN`` is already
-    behind. Missing ``_GEN`` (pre-round-12 artifacts) reads as stale
-    once and rebuilds."""
-    from whale_sightings_spark.plans.store_utils import marker_sig
+    ``src_marker`` — the ``_SUCCESS`` of the source table this
+    derivation reads — closes the concurrent-append race by generation,
+    not by deletion order: the builder stamps the source generation it
+    read into a ``_GEN`` file BEFORE computing, and the reader treats a
+    published derived table whose ``_GEN`` disagrees with the source's
+    current marker as absent. A builder that raced a streaming append
+    and published stale scores is therefore never served. A missing
+    ``_GEN`` reads as stale once and rebuilds."""
+    path = os.path.join(art, "derived_" + name)
 
-    path = os.path.join(artifact_dir, "derived_" + name)
-    marker = os.path.join(path, "_SUCCESS")
-    gen_file = os.path.join(path, "_GEN")
-
-    def _stale() -> bool:
-        if not os.path.exists(marker):
-            return True
-        if src_marker is None:
+    def fresh() -> bool:
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
             return False
+        if src_marker is None:
+            return True
         try:
-            with open(gen_file) as fh:
+            with open(os.path.join(path, "_GEN")) as fh:
                 seen = fh.read().strip()
         except OSError:
-            return True
-        return seen != (marker_sig(src_marker) or "")
+            return False
+        return seen == (stat_sig(src_marker) or "")
 
-    if _stale():
-        from whale_sightings_spark.plans.store_utils import (
-            reap_dead_staging,
-        )
+    def write(staging: str) -> None:
+        # stamp the source generation BEFORE computing: if an append
+        # lands mid-build, the published _GEN is already behind the
+        # moved marker and the next read rebuilds
+        gen = (stat_sig(src_marker) or "") if src_marker else None
+        build().write.mode("overwrite").parquet(staging)
+        if gen is not None:
+            with open(os.path.join(staging, "_GEN"), "w") as fh:
+                fh.write(gen)
 
+    if not fresh():
         # dead builders' derived_*.tmp.<pid> leftovers live INSIDE the
-        # artifact dir, which the sf_root sweep never visits (ADVICE
-        # r10) — reap them here, where the rebuild happens
-        reap_dead_staging(artifact_dir)
-        staging = f"{path}.tmp.{os.getpid()}"
-        try:
-            # stamp the source generation BEFORE computing: if an
-            # append lands mid-build, the published _GEN is already
-            # behind the moved marker and the next read rebuilds
-            gen = (
-                (marker_sig(src_marker) or "")
-                if src_marker is not None
-                else None
-            )
-            build().write.mode("overwrite").parquet(staging)
-            if gen is not None:
-                with open(os.path.join(staging, "_GEN"), "w") as fh:
-                    fh.write(gen)
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        shutil.rmtree(path, ignore_errors=True)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            # racing builder completed -> fine; a non-race rename
-            # failure must re-raise as itself, not surface later as
-            # the reader's path-not-found (ADVICE r10)
-            shutil.rmtree(staging, ignore_errors=True)
-            if not os.path.exists(marker):
-                raise
-    from whale_sightings_spark.plans.store_utils import read_artifact_table
-
+        # artifact dir, which the sf_root sweep never visits
+        reap_dead_staging(art)
+        publish(path, write, fresh)
     return read_artifact_table(spark, path)
 
 

@@ -1,78 +1,26 @@
 """Build-if-absent cache of the persisted n-gram LM store
-(`operators/ngram_lm.py`) — the `shingle_store` convention:
-fingerprint + format-version key, prefix-scoped eviction, pid staging
-+ atomic rename with torn-remain clearing. Shared by the perplexity /
-LM query family (queries_corpus, queries_classify)."""
+(`operators/ngram_lm.py`), shared by the perplexity / LM query family
+(queries_corpus, queries_classify)."""
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import SparkSession
 
 from whale_sightings_spark.operators import ngram_lm as LM
+from whale_sightings_spark.plans.store_utils import artifact_dir
 from whale_sightings_spark.schemas import load_table
 
 
 def lm_artifact_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-keyed (documents file size+mtime, format version)
-    artifact dir for the n-gram LM store."""
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(doc_path)
-    fp = f"{st.st_size}_{int(st.st_mtime)}"
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__)))),
-            ".index_cache",
+    """The n-gram LM store over ``sf_dir``'s documents; the build
+    writes ``pairs`` last, so its ``_SUCCESS`` marks a finished
+    build."""
+    return artifact_dir(
+        sf_dir,
+        "documents.parquet",
+        "ngramlm",
+        LM.NGRAM_LM_FORMAT_VERSION,
+        lambda d: LM.lm_artifact_paths(d)["pairs"],
+        lambda staging: LM.build_lm_artifact(
+            load_table(spark, sf_dir, "documents"), staging
         ),
     )
-    sf_root = os.path.join(root, os.path.basename(os.path.normpath(sf_dir)))
-    leaf = f"ngramlm_v{LM.NGRAM_LM_FORMAT_VERSION}_{fp}"
-    artifact_dir = os.path.join(sf_root, leaf)
-    # the build writes pairs LAST — its _SUCCESS is the completeness
-    # marker; a store carrying the COMPACTING sentinel (a crashed
-    # compaction) is treated as absent and rebuilt (ADVICE r8)
-    marker = os.path.join(
-        LM.lm_artifact_paths(artifact_dir)["pairs"], "_SUCCESS"
-    )
-
-    def _incomplete() -> bool:
-        return not os.path.exists(marker) or os.path.exists(
-            LM.lm_compacting_sentinel(artifact_dir)
-        )
-
-    if _incomplete():
-        from whale_sightings_spark.plans.store_utils import reap_dead_staging
-
-        reap_dead_staging(sf_root)  # dead builders' .tmp leftovers
-        if os.path.isdir(sf_root):
-            for d in os.listdir(sf_root):
-                if d != leaf and d.startswith("ngramlm_") and ".tmp." not in d:
-                    shutil.rmtree(os.path.join(sf_root, d), ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents")
-        staging = f"{artifact_dir}.tmp.{os.getpid()}"
-        try:
-            LM.build_lm_artifact(docs, staging)
-        except BaseException:
-            # a failed build must not leak a near-full-size staging dir
-            # under the cache root (the eviction sweep skips .tmp.)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        # clear a TORN remain (dir present, marker absent) or a
-        # crashed-compaction remain (sentinel present) so the rename
-        # lands; a racing builder's completed marker wins and we just
-        # lose our staging
-        if _incomplete():
-            shutil.rmtree(artifact_dir, ignore_errors=True)
-        try:
-            os.rename(staging, artifact_dir)
-        except OSError:
-            # racing builder completed -> fine; a non-race rename
-            # failure must re-raise as itself, not surface later as
-            # the reader's path-not-found (ADVICE r10)
-            shutil.rmtree(staging, ignore_errors=True)
-            if _incomplete():
-                raise
-    return artifact_dir

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from whale_sightings_spark.operators import classify as CL
 from whale_sightings_spark.plans.queries import register
+from whale_sightings_spark.plans.store_utils import artifact_dir
 from whale_sightings_spark.schemas import load_table
 
 # ---------------------------------------------------------------------------
@@ -309,60 +310,19 @@ def q228_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _nb_artifact_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build-if-absent cache of the trained-NB artifact for
-    ``sf_dir`` — the `_bpe_artifact_dir` convention, keyed by the
-    documents file's (size, mtime) fingerprint and the model format
-    version; eviction scoped to the ``nb_`` prefix."""
-    import os
-
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(doc_path)
-    fp = f"{st.st_size}_{int(st.st_mtime)}"
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))), ".index_cache"),
+    """The trained-NB store over ``sf_dir``'s documents; the build
+    writes ``meta`` last, so its ``_SUCCESS`` marks a finished
+    build."""
+    return artifact_dir(
+        sf_dir,
+        "documents.parquet",
+        "nb",
+        CL.NB_FORMAT_VERSION,
+        lambda d: CL.nb_artifact_paths(d)[1],
+        lambda staging: CL.build_nb_artifact(
+            load_table(spark, sf_dir, "documents"), staging
+        ),
     )
-    sf_root = os.path.join(root, os.path.basename(os.path.normpath(sf_dir)))
-    leaf = f"nb_v{CL.NB_FORMAT_VERSION}_{fp}"
-    artifact_dir = os.path.join(sf_root, leaf)
-    _vocab_dir, meta_dir = CL.nb_artifact_paths(artifact_dir)
-    if not os.path.exists(os.path.join(meta_dir, "_SUCCESS")):
-        import shutil
-
-        from whale_sightings_spark.plans.store_utils import reap_dead_staging
-
-        reap_dead_staging(sf_root)  # dead builders' .tmp leftovers
-        if os.path.isdir(sf_root):
-            for d in os.listdir(sf_root):
-                if d != leaf and d.startswith("nb_") and ".tmp." not in d:
-                    shutil.rmtree(os.path.join(sf_root, d), ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents")
-        # pid-unique staging + atomic-rename publish (the
-        # _ivfpq_index_dir racing-builders contract)
-        staging = f"{artifact_dir}.tmp.{os.getpid()}"
-        try:
-            CL.build_nb_artifact(docs, staging)
-        except BaseException:
-            # a failed build must not leak a near-full-size staging dir
-            # under the cache root (the eviction sweep skips .tmp.)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        # clear a TORN remain (dir present, marker absent) or the
-        # rename fails and the heal silently no-ops; a racing builder
-        # that completed meanwhile re-shows its marker and wins
-        if not os.path.exists(os.path.join(meta_dir, "_SUCCESS")):
-            shutil.rmtree(artifact_dir, ignore_errors=True)
-        try:
-            os.rename(staging, artifact_dir)
-        except OSError:
-            # racing builder completed -> fine; a non-race rename
-            # failure must re-raise as itself, not surface later as
-            # the reader's path-not-found (ADVICE r10)
-            shutil.rmtree(staging, ignore_errors=True)
-            if not os.path.exists(os.path.join(meta_dir, "_SUCCESS")):
-                raise
-    return artifact_dir
 
 
 @register(

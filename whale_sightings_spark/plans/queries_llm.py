@@ -25,6 +25,7 @@ from whale_sightings_spark.operators import dedup as DD
 from whale_sightings_spark.operators import drift as DR
 from whale_sightings_spark.operators import similarity as SIM
 from whale_sightings_spark.plans.queries import register
+from whale_sightings_spark.plans.store_utils import artifact_dir
 from whale_sightings_spark.schemas import load_table
 
 # ---------------------------------------------------------------------------
@@ -2443,73 +2444,26 @@ def q151_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_index_dir(
     spark: SparkSession, sf_dir: str, split: int | None = None
 ) -> str:
-    """Build-if-absent cache of the IVF-PQ artifact for ``sf_dir``.
-    Keyed by the embeddings file's (size, mtime) fingerprint and the
-    index format version, so a regenerated corpus or changed codebook
-    geometry can never serve a stale index. With ``split``, the index
-    is built over the HISTORY slice only (vec_id < split) under its
-    own cache key — the immutable history artifact q174's incremental
-    encode serves from (history artifacts never change, so caching
-    them per (sf_dir, split) mirrors production exactly)."""
-    import os
+    """The IVF-PQ index over ``sf_dir``'s embeddings. With ``split``,
+    the index is built over the HISTORY slice only (vec_id < split) as
+    its own family — the immutable history artifact q174's incremental
+    encode serves from. The build writes ``codes`` last, so its
+    ``_SUCCESS`` marks a finished build."""
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(emb_path)
-    fp = f"{st.st_size}_{int(st.st_mtime)}"
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))), ".index_cache"),
-    )
-    sf_root = os.path.join(root, os.path.basename(os.path.normpath(sf_dir)))
-    prefix = "ivfpq_v" if split is None else f"ivfpq_hist{split}_v"
-    leaf = f"{prefix}{SIM.INDEX_FORMAT_VERSION}_{fp}"
-    index_dir = os.path.join(sf_root, leaf)
-    _coarse_dir, _rcb_dir, codes_dir = SIM.ivfpq_index_paths(index_dir)
-    if not os.path.exists(os.path.join(codes_dir, "_SUCCESS")):
-        # evict stale fingerprints (a regenerated corpus or bumped
-        # format version) so the cache holds one live artifact per
-        # (sf, split); eviction is scoped to this exact family — the
-        # BPE cache and other split keys share sf_root
-        import shutil
-
-        from whale_sightings_spark.plans.store_utils import reap_dead_staging
-
-        reap_dead_staging(sf_root)  # dead builders' .tmp leftovers
-        if os.path.isdir(sf_root):
-            for d in os.listdir(sf_root):
-                if d != leaf and d.startswith(prefix) and ".tmp." not in d:
-                    shutil.rmtree(os.path.join(sf_root, d), ignore_errors=True)
+    def write(staging: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         if split is not None:
             emb = emb.filter(F.col("vec_id") < split)
-        # build into a pid-unique staging dir and publish via atomic
-        # rename: two processes racing on the same missing artifact
-        # each build privately; the loser discards (training is
-        # deterministic, the artifacts are identical)
-        staging = f"{index_dir}.tmp.{os.getpid()}"
-        try:
-            SIM.build_ivfpq_index(emb, staging)
-        except BaseException:
-            # a failed build must not leak a near-full-size staging dir
-            # under the cache root (the eviction sweep skips .tmp.)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        # clear a TORN remain (dir present, marker absent) or the
-        # rename fails and the heal silently no-ops; a racing builder
-        # that completed meanwhile re-shows its marker and wins
-        if not os.path.exists(os.path.join(codes_dir, "_SUCCESS")):
-            shutil.rmtree(index_dir, ignore_errors=True)
-        try:
-            os.rename(staging, index_dir)
-        except OSError:
-            # racing builder completed -> fine; a non-race rename
-            # failure must re-raise as itself, not surface later as
-            # the reader's path-not-found (ADVICE r10)
-            shutil.rmtree(staging, ignore_errors=True)
-            if not os.path.exists(os.path.join(codes_dir, "_SUCCESS")):
-                raise
-    return index_dir
+        SIM.build_ivfpq_index(emb, staging)
+
+    return artifact_dir(
+        sf_dir,
+        "embeddings.parquet",
+        "ivfpq" if split is None else f"ivfpq_hist{split}",
+        SIM.INDEX_FORMAT_VERSION,
+        lambda d: SIM.ivfpq_index_paths(d)[2],
+        write,
+    )
 
 
 @register(

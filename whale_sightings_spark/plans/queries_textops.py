@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from whale_sightings_spark.functions import text as TX
 from whale_sightings_spark.plans.queries import register
+from whale_sightings_spark.plans.store_utils import artifact_dir
 from whale_sightings_spark.schemas import load_table
 
 
@@ -1401,66 +1402,24 @@ from whale_sightings_spark.operators import bpe as BPE  # noqa: E402
 def _bpe_artifact_dir(
     spark: SparkSession, sf_dir: str, where: str = "", tag: str = "full"
 ) -> str:
-    """Build-if-absent cache of the trained-BPE artifact for
-    ``sf_dir`` — the `_ivfpq_index_dir` convention applied to the
-    tokenizer (the other artifact a real pipeline ships). Keyed by the
-    documents file's (size, mtime) fingerprint, the artifact format
-    version, and the training-corpus ``tag`` (q188's history split
-    trains its own artifact), so a regenerated corpus or changed
-    training constants can never serve stale merges. Eviction is
-    scoped to the ``bpe_`` prefix — the IVF-PQ cache shares sf_root."""
-    import os
+    """The trained-BPE store over ``sf_dir``'s documents, optionally
+    filtered by ``where``; the training-corpus ``tag`` names its own
+    family (q188's history split trains its own artifact). The build
+    writes ``merges`` last, so its ``_SUCCESS`` marks a finished
+    build."""
 
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(doc_path)
-    fp = f"{st.st_size}_{int(st.st_mtime)}"
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))), ".index_cache"),
-    )
-    sf_root = os.path.join(root, os.path.basename(os.path.normpath(sf_dir)))
-    leaf = f"bpe_{tag}_v{BPE.BPE_FORMAT_VERSION}_{fp}"
-    artifact_dir = os.path.join(sf_root, leaf)
-    _syms_dir, merges_dir = BPE.bpe_artifact_paths(artifact_dir)
-    if not os.path.exists(os.path.join(merges_dir, "_SUCCESS")):
-        import shutil
-
-        from whale_sightings_spark.plans.store_utils import reap_dead_staging
-
-        reap_dead_staging(sf_root)  # dead builders' .tmp leftovers
-        if os.path.isdir(sf_root):
-            for d in os.listdir(sf_root):
-                if d != leaf and d.startswith(f"bpe_{tag}_") and ".tmp." not in d:
-                    shutil.rmtree(os.path.join(sf_root, d), ignore_errors=True)
+    def write(staging: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        if where:
-            docs = docs.filter(where)
-        # pid-unique staging + atomic-rename publish (the
-        # _ivfpq_index_dir racing-builders contract)
-        staging = f"{artifact_dir}.tmp.{os.getpid()}"
-        try:
-            BPE.build_bpe_artifact(docs, staging)
-        except BaseException:
-            # a failed build must not leak a near-full-size staging dir
-            # under the cache root (the eviction sweep skips .tmp.)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        # clear a TORN remain (dir present, marker absent) or the
-        # rename fails and the heal silently no-ops; a racing builder
-        # that completed meanwhile re-shows its marker and wins
-        if not os.path.exists(os.path.join(merges_dir, "_SUCCESS")):
-            shutil.rmtree(artifact_dir, ignore_errors=True)
-        try:
-            os.rename(staging, artifact_dir)
-        except OSError:
-            # racing builder completed -> fine; a non-race rename
-            # failure must re-raise as itself, not surface later as
-            # the reader's path-not-found (ADVICE r10)
-            shutil.rmtree(staging, ignore_errors=True)
-            if not os.path.exists(os.path.join(merges_dir, "_SUCCESS")):
-                raise
-    return artifact_dir
+        BPE.build_bpe_artifact(docs.filter(where) if where else docs, staging)
+
+    return artifact_dir(
+        sf_dir,
+        "documents.parquet",
+        f"bpe_{tag}",
+        BPE.BPE_FORMAT_VERSION,
+        lambda d: BPE.bpe_artifact_paths(d)[1],
+        write,
+    )
 
 
 @register("q176_bpe_merge_table", BPE.bpe_merge_table_sql())

@@ -1,81 +1,25 @@
 """Build-if-absent cache of the persisted shingle inverted index
-(`operators/shingles.py`) — the `_nb_artifact_dir` / `_bpe_artifact_dir`
-convention, shared by the three plan modules that serve from it
-(queries_curation, queries_textops, queries_llm)."""
+(`operators/shingles.py`), shared by the three plan modules that serve
+from it (queries_curation, queries_textops, queries_llm)."""
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import SparkSession
 
 from whale_sightings_spark.operators import shingles as SH
+from whale_sightings_spark.plans.store_utils import artifact_dir
 from whale_sightings_spark.schemas import load_table
 
 
 def shingle_artifact_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Fingerprint-keyed (documents file size+mtime, format version)
-    artifact dir; eviction scoped to the ``shingle_`` prefix; racing
-    builders resolved by pid-unique staging + atomic rename."""
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(doc_path)
-    fp = f"{st.st_size}_{int(st.st_mtime)}"
-    root = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__)))),
-            ".index_cache",
+    """The shingle store over ``sf_dir``'s documents; the build writes
+    ``src5`` last, so its ``_SUCCESS`` marks a finished build."""
+    return artifact_dir(
+        sf_dir,
+        "documents.parquet",
+        "shingle",
+        SH.SHINGLE_FORMAT_VERSION,
+        lambda d: SH.shingle_artifact_paths(d)[3],
+        lambda staging: SH.build_shingle_artifact(
+            load_table(spark, sf_dir, "documents"), staging
         ),
     )
-    sf_root = os.path.join(root, os.path.basename(os.path.normpath(sf_dir)))
-    leaf = f"shingle_v{SH.SHINGLE_FORMAT_VERSION}_{fp}"
-    artifact_dir = os.path.join(sf_root, leaf)
-    # the build writes src5 LAST — its _SUCCESS is the completeness
-    # marker; a store carrying the COMPACTING sentinel (a crashed
-    # compaction) is treated as absent and rebuilt (v2)
-    _, _, _, src5_dir = SH.shingle_artifact_paths(artifact_dir)
-
-    def _incomplete() -> bool:
-        return not os.path.exists(
-            os.path.join(src5_dir, "_SUCCESS")
-        ) or os.path.exists(SH.shingle_compacting_sentinel(artifact_dir))
-
-    if _incomplete():
-        from whale_sightings_spark.plans.store_utils import reap_dead_staging
-
-        reap_dead_staging(sf_root)  # dead builders' .tmp leftovers
-        if os.path.isdir(sf_root):
-            for d in os.listdir(sf_root):
-                if (
-                    d != leaf
-                    and d.startswith("shingle_")
-                    and ".tmp." not in d
-                ):
-                    shutil.rmtree(os.path.join(sf_root, d), ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents")
-        staging = f"{artifact_dir}.tmp.{os.getpid()}"
-        try:
-            SH.build_shingle_artifact(docs, staging)
-        except BaseException:
-            # a failed build must not leak a near-full-size staging dir
-            # under the cache root (the eviction sweep skips .tmp.)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        # a TORN remain of a previous build (dir present, marker
-        # absent) or a crashed-compaction remain (sentinel present)
-        # would make the rename fail and the heal silently no-op —
-        # clear it first; if a racing builder completed in the
-        # meantime its marker reappears and we just lose our staging
-        if _incomplete():
-            shutil.rmtree(artifact_dir, ignore_errors=True)
-        try:
-            os.rename(staging, artifact_dir)
-        except OSError:
-            # racing builder completed -> fine; a non-race rename
-            # failure must re-raise as itself, not surface later as
-            # the reader's path-not-found (ADVICE r10)
-            shutil.rmtree(staging, ignore_errors=True)
-            if _incomplete():
-                raise
-    return artifact_dir

@@ -1,18 +1,47 @@
-"""Shared maintenance for the build-if-absent artifact caches under
+"""The one lifecycle of the persisted artifact stores under
 `.index_cache/` (IVF-PQ index, BPE tokenizer, NB model, shingle index,
-cluster labels+pairs, n-gram LM).
+cluster labels+pairs and their derived tables, n-gram LM).
 
-Every builder stages into `<artifact>.tmp.<pid>` and publishes via
-atomic rename; an in-process build failure rmtree's its own staging,
-but a hard kill (OOM, SIGKILL) still leaves a near-full-size partial
-store behind — and the eviction sweeps deliberately skip `.tmp.` dirs
-so they never race a LIVE builder. `reap_dead_staging` closes that
-leak: a `.tmp.<pid>` dir whose pid no longer exists has no builder to
-race, so it is garbage by construction and safe to remove."""
+Layout: ``<root>/<sf name>/<family>_v<version>_<sig>/``, where
+``<root>`` is ``SPARK_GRAFT_INDEX_DIR`` (default: the repo's
+``.index_cache``) and ``<sig>`` is the :func:`stat_sig` of the source
+table file, so a rewritten corpus re-keys every store built from it.
+
+Crash contract:
+
+- A store is COMPLETE when its marker table's ``_SUCCESS`` exists and
+  no ``COMPACTING`` sentinel does. Anything else is rebuilt.
+- A build writes into ``<final>.tmp.<pid>`` and publishes by one atomic
+  rename. A failed build removes its staging dir; a hard kill leaves it
+  for :func:`reap_dead_staging`, which removes only dead pids' dirs, so
+  a live builder is never raced.
+- A torn remain at ``<final>`` is cleared before the rename. When the
+  rename fails, a racing builder's complete store wins; any other
+  failure re-raises.
+- Compaction writes the sentinel first and removes it only after its
+  last :func:`swap_table`. A compaction that dies anywhere in between
+  leaves the sentinel, and the next read rebuilds.
+- Eviction on rebuild is scoped to ``<family>_v``, so one family never
+  deletes another whose name it prefixes (``ivfpq`` vs
+  ``ivfpq_hist<split>``), and never touches ``.tmp.`` staging.
+- The warm path is ``os.stat`` calls only: no Spark job, no mkdir.
+"""
 from __future__ import annotations
 
+import glob
 import os
 import shutil
+
+
+def stat_sig(path: str) -> str | None:
+    """``mtime_ns_ino_size`` of ``path``, or None if it does not exist.
+    Nanosecond mtime plus inode catches a same-size rewrite within one
+    second, including an ``os.replace`` onto the path."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return f"{st.st_mtime_ns}_{st.st_ino}_{st.st_size}"
 
 
 def _pid_alive(pid: int) -> bool:
@@ -27,8 +56,8 @@ def _pid_alive(pid: int) -> bool:
 
 def reap_dead_staging(sf_root: str) -> list[str]:
     """Remove `*.tmp.<pid>` dirs under ``sf_root`` whose builder pid is
-    dead. Called from every store's eviction sweep; returns the reaped
-    names (for tests). Live pids — including our own — are left alone."""
+    dead; returns the reaped names. Live pids, ours included, are left
+    alone."""
     reaped: list[str] = []
     if not os.path.isdir(sf_root):
         return reaped
@@ -43,51 +72,118 @@ def reap_dead_staging(sf_root: str) -> list[str]:
     return reaped
 
 
-# ---------------------------------------------------------------------------
-# Memoized artifact-table reads (round 11, VERDICT r10 #5): six stores
-# x ~260 queries each re-ran `spark.read.parquet` per invocation, and
-# the DataFrame construction itself is the fixed overhead — schema
-# inference + partition-directory discovery cost ~90 ms on a bucket-
-# partitioned table with no explicit schema, ~10 ms with one. A
-# published artifact table is immutable between publishes, and EVERY
-# mutation path rewrites its `_SUCCESS` marker (build, streaming
-# append, compaction swap), so the marker's stat signature is a sound
-# re-key: the memo serves the same DataFrame object while the marker
-# is unchanged and re-reads the moment it moves (or vanishes — an
-# invalidated derived table stats to nothing and misses).
-# ---------------------------------------------------------------------------
-
-def marker_sig(marker_path: str) -> str | None:
-    """Stat signature of a table's ``_SUCCESS`` marker as a stable
-    string (mtime_ns/ino/size), or None if it does not exist. Every
-    mutation path of a published artifact rewrites its marker (build,
-    streaming append, compaction swap), so this is the table's
-    generation id — used both by the DataFrame memo below and by the
-    derived-table ``_GEN`` freshness gate in ``cluster_store``."""
+def publish(final: str, write, complete) -> None:
+    """Build ``final`` via ``write(staging)`` and publish it by atomic
+    rename; ``complete()`` tells whether ``final`` is a usable store."""
+    staging = f"{final}.tmp.{os.getpid()}"
     try:
-        st = os.stat(marker_path)
+        write(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if not complete():
+        shutil.rmtree(final, ignore_errors=True)
+    try:
+        os.rename(staging, final)
     except OSError:
-        return None
-    return f"{st.st_mtime_ns}_{st.st_ino}_{st.st_size}"
+        shutil.rmtree(staging, ignore_errors=True)
+        if not complete():
+            raise
 
+
+def compacting_sentinel(artifact_dir: str) -> str:
+    return os.path.join(artifact_dir, "COMPACTING")
+
+
+def artifact_dir(
+    sf_dir: str, source_file: str, family: str, version, marker, write
+) -> str:
+    """Path of the complete ``family`` store built from
+    ``sf_dir/source_file``, building it first if needed.
+    ``marker(dir)`` is the table whose ``_SUCCESS`` marks a finished
+    build; ``write(staging)`` builds the whole store into ``staging``."""
+    root = os.environ.get(
+        "SPARK_GRAFT_INDEX_DIR",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.dirname(
+                os.path.abspath(__file__)))),
+            ".index_cache",
+        ),
+    )
+    sf_root = os.path.join(root, os.path.basename(os.path.normpath(sf_dir)))
+    source = os.path.join(sf_dir, source_file)
+    sig = stat_sig(source)
+    if sig is None:
+        raise FileNotFoundError(source)
+    leaf = f"{family}_v{version}_{sig}"
+    final = os.path.join(sf_root, leaf)
+
+    def complete() -> bool:
+        return os.path.exists(
+            os.path.join(marker(final), "_SUCCESS")
+        ) and not os.path.exists(compacting_sentinel(final))
+
+    if not complete():
+        reap_dead_staging(sf_root)
+        if os.path.isdir(sf_root):
+            for d in os.listdir(sf_root):
+                if d != leaf and d.startswith(f"{family}_v") and ".tmp." not in d:
+                    shutil.rmtree(os.path.join(sf_root, d), ignore_errors=True)
+        publish(final, write, complete)
+    return final
+
+
+def ingest_batch_dirs(artifact_dir: str) -> list[str]:
+    """Published per-batch ingest dirs (``ingest/b<id>``), oldest
+    first; ``.tmp.`` staging of a torn batch is never listed."""
+    root = os.path.join(artifact_dir, "ingest")
+    if not os.path.isdir(root):
+        return []
+    return [
+        os.path.join(root, d)
+        for d in sorted(os.listdir(root))
+        if d.startswith("b") and d[1:].isdigit()
+    ]
+
+
+def parquet_files(*roots: str) -> int:
+    return sum(
+        len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
+        for d in roots
+    )
+
+
+def swap_table(live: str, write) -> None:
+    """Rewrite table dir ``live`` via ``write(staging)``, then swap the
+    staging dir in. Not atomic: callers hold the compaction sentinel."""
+    staging = live + "__compact"
+    write(staging)
+    old = live + "__old"
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+    os.rename(live, old)
+    os.rename(staging, live)
+    shutil.rmtree(old)
+
+
+# ---------------------------------------------------------------------------
+# Memoized artifact-table reads: a published table is immutable between
+# publishes, and every mutation path (build, streaming append,
+# compaction swap) rewrites its `_SUCCESS` marker, so the marker's
+# stat signature keys the memo. DataFrame construction (schema
+# inference, partition discovery) is the fixed per-query cost it saves.
+# ---------------------------------------------------------------------------
 
 _DF_MEMO: dict = {}
 
 
 def read_artifact_table(spark, path: str, schema=None):
     """`spark.read[.schema(schema)].parquet(path)` memoized on the
-    table's `_SUCCESS` stat signature (mtime_ns, ino, size). Tables
-    without a marker (mid-build, foreign dirs) are read uncached. The
-    owning session rides in the memo value, so a recycled `id()` after
-    session teardown can never serve another session's plan."""
-    import os
-
-    marker = os.path.join(path, "_SUCCESS")
-    try:
-        st = os.stat(marker)
-        sig = (st.st_mtime_ns, st.st_ino, st.st_size)
-    except OSError:
-        sig = None
+    table's `_SUCCESS` :func:`stat_sig`. Tables without a marker
+    (mid-build, foreign dirs) are read uncached. The owning session
+    rides in the memo value, so a recycled `id()` after session
+    teardown can never serve another session's plan."""
+    sig = stat_sig(os.path.join(path, "_SUCCESS"))
     # the declared schema joins the key: two readers of one path with
     # different schemas (or inferred vs declared) must not share a plan
     key = (os.path.abspath(path), str(schema))

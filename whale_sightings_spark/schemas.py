@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from whale_sightings_spark.plans.store_utils import stat_sig
+
 # ---------------------------------------------------------------------------
 # Occurrence pipeline schemas
 # ---------------------------------------------------------------------------
@@ -166,19 +168,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: the `_fan_out` directory walk are all driver-side fixed overhead
 #: (~40-90 ms per load_table call) repeated per query. The memo is
 #: PLAN-level only — the returned DataFrame is lazy and recomputes from
-#: the parquet input on every action — and is keyed on the file's stat
-#: signature (mtime_ns, ino, size) plus the owning session, exactly
-#: like `store_utils.read_artifact_table`, so a rewritten table or a
-#: new session misses.
+#: the parquet input on every action — and is keyed on the file's
+#: `stat_sig` plus the owning session, exactly like
+#: `store_utils.read_artifact_table`, so a rewritten table or a new
+#: session misses.
 _TABLE_MEMO: dict = {}
-
-
-def _path_sig(path: str):
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (st.st_mtime_ns, st.st_ino, st.st_size)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -190,7 +184,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     applies, so oracle comparisons agree.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    sig = _path_sig(path)
+    sig = stat_sig(path)
     key = os.path.abspath(path)
     if sig is not None:
         hit = _TABLE_MEMO.get(key)

@@ -988,8 +988,8 @@ def streaming_cluster_ingest(
         # (ADVICE r10). Idempotent and crash-safe: a replayed batch
         # re-deletes, and the build-if-absent reader heals. Only
         # PUBLISHED derived_<name> dirs are deleted — a live builder's
-        # derived_*.tmp.<pid> staging is never raced (the repo-wide
-        # .tmp. convention, ADVICE r11); dead builders' leftovers go
+        # derived_*.tmp.<pid> staging is never raced (`store_utils`
+        # crash contract); dead builders' leftovers go
         # through the pid-liveness reap, and a live builder that
         # publishes pre-append results AFTER this sweep is caught by
         # the reader's _GEN generation gate, not by deletion order.
