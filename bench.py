@@ -1,14 +1,27 @@
 """Benchmark harness: run the registered query surface at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
+$SPARK_GRAFT_SF_DIR (default ``schemas.DEFAULT_SF_DIR``) on local[N], N
+from ``session.host_cpus``.
 
 Each query is forced through full execution with the no-op sink
 (write.format('noop')) so timings include the whole plan, not just
-planning.
+planning. A query is timed once cold and twice more (steady = the
+faster rerun); the Spark jobs its cold invocation schedules are
+counted through its job group.
+
+    python bench.py                 # every query
+    python bench.py --only q01_filter_project q36_tfidf_topk
+    python bench.py --top 10        # slowest steady queries of the
+                                    # last full run (bench_detail.json)
+
+A full run writes bench_detail.json and prints two JSON lines: the
+per-query map, then the totals line, which stays last. An --only or
+--top run prints one JSON map {query: {cold, steady, jobs}} and leaves
+bench_detail.json untouched. Every run takes the same warm-up first.
 """
 
 from __future__ import annotations
 
+import argparse
 import gc
 import json
 import os
@@ -18,9 +31,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from whale_sightings_spark.plans.queries import queries  # noqa: E402
-from whale_sightings_spark.session import get_spark  # noqa: E402
+from whale_sightings_spark.schemas import DEFAULT_SF_DIR  # noqa: E402
+from whale_sightings_spark.session import get_spark, host_cpus  # noqa: E402
 
 QUERIES = queries()
+DETAIL = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_detail.json")
 
 
 #: refuse to start while the 1-min loadavg exceeds this — a committed
@@ -28,15 +43,15 @@ QUERIES = queries()
 #: reads 1.5-2x inflated on spike queries and poisons round-over-round
 #: comparison. Spin-wait (bounded) instead of failing so cron/driver
 #: invocations self-heal; SPARK_GRAFT_BENCH_NO_GATE=1 skips the gate.
-LOADAVG_GATE = float(os.environ.get("SPARK_GRAFT_BENCH_LOADAVG_GATE", "2.0"))
-LOADAVG_WAIT_S = int(os.environ.get("SPARK_GRAFT_BENCH_LOADAVG_WAIT", "600"))
+LOADAVG_GATE = 2.0
+LOADAVG_WAIT_S = 600
 
 
 #: mid-run sentinel: re-check loadavg every N queries and flag the
 #: artifact if contention arrives AFTER the start gate passed (the r7
 #: artifact passed a 1-min gate while the 5-min average was 8.25 and
 #: steal returned mid-run, inverting steady vs cold on q51)
-SENTINEL_EVERY = int(os.environ.get("SPARK_GRAFT_BENCH_SENTINEL_EVERY", "25"))
+SENTINEL_EVERY = 25
 
 
 def _gate_load() -> float:
@@ -52,9 +67,7 @@ def _gate_load() -> float:
 #: numbers ~30% above the same round's fresh-boot capture. The
 #: max(1m,5m) gate above catches ACTIVE contention; this one waits out
 #: the decay tail of our own finished work.
-COOLDOWN_LOADAVG5 = float(
-    os.environ.get("SPARK_GRAFT_BENCH_COOLDOWN_LOADAVG5", "1.0")
-)
+COOLDOWN_LOADAVG5 = 1.0
 
 
 def _reap_orphan_jvms() -> list[int]:
@@ -123,23 +136,38 @@ def _wait_for_quiet_host() -> None:
         time.sleep(15)
 
 
-def main() -> None:
-    _wait_for_quiet_host()
-    loadavg_start = os.getloadavg()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="whale_sightings_spark-bench", master=f"local[{cpus}]")
+def _args(argv):
+    p = argparse.ArgumentParser(description="Time registered queries through the noop sink.")
+    pick = p.add_mutually_exclusive_group()
+    pick.add_argument("--only", nargs="+", metavar="QUERY", help="time only these queries")
+    pick.add_argument("--top", type=int, metavar="N",
+                      help="time the N slowest steady queries of the last full run")
+    args = p.parse_args(argv)
+    unknown = sorted(set(args.only or ()) - set(QUERIES))
+    if unknown:
+        p.error(f"unknown queries: {' '.join(unknown)}")
+    return args
 
+
+def _top(n: int) -> list[str]:
+    with open(DETAIL) as f:
+        steady = json.load(f)["steady_queries"]
+    return [k for k, _ in sorted(steady.items(), key=lambda kv: -kv[1]) if k in QUERIES][:n]
+
+
+def _warm_up(spark, sf_dir: str, cpus: int) -> float:
+    """Warm the JVM, the Python workers and every persisted artifact;
+    returns the seconds the artifact builds took."""
     # warm the JVM + parquet footers once so per-query numbers measure the
     # plans, not first-touch JIT
     QUERIES["q01_filter_project"](spark, sf_dir).write.format("noop").mode("overwrite").save()
     # warm the Python worker pool too (one trivial Arrow round trip per
     # core) so the first mapInPandas query isn't billed ~10 s of
     # interpreter startup that on a real cluster is paid once per executor
-    spark.range(int(cpus)).repartition(int(cpus)).mapInPandas(
+    spark.range(cpus).repartition(cpus).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
-    # build-if-absent the six persisted artifacts BEFORE the timing
+    # build-if-absent the persisted artifacts BEFORE the timing
     # loop: they are one-time per corpus fingerprint (a long-running
     # cluster has them built), and letting the first consumer query
     # absorb a build would bill minutes of one-time setup to one
@@ -208,22 +236,33 @@ def main() -> None:
         _embed_hist_pairs,
     ):
         build(spark, sf_dir)
-    artifact_warm_s = round(time.perf_counter() - t_art, 4)
+    return round(time.perf_counter() - t_art, 4)
 
+
+def _time_queries(spark, sf_dir: str, names: list[str]):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     timings: dict[str, float] = {}
     steady: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     errors: dict[str, str] = {}
     loadavg_series: list[list[float]] = []
-    for i, (name, fn) in enumerate(sorted(QUERIES.items())):
+    for i, name in enumerate(names):
+        fn = QUERIES[name]
         if i % SENTINEL_EVERY == 0:
             # mid-run contention record: loadavg here includes our own
-            # local[32] work, so the series is context (read alongside
-            # the inversion detector below), not a hard gate
+            # work, so the series is context (read alongside the
+            # inversion detector in main), not a hard gate
             loadavg_series.append([round(x, 2) for x in os.getloadavg()])
+        # every job the cold invocation schedules (build-time
+        # checkpoints and collects as well as the noop sink) lands in
+        # this group; the reruns get their own
+        sc.setJobGroup(f"cold-{name}", name)
         start = time.perf_counter()
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             timings[name] = round(time.perf_counter() - start, 4)
+            sc.setJobGroup(f"steady-{name}", name)
             # re-executions of the identical plan: codegen/JIT already
             # compiled, so this is the per-query cost a long-running
             # cluster actually pays. Reported alongside the cold number;
@@ -239,6 +278,9 @@ def main() -> None:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 reps.append(time.perf_counter() - start)
             steady[name] = round(min(reps), 4)
+            # read after the reruns: the status store is fed by the
+            # listener bus, which may trail the action's return
+            jobs[name] = len(tracker.getJobIdsForGroup(f"cold-{name}"))
         except Exception as exc:  # one bad query must not kill the run
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
         # iterative operators persist intermediates (edges, ranged
@@ -252,6 +294,31 @@ def main() -> None:
         # the GC bill (observed as minutes-late queries running 3-5x
         # their isolated time)
         gc.collect()
+    return timings, steady, jobs, errors, loadavg_series
+
+
+def main(argv=None) -> None:
+    args = _args(argv)
+    names = args.only or (_top(args.top) if args.top is not None else sorted(QUERIES))
+    _wait_for_quiet_host()
+    loadavg_start = os.getloadavg()
+    sf_dir = DEFAULT_SF_DIR
+    cpus = host_cpus()
+    spark = get_spark(app_name="whale_sightings_spark-bench", master=f"local[{cpus}]")
+    artifact_warm_s = _warm_up(spark, sf_dir, cpus)
+    timings, steady, jobs, errors, loadavg_series = _time_queries(spark, sf_dir, names)
+    if args.only or args.top is not None:
+        print(json.dumps(
+            {
+                n: {"cold": timings.get(n), "steady": steady.get(n), "jobs": jobs.get(n)}
+                | ({"error": errors[n]} if n in errors else {})
+                for n in names
+            },
+            indent=1,
+            sort_keys=True,
+        ))
+        spark.stop()
+        return
 
     # contention verdict: steady is the MIN of two reruns of an
     # already-JITed identical plan, so steady > cold is physically
@@ -295,8 +362,7 @@ def main() -> None:
         payload["errors"] = dict(sorted(errors.items())[:3])
     if contended:
         payload["contended"] = True
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "bench_detail.json"), "w") as f:
+    with open(DETAIL, "w") as f:
         json.dump(
             {
                 **payload,
@@ -311,6 +377,8 @@ def main() -> None:
                 "steady_gt_cold": inversions,
                 "queries": timings,
                 "steady_queries": steady,
+                # Spark jobs scheduled by each query's cold invocation
+                "jobs": jobs,
                 "errors": errors,
             },
             f,

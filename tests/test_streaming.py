@@ -1547,6 +1547,53 @@ def test_shingle_torn_ingest_batch_is_invisible_and_replay_regenerates(
     )
 
 
+def test_shingle_ingest_batch_failing_mid_write_leaves_no_staging(
+    spark, sf_dir, tmp_path_factory, monkeypatch
+):
+    """A shingle-ingest batch that raises after its postings table is
+    staged removes its staging dir on the way out: no ``.tmp.`` entry
+    is left under ``ingest/`` and the seen-set is unchanged."""
+    import os
+
+    from whale_sightings_spark.operators import shingles as SH
+    from whale_sightings_spark.streaming.events import (
+        streaming_shingle_index_ingest,
+    )
+
+    split = 400  # sf0.001 holds doc_ids 0..499
+    base = tmp_path_factory.mktemp("shingle_fail")
+    docs = load_table(spark, sf_dir, "documents")
+    art = str(base / "index")
+    SH.build_shingle_artifact(docs.filter(F.col("doc_id") < split), art)
+    ids_before = sorted(r[0] for r in SH.stored_doc_ids(spark, art).collect())
+    docs_dir = str(base / "deltas")
+    docs.filter(F.col("doc_id") >= split).coalesce(1).write.parquet(docs_dir)
+
+    root = SH.shingle_ingest_root(art)
+    staged = []
+    real = SH._distinct_postings
+
+    def fail_after_postings(batch, n):
+        # the width-5 pass runs after postings, df and doc_stats are
+        # written into the batch's staging dir
+        if n == SH.SRC_SHINGLE_N:
+            staged.extend(
+                d for d in os.listdir(root)
+                if os.path.isdir(os.path.join(root, d, "postings"))
+            )
+            raise RuntimeError("injected mid-batch failure")
+        return real(batch, n)
+
+    monkeypatch.setattr(SH, "_distinct_postings", fail_after_postings)
+    with pytest.raises(Exception):
+        streaming_shingle_index_ingest(spark, docs_dir, art, str(base / "ck"))
+    assert staged, "the failure did not hit after postings were staged"
+    assert [d for d in os.listdir(root) if ".tmp." in d] == []
+    assert sorted(
+        r[0] for r in SH.stored_doc_ids(spark, art).collect()
+    ) == ids_before
+
+
 def test_shingle_crashed_compaction_reads_as_absent_and_rebuilds(
     spark, tmp_path, monkeypatch
 ):

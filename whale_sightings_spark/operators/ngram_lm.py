@@ -70,6 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from whale_sightings_spark.functions.text import tokens
+from whale_sightings_spark.plans.store_utils import read_store_table
 
 #: artifact layout version — bump to invalidate caches on format change.
 #: v2 (round 9): doc_ids manifest + atomic per-batch ingest dirs +
@@ -392,55 +393,33 @@ def build_lm_artifact(docs: DataFrame, artifact_dir: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _read_table(spark, artifact_dir: str, key: str, schema) -> DataFrame:
-    """Pinned-schema read of a store table: the base dir unioned with
-    every PUBLISHED ingest batch dir (v2 — per-batch atomic sub-stores;
-    a ``.tmp.`` torn batch never appears here). Each root is scanned
-    independently so bucket partition pruning survives the union."""
-    import os
-
-    from whale_sightings_spark.plans.store_utils import (
-        ingest_batch_dirs,
-        read_artifact_table,
-    )
-
-    base = read_artifact_table(
-        spark, lm_artifact_paths(artifact_dir)[key], schema
-    )
-    for b in ingest_batch_dirs(artifact_dir):
-        t = os.path.join(b, key)
-        if os.path.isdir(t):
-            base = base.unionByName(read_artifact_table(spark, t, schema))
-    return base
-
-
 def stored_doc_ids(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(doc_id) — the ingested-document manifest (base + every
     published batch), the O(documents) seen-set the streaming ingest
     anti-joins against."""
-    return _read_table(spark, artifact_dir, "doc_ids", _DOC_IDS_SCHEMA)
+    return read_store_table(spark, artifact_dir, "doc_ids", _DOC_IDS_SCHEMA)
 
 
 def stored_doc_len(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(doc_id, source, lang, len) per-doc total token counts (base +
     published batches; rows are per-doc, so the union never needs a
     re-aggregate)."""
-    return _read_table(spark, artifact_dir, "doc_len", _DOC_LEN_SCHEMA)
+    return read_store_table(spark, artifact_dir, "doc_len", _DOC_LEN_SCHEMA)
 
 
 def stored_doc_uni(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(doc_id, source, tok, n, bucket) per-doc token counts."""
-    return _read_table(spark, artifact_dir, "doc_uni", _DOC_UNI_SCHEMA)
+    return read_store_table(spark, artifact_dir, "doc_uni", _DOC_UNI_SCHEMA)
 
 
 def stored_doc_big(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(doc_id, w1, w2, n, bucket) per-doc bigram counts."""
-    return _read_table(spark, artifact_dir, "doc_big", _DOC_BIG_SCHEMA)
+    return read_store_table(spark, artifact_dir, "doc_big", _DOC_BIG_SCHEMA)
 
 
 def stored_doc_tri(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(doc_id, w1, w2, w3, n, bucket) per-doc trigram counts."""
-    return _read_table(spark, artifact_dir, "doc_tri", _DOC_TRI_SCHEMA)
+    return read_store_table(spark, artifact_dir, "doc_tri", _DOC_TRI_SCHEMA)
 
 
 #: memoized term -> bucket-id resolution. The bucket of a LITERAL query
@@ -499,7 +478,7 @@ def stored_term_postings(
 def stored_uni(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(tok, n) corpus unigram counts (partials summed at read)."""
     return (
-        _read_table(spark, artifact_dir, "uni", _UNI_SCHEMA)
+        read_store_table(spark, artifact_dir, "uni", _UNI_SCHEMA)
         .groupBy("tok")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
@@ -508,7 +487,7 @@ def stored_uni(spark: SparkSession, artifact_dir: str) -> DataFrame:
 def stored_uni_train(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(tok, n) train-split unigram counts (partials summed at read)."""
     return (
-        _read_table(spark, artifact_dir, "uni_train", _UNI_SCHEMA)
+        read_store_table(spark, artifact_dir, "uni_train", _UNI_SCHEMA)
         .groupBy("tok")
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
@@ -522,7 +501,7 @@ def stored_pairs(spark: SparkSession, artifact_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     pc = (
-        _read_table(spark, artifact_dir, "pairs", _PAIRS_SCHEMA)
+        read_store_table(spark, artifact_dir, "pairs", _PAIRS_SCHEMA)
         .groupBy("w1", "w2")
         .agg(F.sum("pair_n").cast("bigint").alias("pair_n"))
     )
@@ -534,7 +513,7 @@ def stored_pairs(spark: SparkSession, artifact_dir: str) -> DataFrame:
 def stored_pairs_train(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(w1, w2, c12) train-split bigram counts (partials summed)."""
     return (
-        _read_table(spark, artifact_dir, "pairs_train", _PAIRS_TRAIN_SCHEMA)
+        read_store_table(spark, artifact_dir, "pairs_train", _PAIRS_TRAIN_SCHEMA)
         .groupBy("w1", "w2")
         .agg(F.sum("c12").cast("bigint").alias("c12"))
     )
@@ -543,7 +522,7 @@ def stored_pairs_train(spark: SparkSession, artifact_dir: str) -> DataFrame:
 def stored_tri_train(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(w1, w2, w3, c123) train-split trigram counts (partials summed)."""
     return (
-        _read_table(spark, artifact_dir, "tri_train", _TRI_SCHEMA)
+        read_store_table(spark, artifact_dir, "tri_train", _TRI_SCHEMA)
         .groupBy("w1", "w2", "w3")
         .agg(F.sum("c123").cast("bigint").alias("c123"))
     )
@@ -690,7 +669,7 @@ def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
         ("doc_big", _DOC_BIG_SCHEMA),
         ("doc_tri", _DOC_TRI_SCHEMA),
     ):
-        df = _read_table(spark, artifact_dir, key, schema).localCheckpoint()
+        df = read_store_table(spark, artifact_dir, key, schema).localCheckpoint()
         swap_table(
             paths[key],
             lambda staging, df=df: (

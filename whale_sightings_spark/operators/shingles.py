@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from whale_sightings_spark.functions.text import shingles_from_tokens, tokens
+from whale_sightings_spark.plans.store_utils import read_store_table
 
 #: artifact layout version — bump to invalidate caches on format change.
 #: v2 (round 9): doc_ids manifest + atomic per-batch ingest sub-stores
@@ -150,27 +151,6 @@ def _table_path(artifact_dir: str, key: str) -> str:
     }[key]
 
 
-def _read_table(spark, artifact_dir: str, key: str, schema) -> DataFrame:
-    """Pinned-schema read of a store table: the base dir unioned with
-    every PUBLISHED ingest batch dir (v2 — atomic per-batch
-    sub-stores; a torn ``.tmp.`` batch never appears here). Each root
-    scans independently so bucket partition pruning survives the
-    union."""
-    import os
-
-    from whale_sightings_spark.plans.store_utils import (
-        ingest_batch_dirs,
-        read_artifact_table,
-    )
-
-    base = read_artifact_table(spark, _table_path(artifact_dir, key), schema)
-    for b in ingest_batch_dirs(artifact_dir):
-        t = os.path.join(b, key)
-        if os.path.isdir(t):
-            base = base.unionByName(read_artifact_table(spark, t, schema))
-    return base
-
-
 def _distinct_postings(docs: DataFrame, n: int) -> DataFrame:
     """DISTINCT (doc_id, source, shingle) at width ``n`` — the
     `_shingle_docs` staging discipline (tokens materialized into a
@@ -247,13 +227,13 @@ def stored_postings(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(doc_id, source, shingle, bucket) — the n=3 posting table
     (base + published ingest batches; rows are doc-disjoint by the
     ingest anti-join, so the union never needs a re-aggregate)."""
-    return _read_table(spark, artifact_dir, "postings", _POSTINGS_SCHEMA)
+    return read_store_table(spark, artifact_dir, "postings", _POSTINGS_SCHEMA)
 
 
 def stored_doc_ids(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(doc_id) — the ingested-document manifest (v2): base + every
     published batch; the O(documents) seen-set for streaming ingest."""
-    return _read_table(spark, artifact_dir, "doc_ids", _DOC_IDS_SCHEMA)
+    return read_store_table(spark, artifact_dir, "doc_ids", _DOC_IDS_SCHEMA)
 
 
 def stored_df(spark: SparkSession, artifact_dir: str) -> DataFrame:
@@ -266,7 +246,7 @@ def stored_df(spark: SparkSession, artifact_dir: str) -> DataFrame:
     alternative, merging the full df table per trigger, is
     O(shingle types) — near corpus scale for word n-grams."""
     return (
-        _read_table(spark, artifact_dir, "df", _DF_SCHEMA)
+        read_store_table(spark, artifact_dir, "df", _DF_SCHEMA)
         .groupBy("shingle")
         .agg(F.sum("df").cast("bigint").alias("df"))
     )
@@ -276,14 +256,14 @@ def stored_doc_stats(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """(doc_id, n_shingles) — per-doc distinct shingle count. Plain
     union read stays exact under streaming ingest: batches are
     anti-joined to new doc_ids, so rows never collide."""
-    return _read_table(spark, artifact_dir, "doc_stats", _DOC_STATS_SCHEMA)
+    return read_store_table(spark, artifact_dir, "doc_stats", _DOC_STATS_SCHEMA)
 
 
 def stored_src5(spark: SparkSession, artifact_dir: str) -> DataFrame:
     """distinct (source, shingle) at n=5 — q234's overlap base.
     Distinct at read: streaming-ingest batches carry their own
     distinct sets, which may repeat (source, shingle) across batches."""
-    return _read_table(spark, artifact_dir, "src5", _SRC5_SCHEMA).distinct()
+    return read_store_table(spark, artifact_dir, "src5", _SRC5_SCHEMA).distinct()
 
 
 def compact_shingle_store(
@@ -318,7 +298,7 @@ def compact_shingle_store(
         fh.write(str(os.getpid()))
     # src5 FIRST — it carries the completeness marker
     src5 = (
-        _read_table(spark, artifact_dir, "src5", _SRC5_SCHEMA)
+        read_store_table(spark, artifact_dir, "src5", _SRC5_SCHEMA)
         .distinct()
         .localCheckpoint()
     )
@@ -327,7 +307,7 @@ def compact_shingle_store(
         lambda staging: src5.write.mode("overwrite").parquet(staging),
     )
     dfc = (
-        _read_table(spark, artifact_dir, "df", _DF_SCHEMA)
+        read_store_table(spark, artifact_dir, "df", _DF_SCHEMA)
         .groupBy("shingle")
         .agg(F.sum("df").cast("bigint").alias("df"))
         .localCheckpoint()
@@ -336,7 +316,7 @@ def compact_shingle_store(
         _table_path(artifact_dir, "df"),
         lambda staging: dfc.write.mode("overwrite").parquet(staging),
     )
-    post = _read_table(
+    post = read_store_table(
         spark, artifact_dir, "postings", _POSTINGS_SCHEMA
     ).localCheckpoint()
     swap_table(
@@ -348,7 +328,7 @@ def compact_shingle_store(
             .parquet(staging)
         ),
     )
-    stats = _read_table(
+    stats = read_store_table(
         spark, artifact_dir, "doc_stats", _DOC_STATS_SCHEMA
     ).localCheckpoint()
     swap_table(
@@ -356,7 +336,7 @@ def compact_shingle_store(
         lambda staging: stats.write.mode("overwrite").parquet(staging),
     )
     ids = (
-        _read_table(spark, artifact_dir, "doc_ids", _DOC_IDS_SCHEMA)
+        read_store_table(spark, artifact_dir, "doc_ids", _DOC_IDS_SCHEMA)
         .distinct()
         .localCheckpoint()
     )

@@ -25,6 +25,9 @@ Crash contract:
   deletes another whose name it prefixes (``ivfpq`` vs
   ``ivfpq_hist<split>``), and never touches ``.tmp.`` staging.
 - The warm path is ``os.stat`` calls only: no Spark job, no mkdir.
+- A store that takes streaming ingest publishes each micro-batch as
+  its own sub-store ``ingest/b<batch_id>`` through :func:`publish`;
+  :func:`read_store_table` unions the published ones with the base.
 """
 from __future__ import annotations
 
@@ -195,4 +198,18 @@ def read_artifact_table(spark, path: str, schema=None):
     df = reader.parquet(path)
     if sig is not None:
         _DF_MEMO[key] = (sig, df, spark)
+    return df
+
+
+def read_store_table(spark, artifact_dir: str, key: str, schema):
+    """Pinned-schema read of table ``key`` of a store that takes
+    streaming ingest: the base table unioned with the same table of
+    every published ingest batch (:func:`ingest_batch_dirs`). Each root
+    is scanned on its own so bucket partition pruning survives the
+    union."""
+    df = read_artifact_table(spark, os.path.join(artifact_dir, key), schema)
+    for b in ingest_batch_dirs(artifact_dir):
+        t = os.path.join(b, key)
+        if os.path.isdir(t):
+            df = df.unionByName(read_artifact_table(spark, t, schema))
     return df

@@ -1,8 +1,8 @@
 """SparkSession factory with scale-minded defaults.
 
-Local runs use ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
-conf applies minus the master override. Settings chosen for the 100 TB
-design point:
+Local runs use ``local[N]`` with N from :func:`host_cpus`; on a real
+cluster the same conf applies minus the master override. Settings
+chosen for the 100 TB design point:
 
 - AQE on (runtime partition coalescing + skew-join splitting);
 - shuffle partitions sized to cores locally (the 200 default is wrong
@@ -14,7 +14,9 @@ design point:
   projection (the ingest's inlined validation array and date cascade)
   cost seconds of ``PruneFilters`` per optimisation (SCALE.md);
 - exact-string JSON parsing off: it re-reads a multiLine document for
-  every number parsed into a string field (SCALE.md).
+  every number parsed into a string field (SCALE.md);
+- the driver heap (in local mode also the executor heap) sized to the
+  host by :func:`driver_memory`.
 """
 
 from __future__ import annotations
@@ -23,7 +25,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the cores this process may run
+    on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` if set, else half the host's physical
+    RAM in whole GiB: a single local JVM holds every task's working set,
+    and a heap larger than RAM gets the process OOM-killed on a host
+    without swap."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, round(ram / 2**31))}g"
 
 
 def get_spark(
@@ -35,12 +50,12 @@ def get_spark(
     """Build (or fetch) the shared SparkSession.
 
     ``master=None`` defers to an existing session / spark-submit conf,
-    falling back to ``local[$SPARK_GRAFT_CPUS]``.
+    falling back to ``local[host_cpus()]``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -52,10 +67,7 @@ def get_spark(
         # absorbs eventDate/species predicates into request params)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # single-JVM local mode: driver heap IS the executor heap; 32
-        # concurrent tasks shuffling sf0.1 in 16g spends visible time in
-        # GC (observed as multi-second per-query jitter), 48g doesn't
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # long sessions run hundreds of plans: reclaim shuffle files,
         # broadcasts, and accumulators continuously instead of at the
         # 30-min default, so late queries aren't billed for early ones

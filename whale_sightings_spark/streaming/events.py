@@ -15,9 +15,32 @@ DuckDB-oracle queries — batch `window()`/`session_window()` have
 identical semantics) and `readStream` DataFrames. Streaming tests
 validate stream == batch recomputation (SURVEY §7.3.6: no reference
 ground truth, batch is the oracle).
+
+Micro-batch contract of the ``streaming_*`` twins of batch operators
+(each takes a source dir and a ``checkpoint_dir`` and returns None):
+
+- The source is a file replay: a parquet dir read one file per trigger
+  (``maxFilesPerTrigger=1``), so each file is one micro-batch and
+  files arrive in modification-time order.
+- :func:`drain` runs the twin's ``apply_batch(batch_df, batch_id)``
+  under ``foreachBatch`` with ``trigger(availableNow=True)`` and blocks
+  until the backlog is processed.
+- Delivery is at-least-once (a crash replays the batch), so every twin
+  is idempotent in one of three ways:
+
+  1. seen-set anti-join: rows whose key is already in the persisted
+     state drop out before anything is appended;
+  2. per-batch overwrite: a stateless twin writes only its own
+     ``batch_id=N`` partition (:func:`write_batch_output`), so a replay
+     rewrites identical rows;
+  3. published sub-store: the batch's tables are staged and published
+     by one atomic rename (``store_utils.publish``), so a torn batch is
+     invisible and its replay regenerates it whole.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -124,17 +147,44 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# streaming runners (readStream -> memory sink), used by tests/demos
+# file-replay sources, the micro-batch driver and the runners
 # ---------------------------------------------------------------------------
 
-def read_event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
-    """File-based replay of the events table as a stream (one file per
-    micro-batch via maxFilesPerTrigger)."""
+def _file_replay(spark: SparkSession, src_dir: str, schema) -> DataFrame:
+    """``src_dir`` as a stream, one parquet file per micro-batch."""
     return (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
+        .parquet(src_dir)
     )
+
+
+def read_event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
+    """File-based replay of the events table as a stream, one file per
+    micro-batch."""
+    return _file_replay(spark, events_dir, EVENTS_STREAM_SCHEMA)
+
+
+def drain(spark: SparkSession, src_dir: str, checkpoint_dir: str, apply_batch) -> None:
+    """Feed every file in ``src_dir`` not yet recorded in
+    ``checkpoint_dir`` to ``apply_batch(batch_df, batch_id)``, one file
+    per call, and return once the backlog is processed."""
+    (
+        _file_replay(spark, src_dir, spark.read.parquet(src_dir).schema)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def write_batch_output(df: DataFrame, out_dir: str, batch_id: int) -> None:
+    """Overwrite the ``out_dir/batch_id=N`` partition with ``df``.
+    ``batch_id`` lives only in the directory name: a physical column of
+    the same name would collide with partition inference when
+    ``out_dir`` is read as a whole."""
+    df.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
 
 
 def run_stream_to_memory(
@@ -378,10 +428,8 @@ def streaming_incremental_dedup(
     Hadoop-compatible FS. The state dir here is plain parquet append
     (non-transactional: a mid-append crash can leave partial part-files
     that poison the next read); production swaps in a transactional
-    table format on shared storage — the plan shape is identical. Runs
-    with availableNow and blocks until the backlog drains.
+    table format on shared storage — the plan shape is identical.
     """
-    schema = spark.read.parquet(docs_dir).schema
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -398,21 +446,8 @@ def streaming_incremental_dedup(
         keep = keep.join(state, "fingerprint", "left_anti")
         keep.select("doc_id", "fingerprint").write.mode("append").parquet(state_dir)
 
-    import os
-
     os.makedirs(state_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_incremental_neardup(
@@ -452,12 +487,11 @@ def streaming_incremental_neardup(
     Re-delivery is self-healing at the ingest boundary: a batch doc
     whose id already sits in the band index anti-joins away before it
     probes or appends, so at-least-once delivery emits each pair once
-    (the q95-twin idempotence pattern). State reads are schema-pinned
+    (seen-set anti-join). State reads are schema-pinned
     (empty dirs read as empty frames on any Hadoop-compatible FS) and
     de-duplicated, so a torn append degrades to a no-op on replay;
     production swaps the two state dirs for transactional tables — the
-    probe plan is identical. Runs with availableNow and blocks until
-    the backlog drains.
+    probe plan is identical.
     """
     from whale_sightings_spark.operators.dedup import (
         JACCARD_THRESHOLD,
@@ -467,7 +501,6 @@ def streaming_incremental_neardup(
         _shingled,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
     bands_dir = state_dir.rstrip("/") + "/bands"
     shingles_dir = state_dir.rstrip("/") + "/shingles"
 
@@ -544,23 +577,10 @@ def streaming_incremental_neardup(
         bb.select("doc_id", "band").write.mode("append").parquet(bands_dir)
         bs.write.mode("append").parquet(shingles_dir)
 
-    import os
-
     os.makedirs(bands_dir, exist_ok=True)
     os.makedirs(shingles_dir, exist_ok=True)
     os.makedirs(out_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def _rank_seed(sub, k: int):
@@ -609,8 +629,8 @@ def streaming_ivf_ingest(
     file holds the history.
 
     Re-delivery is self-healing: already-assigned vec_ids anti-join
-    away before assignment or append (the q95-twin idempotence
-    pattern); the codebook is written once and only read afterwards.
+    away before assignment or append (seen-set anti-join); the
+    codebook is written once and only read afterwards.
     State reads are schema-pinned (empty dirs = empty frames on any
     Hadoop-compatible FS); production swaps the two state dirs for
     transactional tables — the assign plan is identical.
@@ -624,7 +644,6 @@ def streaming_ivf_ingest(
         _pq_assign_to,
     )
 
-    schema = spark.read.parquet(emb_dir).schema
     cb_dir = state_dir.rstrip("/") + "/codebook"
     assign_dir = state_dir.rstrip("/") + "/assignments"
 
@@ -674,22 +693,9 @@ def streaming_ivf_ingest(
         )
         assigned.write.mode("append").parquet(assign_dir)
 
-    import os
-
     os.makedirs(cb_dir, exist_ok=True)
     os.makedirs(assign_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, emb_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_ivfpq_encode(
@@ -712,7 +718,7 @@ def streaming_ivfpq_encode(
     tests/test_streaming.py).
 
     Re-delivery is self-healing: already-encoded vec_ids anti-join
-    away before encode or append (the q95-twin idempotence pattern);
+    away before encode or append (seen-set anti-join);
     the train-once branch keys on the residual codebook — the last of
     the two codebook writes — so a tear between them retrains both on
     replay (overwrite-mode writes keep that idempotent) instead of
@@ -734,7 +740,6 @@ def streaming_ivfpq_encode(
         _split_subspaces,
     )
 
-    schema = spark.read.parquet(emb_dir).schema
     base = state_dir.rstrip("/")
     coarse_dir = base + "/coarse_codebook"
     rcb_dir = base + "/residual_codebook"
@@ -798,22 +803,9 @@ def streaming_ivfpq_encode(
         ).select("vec_id", F.col("cell").cast("bigint").alias("cell"), "s", "cid", "d2")
         out.write.mode("append").parquet(codes_dir)
 
-    import os
-
     for d in (coarse_dir, rcb_dir, codes_dir):
         os.makedirs(d, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, emb_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_ivfpq_index_ingest(
@@ -834,15 +826,13 @@ def streaming_ivfpq_index_ingest(
     append — O(batch).
 
     Re-delivery is self-healing: already-stored vec_ids anti-join away
-    before encode or append (the q95-twin idempotence pattern), and
+    before encode or append (seen-set anti-join), and
     the artifact's codebooks are never written here, so there is no
     torn-write window beyond the append itself. Drained codes equal
     ``ivfpq_incremental_encode`` (stored-codebook path) when the index
     was built over the history slice — pinned in
     tests/test_streaming.py.
     """
-    import os
-
     from whale_sightings_spark.operators.similarity import (
         _pq_assign_to,
         _pq_subvectors,
@@ -853,7 +843,6 @@ def streaming_ivfpq_index_ingest(
         read_pq_index,
     )
 
-    schema = spark.read.parquet(emb_dir).schema
     _coarse_dir, _rcb_dir, codes_dir = ivfpq_index_paths(index_dir)
     _pqcb_dir, pq_codes_dir = ivfpq_index_extra_paths(index_dir)
 
@@ -902,18 +891,7 @@ def streaming_ivfpq_index_ingest(
             .parquet(codes_dir)
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, emb_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_cluster_ingest(
@@ -948,8 +926,6 @@ def streaming_cluster_ingest(
     double-path duplicates are guarded inside the assign operator).
     """
     from whale_sightings_spark.operators import dedup as DD
-
-    schema = spark.read.parquet(docs_dir).schema
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -994,7 +970,6 @@ def streaming_cluster_ingest(
         # publishes pre-append results AFTER this sweep is caught by
         # the reader's _GEN generation gate, not by deletion order.
         import glob
-        import os
         import shutil
 
         from whale_sightings_spark.plans.store_utils import (
@@ -1052,18 +1027,7 @@ def streaming_cluster_ingest(
             .parquet(DD.cluster_sigs_path(artifact_dir))
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_embed_assign(
@@ -1082,40 +1046,20 @@ def streaming_embed_assign(
     embedding side, completing the lifecycle symmetry with the text
     graph's mutating `streaming_cluster_ingest`.
 
-    Stateless ⇒ idempotence by overwrite-per-``batch_id=N`` partition
-    (the `streaming_nb_score` convention)."""
-    import os
-
+    Stateless ⇒ idempotent by per-batch overwrite."""
     from whale_sightings_spark.operators.similarity import (
         embed_assign_from_store,
     )
 
-    schema = spark.read.parquet(vecs_dir).schema
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        assigned = embed_assign_from_store(batch_df, sess, artifact_dir)
-        # batch_id lives ONLY in the partition directory name — a
-        # physical column with the same name would collide with
-        # partition inference on root-level reads (ADVICE r10)
-        (
-            assigned.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
+        write_batch_output(
+            embed_assign_from_store(batch_df, sess, artifact_dir),
+            out_dir,
+            batch_id,
         )
 
-    os.makedirs(out_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(vecs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, vecs_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_degree_audit(
@@ -1136,14 +1080,10 @@ def streaming_degree_audit(
     pagerank/kcore tables (q253 prices the same pressure batch-side
     on the store; this prices it per-trigger between rebuilds).
 
-    Stateless and artifact-read-only ⇒ idempotence by
-    overwrite-per-``batch_id=N`` partition under ``deltas/`` and
-    ``summary/`` (the `streaming_embed_assign` convention)."""
-    import os
-
+    Stateless and artifact-read-only ⇒ idempotent by per-batch
+    overwrite under ``deltas/`` and ``summary/``."""
     from whale_sightings_spark.operators import dedup as DD
 
-    schema = spark.read.parquet(docs_dir).schema
     thresh = (
         DD.GRAPH_REBUILD_BRIDGE_EVENTS
         if rebuild_threshold is None
@@ -1159,31 +1099,10 @@ def streaming_degree_audit(
             DD.stored_cluster_labels(sess, artifact_dir),
             rebuild_threshold=thresh,
         )
-        # batch_id lives ONLY in the partition directory name — a
-        # physical column with the same name would collide with
-        # partition inference on root-level reads (ADVICE r10)
-        (
-            deltas.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "deltas", f"batch_id={batch_id}"))
-        )
-        (
-            summary.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "summary", f"batch_id={batch_id}"))
-        )
+        write_batch_output(deltas, os.path.join(out_dir, "deltas"), batch_id)
+        write_batch_output(summary, os.path.join(out_dir, "summary"), batch_id)
 
-    os.makedirs(out_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_bpe_ingest(
@@ -1203,13 +1122,12 @@ def streaming_bpe_ingest(
     vocab cap applies once, at train time, over the summed state).
 
     Re-delivery is self-healing: already-counted doc_ids anti-join
-    away before the append (the q95-twin idempotence pattern), and the
+    away before the append (seen-set anti-join), and the
     trainer de-duplicates (doc_id, word) rows so a torn append
     degrades to a no-op on replay. Per-trigger cost is one word agg
     over the batch — O(batch tokens). Production swaps the state dir
     for a transactional table keyed by (doc_id, word).
     """
-    schema = spark.read.parquet(docs_dir).schema
     wc_dir = state_dir.rstrip("/") + "/wordcounts"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1234,21 +1152,8 @@ def streaming_bpe_ingest(
         )
         counts.write.mode("append").parquet(wc_dir)
 
-    import os
-
     os.makedirs(wc_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def bpe_train_from_state(spark: SparkSession, state_dir: str, rounds: int | None = None):
@@ -1299,13 +1204,9 @@ def streaming_nb_score(
     identical rows.  Production swaps out_dir for the scored-corpus
     table the downstream mixer reads.
     """
-    import os
-
     from whale_sightings_spark.operators.classify import (
         nb_calibrated_scores_from_store,
     )
-
-    schema = spark.read.parquet(docs_dir).schema
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -1315,25 +1216,9 @@ def streaming_nb_score(
         scored = nb_calibrated_scores_from_store(
             batch_df, sess, artifact_dir
         )
-        (
-            scored.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
-        )
+        write_batch_output(scored, out_dir, batch_id)
 
-    os.makedirs(out_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def nb_scores_from_out(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1342,7 +1227,7 @@ def nb_scores_from_out(spark: SparkSession, out_dir: str) -> DataFrame:
     out = spark.read.schema(
         "doc_id long, source string, y int, score double, p_cal double, "
         "batch_id long"
-    ).parquet(out_dir + "/*")
+    ).parquet(out_dir)
     pos = F.col("score") > 0
     return out.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -1395,7 +1280,6 @@ def streaming_transition_counts(
     pins ``batch_id < current`` so a replayed batch sees exactly the
     pre-batch frontier even when its own torn rows already landed.
     """
-    schema = spark.read.parquet(events_dir).schema
     deltas_dir = state_dir.rstrip("/") + "/deltas"
     frontier_dir = state_dir.rstrip("/") + "/frontier"
 
@@ -1482,22 +1366,9 @@ def streaming_transition_counts(
         last.write.mode("append").parquet(frontier_dir)
         deltas.write.mode("append").parquet(deltas_dir)
 
-    import os
-
     os.makedirs(deltas_dir, exist_ok=True)
     os.makedirs(frontier_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, events_dir, checkpoint_dir, apply_batch)
 
 
 def transition_counts_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1542,14 +1413,11 @@ def streaming_ngram_novelty(
     shingle strings for exactness; production would hash60 them to
     fixed-width keys (same plan shape, 8x narrower state).
     """
-    import os
-
     from whale_sightings_spark.functions.text import (
         shingles_from_tokens,
         tokens,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
     state_schema = "shingle string, batch_id long"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1586,11 +1454,7 @@ def streaming_ngram_novelty(
                 ).otherwise(0)
             ).alias("new"),
         )
-        (
-            per_doc.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
-        )
+        write_batch_output(per_doc, out_dir, batch_id)
         (
             fresh.withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")
@@ -1598,19 +1462,7 @@ def streaming_ngram_novelty(
         )
 
     os.makedirs(state_dir, exist_ok=True)
-    os.makedirs(out_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def ngram_novelty_from_out(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1618,7 +1470,7 @@ def ngram_novelty_from_out(spark: SparkSession, out_dir: str) -> DataFrame:
     per-source report (column-compatible with the registered query)."""
     out = spark.read.schema(
         "doc_id long, source string, total long, new long, batch_id long"
-    ).parquet(out_dir + "/*")
+    ).parquet(out_dir)
     return out.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("total").cast("bigint").alias("n_shingles"),
@@ -1646,9 +1498,6 @@ def streaming_ks_ingest(
     that ``ks_from_state`` de-duplicates before aggregating.
     Per-trigger cost: one O(batch) projection + anti-join probe.
     """
-    import os
-
-    schema = spark.read.parquet(docs_dir).schema
     hist_dir = state_dir.rstrip("/") + "/lenhist"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1667,18 +1516,7 @@ def streaming_ks_ingest(
         )
 
     os.makedirs(hist_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def ks_from_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1710,9 +1548,8 @@ def streaming_shingle_index_ingest(
     """Delta ingest INTO the persisted shingle inverted index (round 8
     — the fourth artifact gets the same lifecycle the IVF-PQ index
     has: build -> serve -> STREAM-INGEST -> serve). Each micro-batch's
-    NEW documents (already-indexed doc_ids anti-join away — the
-    q95-twin idempotence pattern, so replays and torn appends are
-    no-ops) contribute:
+    NEW documents (already-indexed doc_ids anti-join away, so replays
+    are no-ops) contribute:
 
     - distinct (doc_id, source, shingle) postings in the SAME
       bucket-partitioned layout (readers union batch dirs per root,
@@ -1726,12 +1563,10 @@ def streaming_shingle_index_ingest(
       (`stored_src5` dedups at read).
 
     Per-trigger cost: O(batch tokens) + one batch-sized distinct + one
-    O(ingested documents) manifest read. v2 (round 9, the
-    `streaming_lm_ingest` atomicity contract): each batch is written
-    as ONE complete sub-store under ``ingest/b<batch_id>``, staged in
-    a ``.tmp.`` dir and published by a single atomic rename — a crash
-    mid-batch leaves nothing any reader or seen-set observes, so the
-    replay regenerates the batch whole (closes the v1 window where the
+    O(ingested documents) manifest read. v2 (round 9): each batch is
+    written as ONE complete sub-store under ``ingest/b<batch_id>``,
+    published by `store_utils.publish` — a crash mid-batch leaves
+    nothing any reader or seen-set observes, so the replay regenerates the batch whole (closes the v1 window where the
     postings append, the anti-join key, landed but the crash stranded
     that batch's df/doc_stats/src5 rows forever). The seen-set is the
     doc-id manifest, never a posting-table distinct. Drained store
@@ -1739,14 +1574,15 @@ def streaming_shingle_index_ingest(
     pinned in tests/test_streaming.py. `compact_shingle_store` folds
     published batches into the base tables.
     """
-    import os
-    import shutil
-
     from whale_sightings_spark.operators import shingles as SH
+    from whale_sightings_spark.plans.store_utils import (
+        publish,
+        reap_dead_staging,
+    )
 
-    schema = spark.read.parquet(docs_dir).schema
     ingest_root = SH.shingle_ingest_root(artifact_dir)
     os.makedirs(ingest_root, exist_ok=True)
+    reap_dead_staging(ingest_root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -1757,65 +1593,55 @@ def streaming_shingle_index_ingest(
         final = os.path.join(ingest_root, f"b{batch_id}")
         if os.path.isdir(final):
             return  # published by a previous attempt; replay no-ops
-        staging = os.path.join(ingest_root, f".tmp.{batch_id}")
-        shutil.rmtree(staging, ignore_errors=True)
-        post = (
-            SH._distinct_postings(batch, SH.SHINGLE_N)
-            .withColumn(
-                "bucket",
-                F.pmod(F.hash("shingle"), F.lit(SH.N_POSTING_BUCKETS)).cast(
-                    "int"
-                ),
-            )
-            .localCheckpoint()  # 3 consumers below; batch-bounded
-        )
-        (
-            post.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(staging, "postings"))
-        )
-        (
-            post.groupBy("shingle")
-            .agg(F.count("*").cast("bigint").alias("df"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(staging, "df"))
-        )
-        (
-            post.groupBy("doc_id")
-            .agg(F.count("*").cast("bigint").alias("n_shingles"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(staging, "doc_stats"))
-        )
-        (
-            SH._distinct_postings(batch, SH.SRC_SHINGLE_N)
-            .select("source", "shingle")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(staging, "src5"))
-        )
-        # the batch manifest — includes shingle-less docs, so replaying
-        # them is a manifest hit, not a vacuous re-shingle
-        (
-            batch.select(F.col("doc_id").cast("long"))
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(staging, "doc_ids"))
-        )
-        os.rename(staging, final)  # atomic publish
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+        def write(staging: str) -> None:
+            post = (
+                SH._distinct_postings(batch, SH.SHINGLE_N)
+                .withColumn(
+                    "bucket",
+                    F.pmod(F.hash("shingle"), F.lit(SH.N_POSTING_BUCKETS)).cast(
+                        "int"
+                    ),
+                )
+                .localCheckpoint()  # 3 consumers below; batch-bounded
+            )
+            (
+                post.repartition("bucket")
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(os.path.join(staging, "postings"))
+            )
+            (
+                post.groupBy("shingle")
+                .agg(F.count("*").cast("bigint").alias("df"))
+                .write.mode("overwrite")
+                .parquet(os.path.join(staging, "df"))
+            )
+            (
+                post.groupBy("doc_id")
+                .agg(F.count("*").cast("bigint").alias("n_shingles"))
+                .write.mode("overwrite")
+                .parquet(os.path.join(staging, "doc_stats"))
+            )
+            (
+                SH._distinct_postings(batch, SH.SRC_SHINGLE_N)
+                .select("source", "shingle")
+                .distinct()
+                .write.mode("overwrite")
+                .parquet(os.path.join(staging, "src5"))
+            )
+            # the batch manifest — includes shingle-less docs, so replaying
+            # them is a manifest hit, not a vacuous re-shingle
+            (
+                batch.select(F.col("doc_id").cast("long"))
+                .distinct()
+                .write.mode("overwrite")
+                .parquet(os.path.join(staging, "doc_ids"))
+            )
+
+        publish(final, write, lambda: os.path.isdir(final))
+
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_lm_ingest(
@@ -1833,15 +1659,17 @@ def streaming_lm_ingest(
     doc-id-only sidecar, never the corpus-scale n-gram tables) are
     written as ONE per-batch sub-store ``ingest/b<batch_id>/`` holding
     every table (per-doc counts, aggregate PARTIALS, and the batch's
-    own doc-id manifest), staged under ``ingest/.tmp.<batch_id>`` and
-    published by a single atomic rename. Readers
-    (`ngram_lm._read_table`) union the base store with PUBLISHED batch
-    dirs only, so:
+    own doc-id manifest), staged and published by a single atomic
+    rename (`store_utils.publish`). Readers
+    (`store_utils.read_store_table`) union the base store with
+    PUBLISHED batch dirs only, so:
 
-    - a crash ANYWHERE before the rename leaves a ``.tmp.`` dir no
-      reader and no seen-set ever observes — the replayed batch
-      recomputes and re-publishes it whole (no torn-batch row loss
-      across tables, the round-8 append-in-place failure mode);
+    - a failure ANYWHERE before the rename removes the batch's
+      staging dir (a hard kill leaves it for the dead-pid reap at the
+      next start); no reader and no seen-set ever observes it, and the
+      replayed batch recomputes and re-publishes it whole (no
+      torn-batch row loss across tables, the round-8 append-in-place
+      failure mode);
     - a crash after the rename replays a batch whose doc_ids are all
       in the manifest — the anti-join empties and the trigger no-ops.
 
@@ -1850,14 +1678,15 @@ def streaming_lm_ingest(
     read. `compact_lm_store` folds published batches into the base
     tables.
     """
-    import os
-    import shutil
-
     from whale_sightings_spark.operators import ngram_lm as LM
+    from whale_sightings_spark.plans.store_utils import (
+        publish,
+        reap_dead_staging,
+    )
 
-    schema = spark.read.parquet(docs_dir).schema
     ingest_root = LM.lm_ingest_root(artifact_dir)
     os.makedirs(ingest_root, exist_ok=True)
+    reap_dead_staging(ingest_root)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -1868,106 +1697,96 @@ def streaming_lm_ingest(
         final = os.path.join(ingest_root, f"b{batch_id}")
         if os.path.isdir(final):
             return  # published by a previous attempt; replay no-ops
-        staging = os.path.join(ingest_root, f".tmp.{batch_id}")
-        shutil.rmtree(staging, ignore_errors=True)
-        bpaths = LM.lm_artifact_paths(staging)
-        du = (
-            LM.doc_unigram_counts(batch)
-            .withColumn(
-                "bucket",
-                F.pmod(F.hash("tok"), F.lit(LM.N_LM_BUCKETS)).cast("int"),
-            )
-            .localCheckpoint()  # 3 consumers below; batch-bounded
-        )
-        db = (
-            LM.doc_bigram_counts(batch)
-            .withColumn(
-                "bucket",
-                F.pmod(F.hash("w1", "w2"), F.lit(LM.N_LM_BUCKETS)).cast(
-                    "int"
-                ),
-            )
-            .localCheckpoint()
-        )
-        dt = (
-            LM.doc_trigram_counts(batch)
-            .withColumn(
-                "bucket",
-                F.pmod(
-                    F.hash("w1", "w2", "w3"), F.lit(LM.N_LM_BUCKETS)
-                ).cast("int"),
-            )
-            .localCheckpoint()
-        )
-        train = F.col("doc_id") % LM.HOLD_MOD != 0
-        for df, key in ((du, "doc_uni"), (db, "doc_big"), (dt, "doc_tri")):
-            (
-                df.repartition("bucket")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(bpaths[key])
-            )
-        (
-            du.groupBy("tok")
-            .agg(F.sum("n").cast("bigint").alias("n"))
-            .write.mode("overwrite")
-            .parquet(bpaths["uni"])
-        )
-        (
-            du.filter(train)
-            .groupBy("tok")
-            .agg(F.sum("n").cast("bigint").alias("n"))
-            .write.mode("overwrite")
-            .parquet(bpaths["uni_train"])
-        )
-        (
-            db.filter(train)
-            .groupBy("w1", "w2")
-            .agg(F.sum("n").cast("bigint").alias("c12"))
-            .write.mode("overwrite")
-            .parquet(bpaths["pairs_train"])
-        )
-        (
-            dt.filter(train)
-            .groupBy("w1", "w2", "w3")
-            .agg(F.sum("n").cast("bigint").alias("c123"))
-            .write.mode("overwrite")
-            .parquet(bpaths["tri_train"])
-        )
-        (
-            db.groupBy("w1", "w2")
-            .agg(F.sum("n").cast("bigint").alias("pair_n"))
-            .write.mode("overwrite")
-            .parquet(bpaths["pairs"])
-        )
-        # v3: the batch's per-doc token totals (retrieval-family side)
-        (
-            LM.doc_len_counts(batch)
-            .write.mode("overwrite")
-            .parquet(bpaths["doc_len"])
-        )
-        # the batch manifest — includes token-less docs, so replaying
-        # them is a manifest hit, not a vacuous re-tokenize
-        (
-            batch.select(F.col("doc_id").cast("long"))
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(bpaths["doc_ids"])
-        )
-        os.rename(staging, final)  # atomic publish
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+        def write(staging: str) -> None:
+            bpaths = LM.lm_artifact_paths(staging)
+            du = (
+                LM.doc_unigram_counts(batch)
+                .withColumn(
+                    "bucket",
+                    F.pmod(F.hash("tok"), F.lit(LM.N_LM_BUCKETS)).cast("int"),
+                )
+                .localCheckpoint()  # 3 consumers below; batch-bounded
+            )
+            db = (
+                LM.doc_bigram_counts(batch)
+                .withColumn(
+                    "bucket",
+                    F.pmod(F.hash("w1", "w2"), F.lit(LM.N_LM_BUCKETS)).cast(
+                        "int"
+                    ),
+                )
+                .localCheckpoint()
+            )
+            dt = (
+                LM.doc_trigram_counts(batch)
+                .withColumn(
+                    "bucket",
+                    F.pmod(
+                        F.hash("w1", "w2", "w3"), F.lit(LM.N_LM_BUCKETS)
+                    ).cast("int"),
+                )
+                .localCheckpoint()
+            )
+            train = F.col("doc_id") % LM.HOLD_MOD != 0
+            for df, key in ((du, "doc_uni"), (db, "doc_big"), (dt, "doc_tri")):
+                (
+                    df.repartition("bucket")
+                    .write.mode("overwrite")
+                    .partitionBy("bucket")
+                    .parquet(bpaths[key])
+                )
+            (
+                du.groupBy("tok")
+                .agg(F.sum("n").cast("bigint").alias("n"))
+                .write.mode("overwrite")
+                .parquet(bpaths["uni"])
+            )
+            (
+                du.filter(train)
+                .groupBy("tok")
+                .agg(F.sum("n").cast("bigint").alias("n"))
+                .write.mode("overwrite")
+                .parquet(bpaths["uni_train"])
+            )
+            (
+                db.filter(train)
+                .groupBy("w1", "w2")
+                .agg(F.sum("n").cast("bigint").alias("c12"))
+                .write.mode("overwrite")
+                .parquet(bpaths["pairs_train"])
+            )
+            (
+                dt.filter(train)
+                .groupBy("w1", "w2", "w3")
+                .agg(F.sum("n").cast("bigint").alias("c123"))
+                .write.mode("overwrite")
+                .parquet(bpaths["tri_train"])
+            )
+            (
+                db.groupBy("w1", "w2")
+                .agg(F.sum("n").cast("bigint").alias("pair_n"))
+                .write.mode("overwrite")
+                .parquet(bpaths["pairs"])
+            )
+            # v3: the batch's per-doc token totals (retrieval-family side)
+            (
+                LM.doc_len_counts(batch)
+                .write.mode("overwrite")
+                .parquet(bpaths["doc_len"])
+            )
+            # the batch manifest — includes token-less docs, so replaying
+            # them is a manifest hit, not a vacuous re-tokenize
+            (
+                batch.select(F.col("doc_id").cast("long"))
+                .distinct()
+                .write.mode("overwrite")
+                .parquet(bpaths["doc_ids"])
+            )
+
+        publish(final, write, lambda: os.path.isdir(final))
+
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_bm25_score(
@@ -1986,42 +1805,20 @@ def streaming_bm25_score(
     before it is ingested. Per-trigger cost is O(batch tokens) ⋈ two
     broadcast store aggregates.
 
-    Stateless (the index is a read-only artifact), so idempotence
-    needs no replay guard: each batch overwrites its own
-    ``batch_id=N`` output partition — a re-delivered batch rewrites
-    identical rows (the `streaming_nb_score` convention)."""
-    import os
-
+    Stateless (the index is a read-only artifact) ⇒ idempotent by
+    per-batch overwrite."""
     from whale_sightings_spark.operators.ngram_lm import (
         bm25_score_docs_from_store,
     )
-
-    schema = spark.read.parquet(docs_dir).schema
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         scored = bm25_score_docs_from_store(
             batch_df, sess, artifact_dir, terms
         )
-        (
-            scored.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
-        )
+        write_batch_output(scored, out_dir, batch_id)
 
-    os.makedirs(out_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
 
 
 def streaming_source_kl(
@@ -2036,39 +1833,17 @@ def streaming_source_kl(
     STORED corpus unigram distribution (`ngram_lm.source_kl_vs_stored`
     — q248's statistic on arriving data, with OOV mass reported
     because new crawl text need not be in-vocabulary). Inference only:
-    the store is read-only here, so the operator is stateless and each
-    batch overwrites its own ``batch_id=N`` output partition (the
-    `streaming_nb_score` idempotence convention — a re-delivered
-    batch rewrites identical rows). Per-trigger cost is O(batch
+    the store is read-only here, so the operator is stateless and
+    idempotent by per-batch overwrite. Per-trigger cost is O(batch
     tokens) + one broadcast-scalar join against the vocab-scale
     stored unigram table."""
-    import os
-
     from whale_sightings_spark.operators.ngram_lm import (
         source_kl_vs_stored,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         report = source_kl_vs_stored(batch_df, sess, artifact_dir)
-        (
-            report.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
-        )
+        write_batch_output(report, out_dir, batch_id)
 
-    os.makedirs(out_dir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark, docs_dir, checkpoint_dir, apply_batch)
