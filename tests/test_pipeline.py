@@ -319,24 +319,28 @@ def test_records_failing_beyond_eventdate_are_exported_not_repaired(spark, tmp_p
 
 
 def test_run_pipeline_schedules_zero_jobs(spark, raw_dir):
-    """With both dates given and driver-side polygons, building the
-    ingest lineage runs no Spark job: every action waits for a sink."""
+    """With driver-side polygons, building the ingest lineage runs no
+    Spark job, whether the dates are given or open: every action waits
+    for a sink, and open bounds wait for their first read."""
     import numpy as np
 
     from whale_sightings_spark.operators.spatial import parse_wkt_polygon
 
     oceans = [(name, np.array(parse_wkt_polygon(w))) for name, w in OCEANS_WKT]
-    ctx = PipelineContext(whale="beluga_whale", startdate="1800-01-01",
-                          enddate="1999-12-31", data_dir=raw_dir)
     sc = spark.sparkContext
-    group = "lazy-run-pipeline"
-    sc.setJobGroup(group, "run_pipeline builds its lineage")
-    try:
-        run_pipeline(spark, ctx, oceans)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc._jsc.clearJobGroup()
-    assert len(jobs) == 0, f"run_pipeline scheduled {len(jobs)} Spark jobs"
+    for startdate, enddate in (("1800-01-01", "1999-12-31"), (None, None)):
+        ctx = PipelineContext(whale="beluga_whale", startdate=startdate,
+                              enddate=enddate, data_dir=raw_dir)
+        group = f"lazy-run-pipeline-{startdate}"
+        sc.setJobGroup(group, "run_pipeline builds its lineage")
+        try:
+            run_pipeline(spark, ctx, oceans)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert len(jobs) == 0, (
+            f"run_pipeline ({startdate}, {enddate}) scheduled {len(jobs)} Spark jobs"
+        )
 
 
 def test_cleaned_lineage_optimizes_without_constraint_inference(spark, result):

@@ -78,3 +78,29 @@ def test_every_query_has_entry():
     # keep that set deliberately small and known
     no_oracle = set(QUERIES) - set(ORACLE_SQL)
     assert all(n.startswith(("stream_", "ann_", "minhash_", "simhash_")) for n in no_oracle), no_oracle
+
+
+def test_q40_hour_frame_keeps_sub_second_precision(spark, tmp_path):
+    """Two events 3600.8 s apart fall outside each other's one-hour
+    RANGE frame, though truncating both to whole seconds puts them
+    3600 s apart, inside it."""
+    con = duckdb.connect()
+    path = tmp_path / "events.parquet"
+    con.execute(
+        f"""COPY (
+            SELECT event_id::BIGINT AS event_id, ts,
+                   user_id::BIGINT AS user_id, event_type,
+                   value::DOUBLE AS value
+            FROM (VALUES
+                (0, TIMESTAMP '2024-01-01 00:00:00.1', 0, 'view', 1.0),
+                (1, TIMESTAMP '2024-01-01 01:00:00.9', 0, 'click', 2.0),
+                (2, TIMESTAMP '2024-01-02 00:00:00.5', 10, 'view', 3.0),
+                (3, TIMESTAMP '2024-01-02 00:59:59.9', 10, 'buy', 4.0)
+            ) AS t(event_id, ts, user_id, event_type, value)
+        ) TO '{path}' (FORMAT parquet)"""
+    )
+    con.execute(f"CREATE VIEW events AS SELECT *, '{{}}' AS props FROM '{path}'")
+    rows = {r["event_id"]: r for r in QUERIES["q40_moving_avg"](spark, str(tmp_path)).collect()}
+    assert (rows[1]["avg_1h"], rows[1]["n_1h"]) == (2.0, 1)
+    assert (rows[3]["avg_1h"], rows[3]["n_1h"]) == (3.5, 2)
+    run_compare(spark, con, "q40_moving_avg", str(tmp_path))

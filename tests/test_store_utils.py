@@ -199,6 +199,16 @@ def test_reap_removes_dead_pid_staging_only(tmp_path):
     assert not dead.exists()
 
 
+def test_reap_removes_pid_zero_staging(tmp_path):
+    """`.tmp.0` names no builder: kill(0, 0) would signal our own
+    process group and read as alive, so it must be reaped."""
+    zero = tmp_path / "ivfpq_v2_123.tmp.0"
+    zero.mkdir()
+    (zero / "part-0.parquet").write_bytes(b"x")
+    assert reap_dead_staging(str(tmp_path)) == [zero.name]
+    assert not zero.exists()
+
+
 def test_reap_missing_root_is_noop(tmp_path):
     assert reap_dead_staging(str(tmp_path / "absent")) == []
 

@@ -20,6 +20,19 @@ from whale_sightings_spark.streaming.events import (
 )
 
 
+def _id_splits(docs, *qs):
+    """doc_id cut points at quantiles ``qs`` of the corpus: ids below
+    the first are history, each later range is one delta. Every delta
+    range must hold rows, so the ingest under test has something to
+    fold in at any scale."""
+    cuts = [int(v) for v in docs.approxQuantile("doc_id", list(qs), 0.0)]
+    ids = F.col("doc_id")
+    for lo, hi in zip(cuts, cuts[1:] + [None]):
+        rng = ids >= lo if hi is None else (ids >= lo) & (ids < hi)
+        assert docs.filter(rng).count() > 0, (lo, hi)
+    return cuts
+
+
 @pytest.fixture(scope="module")
 def events_dir(spark, sf_dir, tmp_path_factory):
     """Replay zone: several files so maxFilesPerTrigger=1 yields a
@@ -1113,14 +1126,13 @@ def test_streaming_shingle_index_ingest_full_loop(spark, sf_dir, tmp_path_factor
         streaming_shingle_index_ingest,
     )
 
-    split = 700
     base = tmp_path_factory.mktemp("shingle_ingest")
     docs = load_table(spark, sf_dir, "documents")
+    split, mid = _id_splits(docs, 0.7, 0.85)
     art = str(base / "index")
     SH.build_shingle_artifact(docs.filter(F.col("doc_id") < split), art)
 
     docs_dir = str(base / "deltas")
-    mid = split + 100
     docs.filter(
         (F.col("doc_id") >= split) & (F.col("doc_id") < mid)
     ).coalesce(1).write.parquet(docs_dir, mode="append")
@@ -1183,14 +1195,13 @@ def test_streaming_lm_ingest_full_loop(spark, sf_dir, tmp_path_factory):
     from whale_sightings_spark.operators import ngram_lm as LM
     from whale_sightings_spark.streaming.events import streaming_lm_ingest
 
-    split = 700
     base = tmp_path_factory.mktemp("lm_ingest")
     docs = load_table(spark, sf_dir, "documents")
+    split, mid = _id_splits(docs, 0.7, 0.85)
     art = str(base / "lm")
     LM.build_lm_artifact(docs.filter(F.col("doc_id") < split), art)
 
     docs_dir = str(base / "deltas")
-    mid = split + 100
     docs.filter(
         (F.col("doc_id") >= split) & (F.col("doc_id") < mid)
     ).coalesce(1).write.parquet(docs_dir, mode="append")
@@ -1447,13 +1458,12 @@ def test_shingle_compaction_preserves_readers_and_defrags(
         streaming_shingle_index_ingest,
     )
 
-    split = 700
     base = tmp_path_factory.mktemp("shingle_compact")
     docs = load_table(spark, sf_dir, "documents")
+    split, mid = _id_splits(docs, 0.7, 0.85)
     art = str(base / "index")
     SH.build_shingle_artifact(docs.filter(F.col("doc_id") < split), art)
     docs_dir = str(base / "deltas")
-    mid = split + 100
     docs.filter(
         (F.col("doc_id") >= split) & (F.col("doc_id") < mid)
     ).coalesce(1).write.parquet(docs_dir, mode="append")
@@ -1512,9 +1522,9 @@ def test_shingle_torn_ingest_batch_is_invisible_and_replay_regenerates(
         streaming_shingle_index_ingest,
     )
 
-    split = 800
     base = tmp_path_factory.mktemp("shingle_torn")
     docs = load_table(spark, sf_dir, "documents")
+    (split,) = _id_splits(docs, 0.8)
     art = str(base / "index")
     SH.build_shingle_artifact(docs.filter(F.col("doc_id") < split), art)
     n_ids = SH.stored_doc_ids(spark, art).count()

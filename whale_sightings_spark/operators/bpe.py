@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from whale_sightings_spark.session import barrier
+
 #: merge-table size (rounds of training); vocab cap bounds training
 #: cost on open vocabularies — words beyond the cap still ENCODE via
 #: the trained merges' char fallback (see bpe_fertility)
@@ -133,8 +135,8 @@ def bpe_train(docs: DataFrame, rounds: int = BPE_ROUNDS):
     """K rounds of (pair-count -> argmax -> apply); returns
     (merge list [(round, left, right, merged, count)], final symbol
     frame). The per-round argmax is a 1-row TakeOrdered collect; the
-    symbol frame is localCheckpoint'ed per round so lineage stays flat
-    across rounds (the q112 iterative-operator convention)."""
+    symbol frame goes behind a ``barrier`` per round so lineage stays
+    flat across rounds (the q112 iterative-operator convention)."""
     return bpe_train_from_dict(word_dict(docs), rounds)
 
 
@@ -144,7 +146,7 @@ def bpe_train_from_dict(wd: DataFrame, rounds: int = BPE_ROUNDS):
     aggregates to exactly ``word_dict``'s output, so the trained
     merges are identical to the batch operator's. ``wd`` must already
     carry the deterministic top-cap ordering contract."""
-    syms = _char_rows(wd).localCheckpoint()
+    syms = barrier(_char_rows(wd))
     merges: list[tuple[int, str, str, str, int]] = []
     for r in range(1, rounds + 1):
         top = (
@@ -157,7 +159,7 @@ def bpe_train_from_dict(wd: DataFrame, rounds: int = BPE_ROUNDS):
             break
         a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
         merges.append((r, a, b, a + b, cnt))
-        syms = _apply_merge(syms, a, b).localCheckpoint()
+        syms = barrier(_apply_merge(syms, a, b))
     return merges, syms
 
 
@@ -408,14 +410,9 @@ def bpe_apply_merges(
     zero training jobs. ``merges`` is [(left_sym, right_sym), ...] in
     round order (collect the K-row stored merge table to get it — a
     bounded, sanctioned collect)."""
-    # eager=False (r13): the serve path has NO per-round collect, so
-    # the whole K-pass chain materializes inside the consumer's one
-    # action — K+1 blocking jobs per invocation become zero
-    # (interleaved A/B on q203: wall-neutral, 9 fewer jobs). Each
-    # checkpoint still truncates the Catalyst plan (LogicalRDD leaf).
-    syms = _char_rows(wd).localCheckpoint(eager=False)
+    syms = barrier(_char_rows(wd))
     for a, b in merges:
-        syms = _apply_merge(syms, a, b).localCheckpoint(eager=False)
+        syms = barrier(_apply_merge(syms, a, b))
     return syms
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from whale_sightings_spark.functions import text as TX
 from whale_sightings_spark.functions.hashing import hash60, hash60_sql
+from whale_sightings_spark.session import barrier
 
 #: weak-label threshold on the composite quality score: ~55% positive
 #: at the driver's scale factors, so confusion cells stay non-trivial.
@@ -110,9 +111,8 @@ def nb_train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         .filter(F.col("c1") + F.col("c0") >= NB_MIN_COUNT)
         # referenced by both the totals agg and the llr projection —
         # each would replay the corpus token agg (no exchange reuse:
-        # the two subtrees prune differently). Vocab-scale, lineage
-        # ends in the shuffle agg — race-safe lazy barrier (r13)
-        .localCheckpoint(eager=False)
+        # the two subtrees prune differently)
+        .transform(barrier)
     )
     tot = vocab.agg(
         F.sum("c1").alias("n1"),

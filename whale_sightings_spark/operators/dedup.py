@@ -40,6 +40,7 @@ from whale_sightings_spark.functions.text import (
     shingles_from_tokens,
     tokens,
 )
+from whale_sightings_spark.session import barrier
 
 #: shingle width for MinHash / Jaccard
 SHINGLE_N = 3
@@ -159,13 +160,11 @@ def ngram_jaccard_pairs(
     if pairs is None:
         pairs = _shingle_docs(docs)
     # referenced once per pair side (sa, sb) — each reference would
-    # replay the postings scan + agg. Per-doc-count-scale (one short
-    # row per doc, far smaller than the postings it aggregates);
-    # lineage ends in the shuffle agg — race-safe lazy barrier (r13)
+    # replay the postings scan + agg
     sizes = (
         pairs.groupBy("doc_id")
         .agg(F.count("*").alias("n_shingles"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
 
     # the shingle inverted index is a banded table: group each shingle's
@@ -269,16 +268,8 @@ def minhash_incremental_pairs(
     (doc_new, doc_hist, jaccard >= JACCARD_THRESHOLD).
     """
     # one banding pass over the corpus, split AFTER materialization —
-    # history and batch otherwise each re-tokenize/re-hash their half.
-    # Explicit MEMORY_AND_DISK (ADVICE r9): the pinned blocks are
-    # corpus-scale, so they must spill rather than crowd executor
-    # memory at larger SFs; lineage truncation is kept (a persist
-    # would re-run the banding per consumer on block eviction)
-    from pyspark import StorageLevel
-
-    banded_all = _banded_minhash(docs).localCheckpoint(
-        storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    # history and batch otherwise each re-tokenize/re-hash their half
+    banded_all = barrier(_banded_minhash(docs))
     hb = banded_all.filter(F.col("doc_id") < split_id)
     bb = banded_all.filter(F.col("doc_id") >= split_id)
     kept = (
@@ -304,15 +295,14 @@ def minhash_incremental_pairs(
     # per conjunct.
     # referenced once per pair side — each reference would replay the
     # postings scan + collect_list agg (no exchange reuse: the sides
-    # prune differently). Lineage ends in the shuffle agg — race-safe
-    # lazy barrier (r13)
+    # prune differently)
     arrs = (
         pairs.groupBy("doc_id")
         .agg(
             F.collect_list("shingle").alias("shs"),
             F.count("*").alias("n_shingles"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     j = cands.join(
         arrs.select(
@@ -369,17 +359,13 @@ def minhash_estimate_audit(
     with the persisted shingle index's df-capped posting table
     (round 9 — the q14 serve convention).
     """
-    from pyspark import StorageLevel
-
     staged = (
         _shingled(docs.filter(F.size(tokens(F.col("text"))) >= SHINGLE_N))
         .select("doc_id", F.transform("shingles", hash60).alias("hashed"))
         .select("doc_id", minhash_signature_from_hashes(F.col("hashed")).alias("sig"))
         # three consumers (banding + both signature sides of the
-        # estimate join) — materialize the signature pass once, at an
-        # explicit spillable level (ADVICE r9: the signature table is
-        # corpus-scale; it must not pin executor memory at larger SFs)
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        # estimate join) — the signature pass runs once
+        .transform(barrier)
     )
     banded = staged.select("doc_id", F.explode(band_keys(F.col("sig"))).alias("band"))
     cands = _bucket_candidate_pairs(banded).distinct()
@@ -408,15 +394,14 @@ def minhash_estimate_audit(
     # (5 post-candidate joins -> 3).
     # referenced once per pair side — each reference would replay the
     # postings scan + collect_list agg (no exchange reuse: the sides
-    # prune differently). Lineage ends in the shuffle agg — race-safe
-    # lazy barrier (r13)
+    # prune differently)
     arrs = (
         pairs.groupBy("doc_id")
         .agg(
             F.collect_list("shingle").alias("shs"),
             F.count("*").alias("n_shingles"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     n_common = F.size(F.array_intersect("shs_a", "shs_b"))
     exact = n_common / (
@@ -521,22 +506,16 @@ def dedup_components(pairs: DataFrame, iterations: int = COMPONENT_ITERATIONS) -
     ("k-hop min label") keeps the plan static and the oracle equivalent.
     Returns (doc_id, label).
     """
-    from pyspark import StorageLevel
-
     # the pair generator upstream (LSH banding + verification) is the
     # expensive lineage here, and `directed` fans out into FIVE scans
     # below (both edge directions, twice inside the node-distinct, the
-    # self-loop branch). A lazy persist is NOT enough: the whole
-    # fixed-k composition materializes in ONE job, whose branch stages
-    # race to fill the cache and each re-run the generator (round 3
-    # measured q29 at 4.3x cold vs steady). The eager localCheckpoint
-    # runs the generator exactly once, before any branching — the
-    # operators.graphs.symmetric_edges pattern. The pair set itself is
-    # corpus-scale-independent (candidates only), so materializing it
-    # is cheap at any SF.
+    # self-loop branch); without the barrier the branch stages of the
+    # one fixed-k job each re-run the generator (round 3 measured q29
+    # at 4.3x cold vs steady). The pair set is candidates only, so
+    # materializing it is cheap at any SF.
     directed = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).localCheckpoint()
+    ).transform(barrier)
     nodes = (
         directed.select(F.col("src").alias("v"))
         .unionByName(directed.select(F.col("dst").alias("v")))
@@ -553,15 +532,11 @@ def dedup_components(pairs: DataFrame, iterations: int = COMPONENT_ITERATIONS) -
         .unionByName(nodes.select(F.col("v").alias("src"), F.col("v").alias("dst")))
     )
     # iterative working set: without materialization every round
-    # re-derives the edge union — standard practice for iterative graph
-    # algorithms on Spark. The edge set is candidate pairs only, far
-    # smaller than the corpus. Hash-partitioning on dst BEFORE the
-    # checkpoint means the materialized scan reports that
+    # re-derives the edge union. Hash-partitioning on dst BEFORE the
+    # barrier means the materialized scan reports that
     # outputPartitioning, so every round's join reshuffles only the
-    # (small) labels side, never the edges. Eager (localCheckpoint,
-    # not persist) because the k lazily-composed rounds materialize in
-    # one job whose round stages would otherwise race to fill a cache.
-    edges = edges.repartition("dst").localCheckpoint()
+    # (small) labels side, never the edges.
+    edges = barrier(edges.repartition("dst"))
     labels = nodes.select(
         F.col("v").alias("doc_id"), F.col("v").alias("label")
     )
@@ -593,20 +568,16 @@ def dedup_components_converged(
     sum(label) is strictly decreasing until the fixpoint and one scalar
     aggregate per round detects it (a bounded driver value, same class
     as the clean.py bounds probes — not a row collect).
-    ``localCheckpoint`` truncates lineage each round so round N's plan
+    A ``barrier`` truncates lineage each round so round N's plan
     never embeds rounds 1..N-1 (the standard Spark iterative-graph
     pattern; GraphFrames checkpoints the same way). ``max_rounds`` is
     the runaway backstop.
     Returns (doc_id, label) with label = min doc_id of the component.
     """
-    from pyspark import StorageLevel
-
-    # eager checkpoint before branching (see dedup_components): the
-    # first action otherwise races the generator across the node /
-    # edge-direction branches
+    # barrier before branching (see dedup_components)
     directed = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).localCheckpoint()
+    ).transform(barrier)
     nodes = (
         directed.select(F.col("src").alias("v"))
         .unionByName(directed.select(F.col("dst").alias("v")))
@@ -618,14 +589,14 @@ def dedup_components_converged(
         )
         .unionByName(nodes.select(F.col("v").alias("src"), F.col("v").alias("dst")))
     )
-    edges = edges.repartition("dst").persist(StorageLevel.MEMORY_AND_DISK)
+    edges = edges.repartition("dst").persist()
     # the probe sums into decimal(38,0): Spark's non-ANSI long sum wraps
     # silently, and at extreme id scales a wrapped sum could in theory
     # alias across rounds and terminate the loop early
     _label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
     labels = nodes.select(
         F.col("v").alias("doc_id"), F.col("v").alias("label")
-    ).localCheckpoint()
+    ).transform(barrier)
     prev_sum = labels.agg(_label_sum).collect()[0][0]
     for _ in range(max_rounds):
         stepped = (
@@ -644,12 +615,12 @@ def dedup_components_converged(
         labels = (
             stepped.join(jump, stepped.label == jump.jv)
             .select("doc_id", F.col("jl").alias("label"))
-        ).localCheckpoint()
+        ).transform(barrier)
         cur_sum = labels.agg(_label_sum).collect()[0][0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    # labels is localCheckpoint-materialized: the persisted working
+    # labels sits behind a barrier: the persisted working
     # sets are dead weight now — free them so repeated invocations in
     # one session don't stack edge copies in the block manager
     edges.unpersist()
@@ -898,7 +869,6 @@ def compact_cluster_artifact(spark, artifact_dir: str) -> dict[str, int]:
         df = spark.read.parquet(live)
         if key == "merges":
             df = df.distinct()
-        df = df.localCheckpoint()
         if key in ("pairs", "bands", "ebands"):
             part = {"pairs": "pbucket", "bands": "bucket", "ebands": "ebucket"}[key]
             swap_table(
@@ -980,7 +950,7 @@ def probe_hist_edges(
     shared front half of `incremental_cluster_assign` and the
     read-only `degree_audit_batch`. The hot-band cap applies to
     HISTORY bucket sizes; a replayed doc that already sits in the
-    index is guarded from pairing with itself. Eagerly checkpointed —
+    index is guarded from pairing with itself. Behind a barrier —
     every caller fans it into >= 2 consumers."""
     bb = simhash_banded(batch_sigs)
     kept = (
@@ -1009,7 +979,7 @@ def probe_hist_edges(
         .withColumn("hamming", hamming60(F.col("sh_n"), F.col("sh_h")))
         .filter(F.col("hamming") <= HAMMING_THRESHOLD)
         .select("doc_new", "doc_hist", "hamming")
-        .localCheckpoint()
+        .transform(barrier)
     )
 
 
@@ -1052,7 +1022,7 @@ def degree_audit_batch(
       drift audit bounds what slips through.
     """
     hist_edges = probe_hist_edges(batch_sigs, stored_bands)
-    batch_edges = simhash_pairs_from_sigs(batch_sigs).localCheckpoint()
+    batch_edges = simhash_pairs_from_sigs(batch_sigs)
     edges = (
         hist_edges.select(
             F.least("doc_new", "doc_hist").alias("doc_a"),
@@ -1060,7 +1030,7 @@ def degree_audit_batch(
         )
         .unionByName(batch_edges.select("doc_a", "doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
-        .localCheckpoint()  # feeds deltas and the summary count
+        .transform(barrier)  # feeds deltas and the summary count
     )
     new_ids = batch_sigs.select(F.col("doc_id").alias("v")).distinct()
     deltas = (
@@ -1161,7 +1131,7 @@ def incremental_cluster_assign(
     is exactly what the rebuild audit measures).
     """
     hist_edges = probe_hist_edges(batch_sigs, stored_bands)
-    batch_edges = simhash_pairs_from_sigs(batch_sigs).localCheckpoint()
+    batch_edges = barrier(simhash_pairs_from_sigs(batch_sigs))
     # history endpoints enter the glue graph AS THEIR CLUSTER LABEL
     # (coalesce covers historical singletons), so min-label propagation
     # over {batch ids} ∪ {touched labels} lands each component on the

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from whale_sightings_spark.session import barrier
+
 
 def ks_report(d: DataFrame) -> DataFrame:
     """Per-source two-sample Kolmogorov-Smirnov report over a
@@ -36,12 +38,11 @@ def ks_report(d: DataFrame) -> DataFrame:
     # totals, the global length histogram and the grand total are its
     # exact integer roll-ups (groupBy keeps NULL groups, so the sums
     # partition count(*) exactly). The barrier stops the three roll-ups
-    # replaying the corpus agg (race-safe: shuffle-agg lineage). Was
-    # four corpus scans (r13).
+    # replaying the corpus agg. Was four corpus scans (r13).
     cnt = (
         d.groupBy("source", "n_chars")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     tot = cnt.groupBy("source").agg(F.sum("c").alias("ns"))
     grand = cnt.agg(F.sum("c").alias("n"))

@@ -32,6 +32,7 @@ from whale_sightings_spark.operators.similarity import (
     cosine,
     cosine_sql,
 )
+from whale_sightings_spark.session import barrier
 
 # ---------------------------------------------------------------------------
 # semantic eval-contamination screen
@@ -224,10 +225,9 @@ def truncated_dim_recall(embeddings: DataFrame) -> DataFrame:
     WindowGroupLimit window partitioned by (width, query). The slice
     is applied BEFORE the dot product so a production run reading a
     dim-pruned column scans less, not more. The tiny per-width top-k
-    table (|widths| x |queries| x k rows) sits behind a lazy
-    localCheckpoint barrier so the exact/approx self-join replays a
-    local table, not the corpus scan (the lineage ends in the window
-    exchange, so the lazy form is race-safe). Output is
+    table (|widths| x |queries| x k rows) sits behind a barrier so the
+    exact/approx self-join replays a local table, not the corpus scan.
+    Output is
     |TRUNC_DIMS| x |queries| rows.
     """
     q = embeddings.filter(F.col("vec_id") < TRUNC_QUERIES).select(
@@ -264,7 +264,7 @@ def truncated_dim_recall(embeddings: DataFrame) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TRUNC_K)
         .select("w", "query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     exact = topk.filter(F.col("w") == 0).withColumn(
         "trunc_dim",

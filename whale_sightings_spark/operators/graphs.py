@@ -9,8 +9,8 @@ for cluster-representative selection and duplication-shape audits.
 Scale shapes (the edge set is candidate pairs only — corpus-scale
 independent; these shapes keep it that way):
 
-- every operator materializes the pair generator EXACTLY ONCE with an
-  eager ``localCheckpoint`` before fanning out into nodes / degrees /
+- every operator materializes the pair generator EXACTLY ONCE behind
+  a ``barrier`` before fanning out into nodes / degrees /
   iterations. Branching a merely-persisted frame re-runs the generator
   per branch inside the first job — observed as a 5x cold-start
   multiplier on q106 in round 3 (same lesson as
@@ -21,7 +21,7 @@ independent; these shapes keep it that way):
   probe class), so no per-round distinct re-aggregation;
 - convergence mode tracks the L1 delta between successive rank
   vectors — one scalar aggregate per round — and truncates lineage
-  per round with ``localCheckpoint`` (the standard Spark
+  per round with a ``barrier`` (the standard Spark
   iterative-graph pattern);
 - the triangle census orients edges LOW-degree -> HIGH-degree (ties
   by id) before the two-join wedge closure. Orientation bounds every
@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from whale_sightings_spark.session import barrier
 
 #: damping for the fixed-round registered query (q106) — the classic
 #: PageRank value.
@@ -57,29 +59,25 @@ PR_MAX_ROUNDS = 60
 
 def symmetric_edges(pairs: DataFrame) -> DataFrame:
     """Both directions of the undirected pair set as ``(src, dst)``,
-    src-partitioned and eagerly materialized (localCheckpoint) so the
-    pair generator's lineage runs once, before any branching."""
+    src-partitioned behind a ``barrier`` so the pair generator's
+    lineage runs once, before any branching."""
     directed = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     edges = directed.unionByName(
         directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # eager=False (r13): the repartition shuffle behind the
-    # checkpoint is stage-shared across consumers, so the lazy fill
-    # races only over the post-shuffle scan; one blocking job less
-    # per invocation.
-    return edges.repartition("src").localCheckpoint(eager=False)
+    return barrier(edges.repartition("src"))
 
 
 def _pagerank_setup(pairs: DataFrame):
-    """Shared PageRank scaffolding: checkpointed degree-annotated
+    """Shared PageRank scaffolding: barriered degree-annotated
     edges, node count scalar, uniform initial ranks. Every node of the
     symmetric edge set has degree >= 1 by construction (both endpoints
     of every pair appear as src), so no dangling-mass redistribution
     term is needed — asserted in tests/test_graphs.py.
 
-    Round 12: the source degree is folded INTO the checkpointed edge
+    Round 12: the source degree is folded INTO the barriered edge
     table once (src, dst, d) instead of re-joined every round — the
     per-round plan drops from two joins to one. The aggregation still
     computes ``sum(pr / d)`` with the same division, so the float
@@ -93,9 +91,9 @@ def _pagerank_setup(pairs: DataFrame):
         edges.join(deg, edges.src == deg.dv)
         .select("src", "dst", "d")
         .repartition("src")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
-    # bounded driver scalar (node count); its job fills the checkpoint
+    # bounded driver scalar (node count)
     nodes = wedges.select(F.col("src").alias("v")).distinct()
     n = nodes.count()
     pr = nodes.select("v", F.lit(1.0 / n).alias("pr"))
@@ -141,7 +139,7 @@ def pagerank_converged(
     ~log(tol)/log(damp) rounds; ``max_rounds`` is the runaway backstop.
 
     Rounds execute in blocks of ``check_every``: one job runs the block
-    of joins+aggs, then ONE ``localCheckpoint`` truncates lineage and
+    of joins+aggs, then ONE ``barrier`` truncates lineage and
     ONE scalar delta probe tests convergence. Per-round driver actions
     are what dominate an iterative loop on small per-round state
     (scheduler latency, not compute), so block-checking cuts wall time
@@ -149,14 +147,14 @@ def pagerank_converged(
     rounds past convergence — which only push the ranks CLOSER to the
     fixpoint (and to the unrolled oracle). Returns (v, pr)."""
     wedges, n, pr = _pagerank_setup(pairs)
-    pr = pr.localCheckpoint(eager=False)  # the first delta probe fills it
+    pr = barrier(pr)
     rounds = 0
     while rounds < max_rounds:
         new = pr
         for _ in range(min(check_every, max_rounds - rounds)):
             new = _pagerank_round(wedges, n, new, damp)
             rounds += 1
-        new = new.localCheckpoint(eager=False)  # delta collect fills it
+        new = barrier(new)
         delta = (
             new.join(pr.withColumnRenamed("pr", "po"), "v")
             .agg(F.sum(F.abs(F.col("pr") - F.col("po"))))
@@ -204,7 +202,7 @@ def triangle_census(pairs: DataFrame) -> DataFrame:
     a->b->c closed by a->c, so the wedge join + closure join count each
     triangle once. The count is orientation-invariant — the oracle can
     (and does) use id-orientation."""
-    e = orient_by_degree(pairs).localCheckpoint(eager=False)
+    e = barrier(orient_by_degree(pairs))
     wedges = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e1.b") == F.col("e2.a"))
@@ -247,7 +245,7 @@ def kcore_peel(
     min-id dedup handles badly; leaves peel off in round 1).
 
     Scale shape: the edge set materializes ONCE (symmetric_edges'
-    eager localCheckpoint — the q106 lesson) and never grows; each
+    barrier — the q106 lesson) and never grows; each
     round is two alive-set semi-joins + one src-keyed degree agg, all
     hash-partitioned on node id; the alive set only shrinks. Round
     count is FIXED so the plan is static and the oracle unrolls (the
@@ -255,7 +253,7 @@ def kcore_peel(
     convergence-probe allowance).
     """
     edges = symmetric_edges(pairs)
-    alive = edges.select(F.col("src").alias("v")).distinct().localCheckpoint()
+    alive = edges.select(F.col("src").alias("v")).distinct().transform(barrier)
     counts = [alive.count()]
     for _r in range(1, rounds + 1):
         av_src = alive.select(F.col("v").alias("src"))
@@ -269,7 +267,7 @@ def kcore_peel(
         alive = (
             deg.filter(F.col("d") >= k)
             .select(F.col("src").alias("v"))
-            .localCheckpoint()
+            .transform(barrier)
         )
         counts.append(alive.count())
     rows = [

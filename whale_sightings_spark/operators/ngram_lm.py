@@ -652,11 +652,7 @@ def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
             t = os.path.join(b, key)
             if os.path.isdir(t):
                 df = df.unionByName(spark.read.parquet(t))
-        merged = (
-            df.groupBy(*keys)
-            .agg(F.sum(val).cast("bigint").alias(val))
-            .localCheckpoint()
-        )
+        merged = df.groupBy(*keys).agg(F.sum(val).cast("bigint").alias(val))
         swap_table(
             paths[key],
             lambda staging, m=merged: m.write.mode("overwrite").parquet(
@@ -669,7 +665,7 @@ def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
         ("doc_big", _DOC_BIG_SCHEMA),
         ("doc_tri", _DOC_TRI_SCHEMA),
     ):
-        df = read_store_table(spark, artifact_dir, key, schema).localCheckpoint()
+        df = read_store_table(spark, artifact_dir, key, schema)
         swap_table(
             paths[key],
             lambda staging, df=df: (
@@ -680,14 +676,14 @@ def compact_lm_store(spark: SparkSession, artifact_dir: str) -> dict[str, int]:
             ),
         )
     # the doc-id manifest: de-duplicate base + batches
-    ids = stored_doc_ids(spark, artifact_dir).distinct().localCheckpoint()
+    ids = stored_doc_ids(spark, artifact_dir).distinct()
     swap_table(
         paths["doc_ids"],
         lambda staging: ids.write.mode("overwrite").parquet(staging),
     )
     # per-doc lengths: defrag (rows are per-doc and disjoint across
     # batches — a plain rewrite, no re-aggregate)
-    dlen = stored_doc_len(spark, artifact_dir).localCheckpoint()
+    dlen = stored_doc_len(spark, artifact_dir)
     swap_table(
         paths["doc_len"],
         lambda staging: dlen.write.mode("overwrite").parquet(staging),

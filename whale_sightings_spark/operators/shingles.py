@@ -297,11 +297,7 @@ def compact_shingle_store(
     with open(sentinel, "w") as fh:
         fh.write(str(os.getpid()))
     # src5 FIRST — it carries the completeness marker
-    src5 = (
-        read_store_table(spark, artifact_dir, "src5", _SRC5_SCHEMA)
-        .distinct()
-        .localCheckpoint()
-    )
+    src5 = read_store_table(spark, artifact_dir, "src5", _SRC5_SCHEMA).distinct()
     swap_table(
         _table_path(artifact_dir, "src5"),
         lambda staging: src5.write.mode("overwrite").parquet(staging),
@@ -310,15 +306,12 @@ def compact_shingle_store(
         read_store_table(spark, artifact_dir, "df", _DF_SCHEMA)
         .groupBy("shingle")
         .agg(F.sum("df").cast("bigint").alias("df"))
-        .localCheckpoint()
     )
     swap_table(
         _table_path(artifact_dir, "df"),
         lambda staging: dfc.write.mode("overwrite").parquet(staging),
     )
-    post = read_store_table(
-        spark, artifact_dir, "postings", _POSTINGS_SCHEMA
-    ).localCheckpoint()
+    post = read_store_table(spark, artifact_dir, "postings", _POSTINGS_SCHEMA)
     swap_table(
         _table_path(artifact_dir, "postings"),
         lambda staging: (
@@ -328,18 +321,12 @@ def compact_shingle_store(
             .parquet(staging)
         ),
     )
-    stats = read_store_table(
-        spark, artifact_dir, "doc_stats", _DOC_STATS_SCHEMA
-    ).localCheckpoint()
+    stats = read_store_table(spark, artifact_dir, "doc_stats", _DOC_STATS_SCHEMA)
     swap_table(
         _table_path(artifact_dir, "doc_stats"),
         lambda staging: stats.write.mode("overwrite").parquet(staging),
     )
-    ids = (
-        read_store_table(spark, artifact_dir, "doc_ids", _DOC_IDS_SCHEMA)
-        .distinct()
-        .localCheckpoint()
-    )
+    ids = read_store_table(spark, artifact_dir, "doc_ids", _DOC_IDS_SCHEMA).distinct()
     swap_table(
         _table_path(artifact_dir, "doc_ids"),
         lambda staging: ids.write.mode("overwrite").parquet(staging),

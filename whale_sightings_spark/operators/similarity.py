@@ -27,6 +27,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from whale_sightings_spark.session import barrier
+
 #: fixed seed for the LSH hyperplanes — regenerating them yields
 #: identical planes in the Spark op, the DuckDB oracle, and tests
 LSH_SEED = 1337
@@ -460,9 +462,7 @@ def _lloyd_codebook(
     # coarse-assign join — recomputing THAT per round would dominate
     # the training cost. (Persisting the sample is what MLlib's KMeans
     # does with its input via cache().)
-    train = sub.filter(F.col("vec_id") % train_mod == 0).localCheckpoint(
-        eager=False
-    )  # round 1's job fills it; rounds are driver-sequential
+    train = barrier(sub.filter(F.col("vec_id") % train_mod == 0))
     cb = seed if seed is not None else sub.filter(F.col("vec_id") < k).select(
         "s", F.col("vec_id").alias("cid"), F.col("subvec").alias("cvec")
     )
@@ -481,7 +481,7 @@ def _lloyd_codebook(
             )
         )
         # round 12 (guide §5 "driver should do almost no data work"):
-        # truncate each round's lineage with a localCheckpoint instead
+        # truncate each round's lineage with a barrier instead
         # of collect()+createDataFrame — same values (the means are
         # 6dp-rounded before use either way), but the codebook stays in
         # the JVM: no Python row serialization and no per-round plan
@@ -490,13 +490,7 @@ def _lloyd_codebook(
         cb = (
             cb.join(means, ["s", "cid"], "left")
             .select("s", "cid", F.coalesce("mvec", "cvec").alias("cvec"))
-            # eager=False (r13): no collect between rounds, so the
-            # whole Lloyd chain materializes in the first consumer
-            # action (interleaved A/B on q212+q155: lazy min 2.63 s
-            # vs eager 2.74 s); the Catalyst plan per round stays a
-            # LogicalRDD leaf either way, and the per-round blocking
-            # job is gone.
-            .localCheckpoint(eager=False)
+            .transform(barrier)
         )
     return cb
 
@@ -918,7 +912,7 @@ def _residual_pq_index(embeddings: DataFrame, split_id: int | None = None):
             F.col("cid").alias("cell"),
             F.zip_with("subvec", "cvec", lambda a, b: a - b).alias("rvec"),
         )
-        .localCheckpoint()
+        .transform(barrier)
     )
     rsub = _split_subspaces(res, "rvec", "vec_id")
     rtr = rsub if split_id is None else rsub.filter(F.col("vec_id") < split_id)
@@ -1589,7 +1583,7 @@ def mmr_topk(
     # r12 (guide §5 — the driver should run no per-round jobs): the
     # greedy used to run K-1 driver rounds of anti-join + broadcast
     # join + agg + window over the BOUNDED |Q|×pool frame, each round a
-    # localCheckpoint action — ~0.3 s of pure job overhead per round.
+    # blocking barrier — ~0.3 s of pure job overhead per round.
     # The frame is pool-bounded per query BY CONSTRUCTION, so the whole
     # greedy runs row-local instead: collect each query's pool into one
     # row (ordered by the rank-1 criterion), precompute the pool×pool

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from whale_sightings_spark.schemas import OCEAN_POLYGON_SCHEMA
+from whale_sightings_spark.session import barrier
 
 try:  # optional accelerator; container may not ship it
     import shapely  # type: ignore
@@ -276,12 +277,12 @@ def spatial_join_water_body_sedona(
     ).select("poly_id", "name", F.expr("ST_GeomFromWKT(wkt)").alias("geom"))
     # __rid keys the first-match window; monotonically_increasing_id
     # is nondeterministic across task retries/speculation, so the
-    # stamped frame is pinned BEFORE the join (ADVICE r9) — a lost
-    # block then fails the job instead of silently re-assigning ids
-    # mid-stage and duplicating/dropping rows at the rn==1 filter
+    # stamped frame is pinned BEFORE the join (ADVICE r9) so ids are not
+    # re-assigned mid-stage, duplicating/dropping rows at the rn==1
+    # filter
     pts = (
         df.withColumn("__rid", F.monotonically_increasing_id())
-        .localCheckpoint()
+        .transform(barrier)
         .withColumn(
             "__pt",
             F.expr(

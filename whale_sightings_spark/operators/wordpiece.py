@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from whale_sightings_spark.session import barrier
+
 #: max piece length (characters)
 WP_MAXP = 4
 #: multi-char vocabulary budget (singles ride for free)
@@ -60,10 +62,8 @@ def _words(docs: DataFrame) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("wcount"))
         # the word dictionary is referenced by every trainer stage
         # (candidates, both vocab branches, the segmenter) — without a
-        # barrier each reference replays the corpus explode+agg. Lazy
-        # localCheckpoint: dictionary-scale, lineage ends in the
-        # shuffle agg, so it is race-safe (r13; guide §2.4)
-        .localCheckpoint(eager=False)
+        # barrier each reference replays the corpus explode+agg
+        .transform(barrier)
     )
 
 
@@ -129,9 +129,8 @@ def wp_vocab(wd: DataFrame) -> DataFrame:
     forms) plus the deterministic top-WP_TOPV multi-char pieces by
     (cnt DESC, piece ASC)."""
     # piece-dictionary-scale, referenced by BOTH branches below (each
-    # would replay the double-explode over the word dict); lineage ends
-    # in the groupBy shuffle — race-safe lazy barrier
-    cand = wp_candidates(wd).localCheckpoint(eager=False)
+    # would replay the double-explode over the word dict)
+    cand = barrier(wp_candidates(wd))
     plen = F.length(F.regexp_replace(F.col("piece"), "^##", ""))
     singles = cand.filter(plen == 1)
     multi = (

@@ -5,14 +5,16 @@ Reference lifecycle (``main.py:33-50``): fetch -> validate -> clean ->
 load, eager and single-threaded with file checkpoints between stages.
 Here stages 2-4 are one Catalyst plan and building it runs no Spark
 job: actions happen only at the sinks, plus one bounds scan when the
-context leaves a start or end date open. The only wide operators are
-the dedup window, the per-file null-ID numbering window and the dim
-aggregations — every dim join broadcasts (SURVEY §7.0).
+context leaves a start or end date open and the caller reads a bound.
+The only wide operators are the dedup window, the per-file null-ID
+numbering window and the dim aggregations — every dim join broadcasts
+(SURVEY §7.0).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -61,8 +63,21 @@ class PipelineContext:
 class PipelineResult:
     cleaned: DataFrame
     unrepaired_errors: DataFrame
-    startdate: str | None
-    enddate: str | None
+    ctx: PipelineContext
+
+    @cached_property
+    def _bounds(self) -> tuple[str, str]:
+        # an open bound costs a run of the whole cleaning lineage, so
+        # it is derived on first read, not when the result is built
+        return get_start_and_end(self.cleaned, self.ctx.startdate, self.ctx.enddate)
+
+    @property
+    def startdate(self) -> str:
+        return self._bounds[0]
+
+    @property
+    def enddate(self) -> str:
+        return self._bounds[1]
 
 
 def clean_occurrences(
@@ -89,12 +104,10 @@ def clean_occurrences(
     if oceans is not None:
         merged = spatial_join_water_body(merged, oceans)
 
-    start, end = get_start_and_end(merged, ctx.startdate, ctx.enddate)
     return PipelineResult(
         cleaned=merged,
         unrepaired_errors=regroup_error_details(unrepaired),
-        startdate=start,
-        enddate=end,
+        ctx=ctx,
     )
 
 

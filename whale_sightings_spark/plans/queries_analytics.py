@@ -172,9 +172,10 @@ def q40_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (
         W.partitionBy("user_id")
         # ts loads as TIMESTAMP_NTZ; route through TIMESTAMP (identity
-        # under the UTC-pinned session) to get epoch seconds for the frame
-        .orderBy(F.col("ts").cast("timestamp").cast("long"))
-        .rangeBetween(-3600, 0)
+        # under the UTC-pinned session) to get epoch microseconds: whole
+        # seconds would pull an event 3600.8 s back into the frame
+        .orderBy(F.unix_micros(F.col("ts").cast("timestamp")))
+        .rangeBetween(-3_600_000_000, 0)
     )
     return ev.select(
         "event_id",

@@ -20,6 +20,7 @@ from whale_sightings_spark.functions import text as TX
 from whale_sightings_spark.functions.hashing import hash60, hash60_sql
 from whale_sightings_spark.plans.queries import register
 from whale_sightings_spark.schemas import load_table
+from whale_sightings_spark.session import barrier
 
 
 # ---------------------------------------------------------------------------
@@ -416,14 +417,14 @@ def q135_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_cur",
     )
     # 10-row bin table referenced by the totals and the psi terms —
-    # each replayed the corpus binning pass (race-safe lazy barrier)
+    # each replayed the corpus binning pass
     a = (
         binned.groupBy("bin")
         .agg(
             F.sum(F.when(F.col("is_cur"), 0).otherwise(1)).alias("n_ref"),
             F.sum(F.when(F.col("is_cur"), 1).otherwise(0)).alias("n_cur"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     t = a.agg(F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc"))
     pr = (F.col("n_ref") + 0.5) / (F.col("tr") + _PSI_BINS * 0.5)
@@ -597,7 +598,7 @@ def q195_transition_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # type^2-bounded, referenced four times (both margins, the grand
     # total, the lift join) — each replayed the corpus lag window +
-    # agg. Race-safe lazy barrier (shuffle-agg lineage)
+    # agg
     tr = (
         seq.filter(F.col("prev_type").isNotNull())
         .groupBy(
@@ -605,7 +606,7 @@ def q195_transition_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("dst_type"),
         )
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     src = tr.groupBy("src_type").agg(F.sum("n").alias("n_src"))
     dst = tr.groupBy("dst_type").agg(F.sum("n").alias("n_dst"))
@@ -690,15 +691,11 @@ def q196_interarrival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.lag(sec).over(W.partitionBy("user_id").orderBy("ts", "event_id"))
     ).cast("double")
     # referenced by the mean aggregate AND the binning pass — each
-    # would replay the corpus lag window. One double per event, so the
-    # barrier materializes spillable (race-safe: the lineage's last
-    # wide step is the window's user_id exchange)
-    from pyspark import StorageLevel
-
+    # would replay the corpus lag window
     g = (
         ev.select(gap.alias("gap_s"))
         .filter(F.col("gap_s").isNotNull())
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .transform(barrier)
     )
     m = g.agg(F.avg("gap_s").alias("mean_s"), F.count("*").alias("n"))
     binc = None
@@ -808,13 +805,13 @@ def q206_event_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every e-row lands in some (event_type, d) group — so the corpus
     # scans behind the three broadcast sides collapse into daily's one
     # aggregation (4 events scans -> 1; same rows, same integers). The
-    # lazy checkpoint is the optimizer BARRIER that keeps it one pass:
+    # barrier is also the optimizer barrier that keeps it one pass:
     # without it Catalyst collapses distinct-over-groupBy-keys back
     # into distinct-over-e and re-derives each side from the corpus.
     daily = (
         e.groupBy("event_type", "d")
         .agg(F.count("*").alias("y"))
-        .localCheckpoint(eager=False)  # types x days rows; agg-backed
+        .transform(barrier)  # types x days rows
     )
     m = daily.agg(F.min("d").alias("d0"))
     days = daily.select("d").distinct()
@@ -1079,13 +1076,13 @@ def q209_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every e-row lands in some (event_type, d) group — so the corpus
     # scans behind the three broadcast sides collapse into daily's one
     # aggregation (4 events scans -> 1; same rows, same integers). The
-    # lazy checkpoint is the optimizer BARRIER that keeps it one pass:
+    # barrier is also the optimizer barrier that keeps it one pass:
     # without it Catalyst collapses distinct-over-groupBy-keys back
     # into distinct-over-e and re-derives each side from the corpus.
     daily = (
         e.groupBy("event_type", "d")
         .agg(F.count("*").alias("y"))
-        .localCheckpoint(eager=False)  # types x days rows; agg-backed
+        .transform(barrier)  # types x days rows
     )
     m = daily.agg(F.min("d").alias("d0"))
     days = daily.select("d").distinct()
@@ -1524,13 +1521,13 @@ def q218_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every e-row lands in some (event_type, d) group — so the corpus
     # scans behind the three broadcast sides collapse into daily's one
     # aggregation (4 events scans -> 1; same rows, same integers). The
-    # lazy checkpoint is the optimizer BARRIER that keeps it one pass:
+    # barrier is also the optimizer barrier that keeps it one pass:
     # without it Catalyst collapses distinct-over-groupBy-keys back
     # into distinct-over-e and re-derives each side from the corpus.
     daily = (
         e.groupBy("event_type", "d")
         .agg(F.count("*").alias("y"))
-        .localCheckpoint(eager=False)  # types x days rows; agg-backed
+        .transform(barrier)  # types x days rows
     )
     m = daily.agg(F.min("d").alias("d0"))
     days = daily.select("d").distinct()
@@ -1630,12 +1627,12 @@ def q218_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q219_type_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     e = ev.select("event_type", F.col("ts").cast("date").alias("d"))
-    # r13: days/types derive from the tiny daily aggregate; the lazy
-    # checkpoint is the one-pass barrier (see q209)
+    # r13: days/types derive from the tiny daily aggregate; the
+    # barrier keeps it one pass (see q209)
     daily = (
         e.groupBy("event_type", "d")
         .agg(F.count("*").alias("y"))
-        .localCheckpoint(eager=False)  # types x days rows; agg-backed
+        .transform(barrier)  # types x days rows
     )
     days = daily.select("d").distinct()
     types = daily.select("event_type").distinct()

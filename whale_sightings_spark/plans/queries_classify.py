@@ -30,6 +30,7 @@ from whale_sightings_spark.operators import classify as CL
 from whale_sightings_spark.plans.queries import register
 from whale_sightings_spark.plans.store_utils import artifact_dir
 from whale_sightings_spark.schemas import load_table
+from whale_sightings_spark.session import barrier
 
 # ---------------------------------------------------------------------------
 # q226 — Naive Bayes weak-label distillation, held-out confusion per
@@ -167,7 +168,7 @@ def q227_auc_weak_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("y").cast("bigint").alias("n_pos"),
             F.sum(1 - F.col("y")).cast("bigint").alias("n_neg"),
         )
-        .localCheckpoint(eager=False)  # ≤256 rows; 3 consumers; agg-backed
+        .transform(barrier)  # ≤256 rows; 3 consumers
     )
     tot2 = hist.agg(
         F.sum("n_pos").alias("p"),
@@ -256,7 +257,7 @@ def q228_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         CL.weak_label(F.col("text")).alias("y"),
         *[x.alias(f"x{j + 1}") for j, x in enumerate(xs)],
         (~CL.is_held(F.col("doc_id"))).alias("is_train"),
-    ).localCheckpoint(eager=False)  # 6 GD collects + eval; step 1 fills it
+    ).transform(barrier)  # 6 GD collects + eval
     w = CL.logreg_fit(feats.filter("is_train"))
     z = (
         F.lit(w[0])
@@ -432,7 +433,7 @@ def q230_nb_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n"),
         F.round(F.avg("p"), 4).alias("confidence"),
         F.round(F.avg(F.col("y").cast("double")), 4).alias("observed_rate"),
-    ).localCheckpoint(eager=False)  # ≤10 rows; ECE side; agg-backed
+    ).transform(barrier)  # ≤10 rows; ECE side
     ece = cells.agg(
         F.round(
             F.sum(
@@ -545,7 +546,7 @@ def q235_gated_mixing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("kept"), F.col("n_toks")).otherwise(F.lit(0)))
         .cast("bigint")
         .alias("tok_kept"),
-    ).localCheckpoint(eager=False)  # source-sized; normalizer + output
+    ).transform(barrier)  # source-sized; normalizer + output
     z = per_src.agg(
         F.sum(F.pow(F.col("tok_kept"), F.lit(_MIX_ALPHA))).alias("z")
     )
@@ -632,7 +633,7 @@ def q238_nb_retrain_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("full_ok", F.col("c1f") + F.col("c0f") >= CL.NB_MIN_COUNT)
         .withColumn("hist_ok", F.col("c1h") + F.col("c0h") >= CL.NB_MIN_COUNT)
         .filter(F.col("full_ok") | F.col("hist_ok"))
-        .localCheckpoint(eager=False)  # vocab-sized; llr + summary; agg-backed
+        .transform(barrier)  # vocab-sized; llr + summary
     )
     tot = counts.agg(
         F.sum(F.when(F.col("full_ok"), F.col("c1f"))).alias("n1f"),
@@ -761,7 +762,7 @@ def q239_temperature_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(CL.is_held(F.col("doc_id"))),
         spark,
         _nb_artifact_dir(spark, sf_dir),
-    ).select("y", "score").localCheckpoint(eager=False)
+    ).select("y", "score").transform(barrier)
 
     # the fit itself is the shared build-time routine (one grid explode
     # + 8-group agg + 8-scalar collect) — q239 stays the AUDIT that the
@@ -1032,7 +1033,7 @@ def q242_selective_accuracy_curve(
         docs.filter(CL.is_held(F.col("doc_id"))),
         spark,
         _nb_artifact_dir(spark, sf_dir),
-    ).select("y", "score", "p_cal").localCheckpoint(eager=False)
+    ).select("y", "score", "p_cal").transform(barrier)
     conf = F.greatest(F.col("p_cal"), F.lit(1.0) - F.col("p_cal"))
     gridded = scored.select(
         "y",

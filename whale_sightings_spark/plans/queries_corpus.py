@@ -60,6 +60,7 @@ from whale_sightings_spark.operators.similarity import (
 )
 from whale_sightings_spark.plans.queries import register
 from whale_sightings_spark.schemas import load_table
+from whale_sightings_spark.session import barrier
 
 # ---------------------------------------------------------------------------
 # q94 — mergeable distinct-count rollup via DataSketches HLL.
@@ -406,8 +407,8 @@ def q99_stratified_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # split). Driver-side loop with an early stop: each round is the same
 # one-join+one-min-agg over the persisted edge set, plus one scalar
 # probe — labels only ever decrease, so an unchanged sum(label)
-# (decimal-summed, overflow-proof) IS the fixpoint;
-# localCheckpoint truncates lineage per round
+# (decimal-summed, overflow-proof) IS the fixpoint; a barrier
+# truncates lineage per round
 # (operators/dedup.dedup_components_converged). The oracle is DuckDB's
 # WITH RECURSIVE transitive closure — true components, no round count
 # in the contract at all.
@@ -574,7 +575,7 @@ def q102_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one join edges⋈ranks (hash on src) + one dst-keyed agg — the edge
 # set never grows, ranks are node-sized. The undirected graph has no
 # dangling nodes, so no redistribution term is needed. The pair
-# generator materializes ONCE (eager localCheckpoint in
+# generator materializes ONCE (the barrier in
 # operators.graphs.symmetric_edges) before edges branch into degrees
 # and the iteration — round 3's 5x cold-start multiplier came from
 # branching a lazily-persisted edge set.
@@ -647,7 +648,7 @@ def q106_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q112 — convergence-mode PageRank: run to an L1 fixpoint instead of a
 # fixed round count (the q100 pattern applied to q106 — scalar delta
-# probe per round, localCheckpoint lineage truncation). Damping 0.5
+# probe per round, barrier lineage truncation). Damping 0.5
 # (operators.graphs.DAMPING_FAST) bounds the round count: the L1 error
 # contracts by d per round, so tol=1e-10 converges in ~34 rounds and
 # the oracle unrolls to a FIXED 40 rounds. Error budget for the hash
@@ -902,11 +903,10 @@ def _largest_remainder_alloc(tc: DataFrame) -> DataFrame:
 
     The input lineage (a corpus-scale scan + aggregation for both
     callers) is referenced four times downstream (w, wsum, parts,
-    leftover); the lazy localCheckpoint barrier materializes the
-    source-cardinality table once so those references replay a tiny
-    local table, not the corpus scan. Lineage ends in a shuffle
-    aggregation, so the lazy form is race-safe."""
-    tc = tc.localCheckpoint(eager=False)
+    leftover); a barrier materializes the source-cardinality table
+    once so those references replay a tiny local table, not the corpus
+    scan."""
+    tc = barrier(tc)
     wcol = F.pow(F.col("n_tokens").cast("double"), _BUDGET_TEMP)
     w = tc.select("source", "n_tokens", wcol.alias("wt"))
     wsum = w.agg(F.sum("wt").alias("wsum"))
@@ -1521,11 +1521,9 @@ def q169_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos"),
         )
         # the pos and neg windows both consume the pair table —
-        # checkpoint so the capped self-join + cosine runs once, not
-        # twice (the q191 convention; eager=False r13 — the join
-        # shuffle behind it is stage-shared, so the lazy fill races
-        # only over the bounded pair table)
-        .localCheckpoint(eager=False)
+        # barrier so the capped self-join + cosine runs once, not
+        # twice (the q191 convention)
+        .transform(barrier)
     )
     pairs = half.unionByName(
         half.select(
@@ -2038,14 +2036,14 @@ def q220_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # source-cardinality; feeds the totals roll-up, the join and the
     # ablation arithmetic — barrier so they replay a tiny local table
-    # instead of the corpus token_count scan (race-safe: shuffle agg)
+    # instead of the corpus token_count scan
     per_src = (
         t.groupBy("source")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("ntok").cast("bigint").alias("toks"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     # corpus totals are the integer roll-up of the per-source sums —
     # exact, and one corpus scan fewer than aggregating t again
@@ -2064,14 +2062,14 @@ def q220_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     # shingle-dictionary-scale, referenced by the exclusivity agg AND
     # the global count — each would replay the corpus shingle explode
-    # + distinct (race-safe lazy barrier: lineage ends in the agg)
+    # + distinct
     shs = (
         sh.groupBy("shingle")
         .agg(
             F.count("*").alias("n_sources"),
             F.min("source").alias("only_source"),
         )
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     excl = (
         shs.filter(F.col("n_sources") == 1)
@@ -2456,7 +2454,7 @@ def q250_pruned_lm_eval_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         big.filter(F.col("doc_id") < 5)
         .select("w1", "w2", "bucket")
         .distinct()
-        .localCheckpoint(eager=False)  # eval-set-bounded; buckets collect fills it
+        .transform(barrier)  # eval-set-bounded
     )
     # bounded collect: the DISTINCT bucket ids the eval set occupies
     # (≤ N_LM_BUCKETS scalars) become a literal IN-filter — the only

@@ -21,6 +21,7 @@ from whale_sightings_spark.operators import curation as CU
 from whale_sightings_spark.operators.dedup import SHINGLE_N
 from whale_sightings_spark.plans.queries import register
 from whale_sightings_spark.schemas import load_table
+from whale_sightings_spark.session import barrier
 
 # ---------------------------------------------------------------------------
 # q48 — PII redaction. The synthetic corpus is PII-free, so the query
@@ -576,8 +577,6 @@ def q163_epoch_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q166_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "lang",
@@ -588,12 +587,9 @@ def q166_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r13 (guide §8: decide on small rows): four aggregations
         # consume base, and its lineage is the expensive per-doc work
         # (regex tokenize + quality score + md5) over the corpus text.
-        # EAGER checkpoint — the narrow 5-column proxy (no text)
-        # materializes once instead of four corpus scans; eager, not
-        # lazy, because the consumers are racing broadcast builds over
-        # a NARROW lineage (the dedup round-3 lesson); spillable level
-        # so the proxy never pins executor memory at scale (ADVICE r9).
-    ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        # The narrow 5-column proxy (no text) materializes once instead
+        # of four corpus scans.
+    ).transform(barrier)
     scal = base.agg(
         F.count("*").alias("n_docs"),
         F.sum("ntok").cast("bigint").alias("total_tokens"),
@@ -876,7 +872,7 @@ def q224_doremi_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw = (
         dw.groupBy("source", "word")
         .agg(F.count("*").cast("bigint").alias("n_sw"))
-        .localCheckpoint(eager=False)  # agg-backed: map stage shared
+        .transform(barrier)
     )
     st = sw.groupBy("source").agg(F.sum("n_sw").cast("bigint").alias("n_s"))
     wt = sw.groupBy("word").agg(F.sum("n_sw").cast("bigint").alias("c_w"))
@@ -899,7 +895,7 @@ def q224_doremi_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_s").cast("double") / F.col("n"))
             * F.exp(F.lit(_DOREMI_ETA) * F.col("kl_excess"))
         ).alias("w_raw"),
-    ).localCheckpoint(eager=False)  # source-sized; normalizer + output
+    ).transform(barrier)  # source-sized; normalizer + output
     z = raw.agg(F.sum("w_raw").alias("z"))
     return raw.crossJoin(F.broadcast(z)).select(
         "source",
@@ -1155,7 +1151,7 @@ def q244_pruned_eval_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         post.filter(F.col("doc_id") < 5)
         .select("shingle", "bucket")
         .distinct()
-        .localCheckpoint(eager=False)  # eval-set-bounded; buckets collect fills it
+        .transform(barrier)  # eval-set-bounded
     )
     # bounded collect: the DISTINCT bucket ids the eval set occupies
     # (≤ N_POSTING_BUCKETS scalars) become a literal IN-filter, which

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from whale_sightings_spark.operators import embedquant as EQ
 from whale_sightings_spark.plans.queries import register
 from whale_sightings_spark.schemas import load_table
+from whale_sightings_spark.session import barrier
 
 
 # ---------------------------------------------------------------------------
@@ -120,13 +121,12 @@ def q187_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q192_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # (label x dim)-cardinality, referenced three times (norms + both
-    # dot-product sides) — each replayed the corpus posexplode + agg.
-    # Race-safe lazy barrier (shuffle-agg lineage; r13)
+    # dot-product sides) — each replayed the corpus posexplode + agg
     comp = (
         emb.select("label", F.posexplode("embedding").alias("p", "x"))
         .groupBy("label", (F.col("p") + 1).alias("dim"))
         .agg(F.round(F.avg(F.col("x").cast("double")), 6).alias("v"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     nrm = comp.groupBy("label").agg(F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm"))
     a = comp.select(F.col("label").alias("label_a"), "dim", F.col("v").alias("va"))

@@ -27,6 +27,7 @@ from whale_sightings_spark.operators import similarity as SIM
 from whale_sightings_spark.plans.queries import register
 from whale_sightings_spark.plans.store_utils import artifact_dir
 from whale_sightings_spark.schemas import load_table
+from whale_sightings_spark.session import barrier
 
 # ---------------------------------------------------------------------------
 # q13 — exact dedup (hash-groupBy on normalized fingerprint)
@@ -1840,15 +1841,11 @@ def q36_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
     )
     # tf feeds BOTH the df aggregation and the scoring join — each
-    # would replay the corpus tokenize + agg. Corpus-token-scale, so
-    # the barrier materializes spillable (the q129 signature-table
-    # convention); lineage ends in the shuffle agg — race-safe lazy
-    from pyspark import StorageLevel
-
+    # would replay the corpus tokenize + agg
     tf = (
         toks.groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .transform(barrier)
     )
     df_counts = tf.groupBy("tok").agg(F.count_distinct("doc_id").alias("df"))
     scored = (
@@ -2059,11 +2056,11 @@ def q141_jaccard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, shingle_artifact_dir(spark, sf_dir), DD.MAX_SHINGLE_DF
     ).select("doc_id", "shingle")
     # the q14 barrier pattern: one replay of the postings scan + agg
-    # per pair side without it (race-safe: lineage ends in the agg)
+    # per pair side without it
     sizes = (
         pairs.groupBy("doc_id")
         .agg(F.count("*").alias("n_shingles"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     inter = (
         DD._bucket_candidate_pairs(
@@ -2296,11 +2293,11 @@ def q145_lang_mix_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # (source x lang)-cardinality, referenced four times (both margin
     # totals, the grand total, the chi2 terms) — each replayed the
-    # corpus scan + agg. Race-safe lazy barrier (shuffle-agg lineage)
+    # corpus scan + agg
     sl = (
         docs.groupBy("source", "lang")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     st = sl.groupBy("source").agg(F.sum("n").alias("s_total"))
     lt = sl.groupBy("lang").agg(F.sum("n").alias("l_total"))
@@ -2363,11 +2360,11 @@ def q149_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # (cell x lang)-cardinality, referenced by both the totals and the
     # dominant-language agg — each replayed the embeddings x documents
-    # join. Race-safe lazy barrier (shuffle-agg lineage)
+    # join
     cl = (
         j.groupBy("cell", "lang")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     tot = cl.groupBy("cell").agg(F.sum("n").alias("cell_n"))
     dom = cl.groupBy("cell").agg(
@@ -2934,7 +2931,7 @@ def q233_density_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q234_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SERVED FROM THE STORE (round 8): the distinct (source, shingle)
     # width-5 set is the artifact's src5 table — the former
-    # localCheckpoint becomes a plain parquet re-scan per consumer.
+    # barrier becomes a plain parquet re-scan per consumer.
     from whale_sightings_spark.operators import shingles as SHI
     from whale_sightings_spark.plans.shingle_store import shingle_artifact_dir
 
@@ -3029,7 +3026,7 @@ def q237_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semi-join each label side down to the ids topk actually touches
     # (|Q| and |Q|·k respectively) BEFORE broadcasting, so the broadcast
     # payload stays query-bounded no matter how large `embeddings` grows.
-    topk = topk.localCheckpoint(eager=False)
+    topk = barrier(topk)
     lab = emb.select("vec_id", "label")
     ql = (
         lab.withColumnRenamed("vec_id", "query_id")

@@ -31,6 +31,7 @@ from whale_sightings_spark.operators import curation as CU
 from whale_sightings_spark.operators.similarity import cosine, cosine_sql
 from whale_sightings_spark.plans.queries import register
 from whale_sightings_spark.schemas import load_table
+from whale_sightings_spark.session import barrier
 
 # ---------------------------------------------------------------------------
 # q54 — grouped second-moment statistics: corr / covar / stddev / var.
@@ -310,11 +311,11 @@ def q59_domain_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # source-cardinality, referenced by the min aggregate, the rate
     # projection and (via rates) the keep-join and final report — each
-    # replayed the corpus count agg (race-safe lazy barrier)
+    # replayed the corpus count agg
     counts = (
         docs.groupBy("source")
         .agg(F.count("*").alias("n_total"))
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     min_n = counts.agg(F.min("n_total").alias("min_n"))
     rates = counts.crossJoin(F.broadcast(min_n)).select(

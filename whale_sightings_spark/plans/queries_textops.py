@@ -18,6 +18,7 @@ from whale_sightings_spark.functions import text as TX
 from whale_sightings_spark.plans.queries import register
 from whale_sightings_spark.plans.store_utils import artifact_dir
 from whale_sightings_spark.schemas import load_table
+from whale_sightings_spark.session import barrier
 
 
 # ---------------------------------------------------------------------------
@@ -1339,13 +1340,8 @@ def q170_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # the bucketed token stream feeds BOTH growth aggs — each would
-    # replay the corpus tokenize+explode. NARROW lineage (scan +
-    # broadcast + explode, no terminal shuffle), so the barrier must be
-    # EAGER (the q166/round-3 racing-duplication rule); spillable
-    # (token-scale)
-    from pyspark import StorageLevel
-
-    t = t.localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    # replay the corpus tokenize+explode
+    t = barrier(t)
     new_types = (
         t.groupBy("tok")
         .agg(F.min("bucket").alias("bucket"))
@@ -1353,10 +1349,10 @@ def q170_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("new_types"))
     )
     # bucket-cardinality, referenced by the driver side AND the
-    # cumulative side of the growth-curve join (race-safe lazy barrier)
+    # cumulative side of the growth-curve join
     tok_counts = t.groupBy("bucket").agg(
         F.count("*").cast("bigint").alias("n_tokens")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier)
     a = tok_counts.select("bucket")
     bc = tok_counts.join(new_types, "bucket", "left").select(
         F.col("bucket").alias("b2"),
@@ -2042,9 +2038,9 @@ def _ppjoin_candidates(
     from pyspark.sql import Window as W
 
     # SERVED FROM THE STORE (round 8): the shingle set used to feed
-    # five consumers through a localCheckpoint; now every consumer
+    # five consumers through a barrier; now every consumer
     # re-scans the persisted posting parquet directly (cheaper than a
-    # checkpoint — the materialization already happened at build time),
+    # barrier — the materialization already happened at build time),
     # and the df / size tables come off their stored aggregates.
     from whale_sightings_spark.operators import shingles as SHI
     from whale_sightings_spark.plans.shingle_store import shingle_artifact_dir
@@ -2070,16 +2066,12 @@ def _ppjoin_candidates(
         - F.expr(f"({_PPJ_NUM} * n + {_PPJ_DEN} - 1) div {_PPJ_DEN}")
         + 1
     )
-    # pref self-joins with itself below — checkpoint so the df-join +
-    # window chain behind it runs once, not twice. eager=False (r12):
-    # the eager form ran a blocking materialization job at DAG-BUILD
-    # time on every invocation; the lazy form caches the partitions
-    # inside the action itself, so the chain still runs once but the
-    # extra job (and its scheduling overhead) is gone.
+    # pref self-joins with itself below — barrier so the df-join +
+    # window chain behind it runs once, not twice
     pref = (
         ranked.filter(F.col("rk") <= plen)
         .select("doc_id", "shingle", "rk", "n")
-        .localCheckpoint(eager=False)
+        .transform(barrier)
     )
     a = pref.alias("a")
     b = pref.alias("b")

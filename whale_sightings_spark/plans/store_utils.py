@@ -48,6 +48,10 @@ def stat_sig(path: str) -> str | None:
 
 
 def _pid_alive(pid: int) -> bool:
+    # kill(0, sig) signals our own process group, and a negative pid a
+    # whole group: neither names a builder
+    if pid <= 0:
+        return False
     try:
         os.kill(pid, 0)
     except ProcessLookupError:

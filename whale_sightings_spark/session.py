@@ -17,13 +17,15 @@ chosen for the 100 TB design point:
   every number parsed into a string field (SCALE.md);
 - the driver heap (in local mode also the executor heap) sized to the
   host by :func:`driver_memory`.
+
+:func:`barrier` is the one lineage-truncation primitive.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def host_cpus() -> int:
@@ -85,3 +87,38 @@ def get_spark(
 
     ship_package(spark)
     return spark
+
+
+# plan nodes whose output comes off an exchange (distinct and
+# dropDuplicates optimise to Aggregate; a join plans as a sort-merge
+# join, which shuffles both sides, or a broadcast join, whose build
+# side is collected once)
+_EXCHANGE_NODES = frozenset(
+    ("Aggregate", "Window", "Repartition", "RepartitionByExpression", "Sort", "Join")
+)
+
+
+def barrier(df: DataFrame) -> DataFrame:
+    """``df`` behind a ``localCheckpoint``: its lineage runs once and
+    every consumer reads the materialized blocks. The form comes from
+    ``df``'s optimized plan, looking through the row-local
+    Project/Filter/Generate:
+
+    - lazy when that node comes off an exchange (Aggregate, Window,
+      Repartition, Sort, Join) and the plan is deterministic: consumers
+      that race to fill the checkpoint share the exchange's output, so
+      they repeat only the work above it and agree on its rows;
+    - eager otherwise: narrow lineage over an expensive generator would
+      run once per racing consumer, and a nondeterministic plan (e.g.
+      ``monotonically_increasing_id``) must be pinned before anyone
+      reads it.
+
+    The storage level is the default (memory and disk, deserialized).
+    A lost executor loses its blocks for good; SCALE.md "Barriers" says
+    where a cluster deploy swaps in a reliable ``checkpoint()``."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    node = plan
+    while node.nodeName() in ("Project", "Filter", "Generate"):
+        node = node.child()
+    lazy = node.nodeName() in _EXCHANGE_NODES and plan.deterministic()
+    return df.localCheckpoint(eager=not lazy)

@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from whale_sightings_spark.session import barrier
+
 #: replay-zone schema: ts as TIMESTAMP (with-local-tz — watermarks
 #: require it; session TZ is pinned UTC). The driver's original
 #: events.parquet carries TIMESTAMP(NANOS) readable only via
@@ -779,7 +781,7 @@ def streaming_ivfpq_encode(
                     "streaming_ivfpq_encode: partial coarse codebook — "
                     "refusing to persist"
                 )
-            coarse = coarse.localCheckpoint()
+            coarse = barrier(coarse)
             coarse.write.mode("overwrite").parquet(coarse_dir)
             rsub = _split_subspaces(_residuals(sub, coarse), "rvec", "vec_id")
             rcb = _lloyd_codebook(
@@ -935,7 +937,7 @@ def streaming_cluster_ingest(
         )
         if batch.limit(1).isEmpty():
             return
-        sigs_b = DD.simhash_signatures(batch).localCheckpoint()
+        sigs_b = barrier(DD.simhash_signatures(batch))
         labels_new, edges_new, merges_new = DD.incremental_cluster_assign(
             sigs_b,
             DD.stored_cluster_bands(sess, artifact_dir),
@@ -1092,7 +1094,7 @@ def streaming_degree_audit(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        sigs_b = DD.simhash_signatures(batch_df).localCheckpoint()
+        sigs_b = barrier(DD.simhash_signatures(batch_df))
         deltas, summary = DD.degree_audit_batch(
             sigs_b,
             DD.stored_cluster_bands(sess, artifact_dir),
@@ -1603,7 +1605,7 @@ def streaming_shingle_index_ingest(
                         "int"
                     ),
                 )
-                .localCheckpoint()  # 3 consumers below; batch-bounded
+                .transform(barrier)  # 3 consumers below
             )
             (
                 post.repartition("bucket")
@@ -1706,7 +1708,7 @@ def streaming_lm_ingest(
                     "bucket",
                     F.pmod(F.hash("tok"), F.lit(LM.N_LM_BUCKETS)).cast("int"),
                 )
-                .localCheckpoint()  # 3 consumers below; batch-bounded
+                .transform(barrier)  # 3 consumers below
             )
             db = (
                 LM.doc_bigram_counts(batch)
@@ -1716,7 +1718,7 @@ def streaming_lm_ingest(
                         "int"
                     ),
                 )
-                .localCheckpoint()
+                .transform(barrier)
             )
             dt = (
                 LM.doc_trigram_counts(batch)
@@ -1726,7 +1728,7 @@ def streaming_lm_ingest(
                         F.hash("w1", "w2", "w3"), F.lit(LM.N_LM_BUCKETS)
                     ).cast("int"),
                 )
-                .localCheckpoint()
+                .transform(barrier)
             )
             train = F.col("doc_id") % LM.HOLD_MOD != 0
             for df, key in ((du, "doc_uni"), (db, "doc_big"), (dt, "doc_tri")):
