@@ -15,8 +15,10 @@ counted through its job group.
 
 A full run writes bench_detail.json and prints two JSON lines: the
 per-query map, then the totals line, which stays last. An --only or
---top run prints one JSON map {query: {cold, steady, jobs}} and leaves
-bench_detail.json untouched. Every run takes the same warm-up first.
+--top run prints one JSON object, {loadavg_start, loadavg_end, queries:
+{query: {cold, steady, steady_reps, jobs}}} with both reruns in
+steady_reps, and leaves bench_detail.json untouched. Every run takes
+the same warm-up first.
 """
 
 from __future__ import annotations
@@ -244,6 +246,7 @@ def _time_queries(spark, sf_dir: str, names: list[str]):
     tracker = sc.statusTracker()
     timings: dict[str, float] = {}
     steady: dict[str, float] = {}
+    steady_reps: dict[str, list[float]] = {}
     jobs: dict[str, int] = {}
     errors: dict[str, str] = {}
     loadavg_series: list[list[float]] = []
@@ -277,7 +280,8 @@ def _time_queries(spark, sf_dir: str, names: list[str]):
                 start = time.perf_counter()
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 reps.append(time.perf_counter() - start)
-            steady[name] = round(min(reps), 4)
+            steady_reps[name] = [round(r, 4) for r in reps]
+            steady[name] = min(steady_reps[name])
             # read after the reruns: the status store is fed by the
             # listener bus, which may trail the action's return
             jobs[name] = len(tracker.getJobIdsForGroup(f"cold-{name}"))
@@ -294,7 +298,7 @@ def _time_queries(spark, sf_dir: str, names: list[str]):
         # the GC bill (observed as minutes-late queries running 3-5x
         # their isolated time)
         gc.collect()
-    return timings, steady, jobs, errors, loadavg_series
+    return timings, steady, steady_reps, jobs, errors, loadavg_series
 
 
 def main(argv=None) -> None:
@@ -306,13 +310,24 @@ def main(argv=None) -> None:
     cpus = host_cpus()
     spark = get_spark(app_name="whale_sightings_spark-bench", master=f"local[{cpus}]")
     artifact_warm_s = _warm_up(spark, sf_dir, cpus)
-    timings, steady, jobs, errors, loadavg_series = _time_queries(spark, sf_dir, names)
+    timings, steady, steady_reps, jobs, errors, loadavg_series = _time_queries(
+        spark, sf_dir, names
+    )
     if args.only or args.top is not None:
         print(json.dumps(
             {
-                n: {"cold": timings.get(n), "steady": steady.get(n), "jobs": jobs.get(n)}
-                | ({"error": errors[n]} if n in errors else {})
-                for n in names
+                "loadavg_start": [round(x, 2) for x in loadavg_start],
+                "loadavg_end": [round(x, 2) for x in os.getloadavg()],
+                "queries": {
+                    n: {
+                        "cold": timings.get(n),
+                        "steady": steady.get(n),
+                        "steady_reps": steady_reps.get(n),
+                        "jobs": jobs.get(n),
+                    }
+                    | ({"error": errors[n]} if n in errors else {})
+                    for n in names
+                },
             },
             indent=1,
             sort_keys=True,

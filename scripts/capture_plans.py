@@ -1,6 +1,6 @@
 """Capture `.explain("formatted")` output for named queries into
-plans/r12/<query>_<tag>.txt — the optimization round's before/after
-plan evidence.
+plans/<round>/<query>_<tag>.txt ($SPARK_GRAFT_PLANS_ROUND, default r13)
+— an optimization round's before/after plan evidence.
 
 Usage: python scripts/capture_plans.py <tag> <qname> [<qname> ...]
        python scripts/capture_plans.py <tag> --all

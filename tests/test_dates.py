@@ -1,7 +1,8 @@
 """Unit matrix for the date subsystem (SURVEY §5: F3 branch matrix,
 P2's 8 regexes, F1 accepted formats). The pure-Python spec twin
-``split_dates_py`` is the oracle; the Spark native cascade must agree
-on every branch, and hypothesis fuzzes the space."""
+``split_dates_py`` is the oracle; the Spark cascade the ingest and q10
+run (``with_date_parts``) must agree on every branch, and hypothesis
+fuzzes the space."""
 
 from __future__ import annotations
 
@@ -19,10 +20,11 @@ from whale_sightings_spark.functions.dates import (
     pad_end_date,
     pad_start_date,
     parse_event_date,
-    split_dates,
     split_dates_duckdb_sql,
     split_dates_py,
+    with_date_parts,
 )
+from whale_sightings_spark.schemas import DATE_PARTS_FIELDS
 
 # every branch of the reference's cleaner.py:76-158 + validate.py:41-58
 MATRIX = [
@@ -78,20 +80,14 @@ MATRIX = [
 
 def _spark_split(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "raw string")
-    out = df.select("raw", split_dates(F.col("raw")).alias("p")).collect()
-    return {
-        r["raw"]: (
-            r["p"]["start_year"], r["p"]["start_month"], r["p"]["start_day"],
-            r["p"]["end_year"], r["p"]["end_month"], r["p"]["end_day"],
-        )
-        for r in out
-    }
+    out = with_date_parts(df, src="raw").collect()
+    return {r["raw"]: tuple(r[f] for f in DATE_PARTS_FIELDS) for r in out}
 
 
 def test_split_dates_matrix(spark):
     got = _spark_split(spark, MATRIX)
     for raw in MATRIX:
-        assert got[raw] == split_dates_py(raw), f"split_dates({raw!r})"
+        assert got[raw] == split_dates_py(raw), f"with_date_parts({raw!r})"
 
 
 def test_split_dates_duckdb_twin_matches_spec():
@@ -145,7 +141,7 @@ def test_split_dates_textual_day_month_1900_calendar(spark):
     n_zero = n_valid = 0
     for raw in inputs:
         expect = split_dates_py(raw)
-        assert got[raw] == expect, f"split_dates({raw!r})"
+        assert got[raw] == expect, f"with_date_parts({raw!r})"
         if expect == (0, 0, 0, 0, 0, 0):
             n_zero += 1
         else:
@@ -204,7 +200,7 @@ def test_parse_event_date_accepted_formats(spark):
     df = spark.createDataFrame([(k,) for k in cases], "d string")
     got = {
         r["d"]: r["iso"]
-        for r in df.select("d", normalize_event_date(F.col("d")).alias("iso")).collect()
+        for r in df.select("d", normalize_event_date(parse_event_date(F.col("d"))).alias("iso")).collect()
     }
     assert got == cases
 

@@ -6,6 +6,7 @@ goldens, mirroring the reference's logged accounting
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -361,6 +362,80 @@ def test_cleaned_lineage_optimizes_without_constraint_inference(spark, result):
         ):
             spent_ns += int(parts[3])  # "<effective> / <total>" time in ns
     assert spent_ns < 1e9, f"constraint rules took {spent_ns / 1e9:.2f} s"
+
+
+def _plan_shape(df) -> tuple[int, int]:
+    """(raw-JSON relations, date-cascade copies) in the optimized plan;
+    the cascade is counted by its one ``^(\\d+)/(\\d+)$`` literal."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return len(re.findall(r"Relation \[[^\]]*\] json", plan)), plan.count(r"^(\d+)/(\d+)$")
+
+
+def test_cleaning_lineage_classifies_each_record_once(result):
+    """Each raw scan in the optimized plans carries one classification.
+    The cleaned frame filters its channel above the dedup window, so
+    each scan has the cascade once; the error export's filter is pushed
+    down, so it has it twice. Split into valid and error branches whose
+    repair tested the six parts one by one, the cleaned plan held 6
+    relations and 23 cascades, the error export 7."""
+    relations, cascades = _plan_shape(result.cleaned)
+    assert relations <= 3, relations
+    assert cascades <= relations, cascades
+    relations, cascades = _plan_shape(result.unrepaired_errors)
+    assert relations == 1, relations
+    assert cascades <= 2, cascades
+
+
+def _ingest_rows(spark, tmp_path, rows):
+    """run_pipeline over one raw-zone file holding ``rows``."""
+    whale_dir = tmp_path / "raw" / "beluga_whale"
+    whale_dir.mkdir(parents=True)
+    (whale_dir / "1900-01-01--1950-12-31.json").write_text(
+        json.dumps({"results": rows}, indent=4)
+    )
+    ctx = PipelineContext(whale="beluga_whale", startdate="1900-01-01",
+                          enddate="1950-12-31", data_dir=str(tmp_path / "raw"))
+    return run_pipeline(spark, ctx)
+
+
+_BASE = {"species": "Delphinapterus leucas", "speciesid": 137115,
+         "decimalLatitude": 60.0, "decimalLongitude": -150.0}
+
+
+def test_error_export_merges_records_with_identical_data(spark, tmp_path):
+    """The export groups unrepaired records by their data columns
+    (cleaner.py:257-288): two identical records at different file
+    positions export as one object holding both records' details. A
+    repaired record contributes exactly one row to the cleaned frame."""
+    bad = {**_BASE, "occurrenceID": "bad", "eventDate": "unknown"}
+    res = _ingest_rows(spark, tmp_path, [
+        bad,
+        {**_BASE, "occurrenceID": "ok", "eventDate": "1913-03-17"},
+        bad,
+        {**_BASE, "occurrenceID": "month", "eventDate": "1925-11",
+         "decimalLatitude": 61.0},
+    ])
+    errs = [r.asDict(recursive=True) for r in res.unrepaired_errors.collect()]
+    assert len(errs) == 1
+    assert errs[0]["occurrenceID"] == "bad"
+    assert [d["msg"] for d in errs[0]["details"]] == [
+        "Value error, eventDate could not be parsed."
+    ] * 2
+    ids = sorted(r["occurrenceID"] for r in res.cleaned.collect())
+    assert ids == ["month", "ok"]
+
+
+def test_repair_with_an_out_of_range_part_is_exported(spark, tmp_path):
+    """A date-only error whose split overflows an int part cannot be
+    repaired and lands in the error export. Its null part made the
+    repair test null, and the record left both the cleaned frame and
+    the export."""
+    res = _ingest_rows(spark, tmp_path, [
+        {**_BASE, "occurrenceID": "huge", "eventDate": "99999999999-05"},
+        {**_BASE, "occurrenceID": "ok", "eventDate": "1913-03-17"},
+    ])
+    assert [r["occurrenceID"] for r in res.unrepaired_errors.collect()] == ["huge"]
+    assert [r["occurrenceID"] for r in res.cleaned.collect()] == ["ok"]
 
 
 def test_notebook_parity_queries(result):

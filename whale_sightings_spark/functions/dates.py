@@ -6,11 +6,11 @@ the hot path. The semantics mirror the reference's documented intent:
 - bad-format rejection regexes: reference ``whalefinder/validate.py:49-62``
 - lenient parse of accepted formats: reference ``validate.py:37-63``
 - ISO-validity predicate: reference ``cleaner.py:160-168``
-- messy-date normalizer ``split_dates``: reference ``cleaner.py:76-158``
-  (the reference's textual-month branch has a latent
-  ``datetime.strptime`` AttributeError at ``cleaner.py:107``; per
-  SURVEY §7.3.2 we implement the documented intent, i.e. the strptime
-  cascade as written).
+- messy-date normalizer, the reference's ``split_dates``
+  (``cleaner.py:76-158``), as :func:`with_date_parts` (the reference's
+  textual-month branch has a latent ``datetime.strptime``
+  AttributeError at ``cleaner.py:107``; per SURVEY §7.3.2 we implement
+  the documented intent, i.e. the strptime cascade as written).
 
 A pure-Python twin of the spec (:func:`split_dates_py`) is the unit /
 property-test oracle, and :func:`split_dates_duckdb_sql` emits the same
@@ -22,6 +22,7 @@ from __future__ import annotations
 import calendar
 import datetime as _dt
 import re
+import string
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -96,11 +97,11 @@ def parse_event_date(col: Column) -> Column:
     return F.to_date(parsed)
 
 
-def normalize_event_date(col: Column) -> Column:
-    """Valid-channel normalization: parsed date serialized back to an ISO
-    YYYY-MM-DD *string* (reference model_dump(mode='json'),
-    validate.py:178 — see SURVEY §1.4)."""
-    return F.date_format(parse_event_date(col), "yyyy-MM-dd")
+def normalize_event_date(parsed: Column) -> Column:
+    """Valid-channel normalization: a :func:`parse_event_date` result
+    serialized back to an ISO YYYY-MM-DD *string* (reference
+    model_dump(mode='json'), validate.py:178 — see SURVEY §1.4)."""
+    return F.date_format(parsed, "yyyy-MM-dd")
 
 
 # ---------------------------------------------------------------------------
@@ -217,11 +218,14 @@ def _month_num(name_col: Column) -> Column:
 
     array_position over a 24-element literal array keeps the expression
     tree small (it is inlined several times per cascade — a 48-pair
-    create_map here multiplies codegen size and compile time).
+    create_map here multiplies codegen size and compile time). Case is
+    folded by an ASCII ``translate``, not ``lower``: the first ``lower``
+    in a JVM pays a one-time ICU class init of about 1.6 s, and month
+    names are ASCII (the only letter Unicode lowers into ASCII is the
+    Kelvin sign, and no month name has a ``k``).
     """
-    pos = F.array_position(
-        F.array(*[F.lit(n) for n in _MONTH_NAMES]), F.lower(name_col)
-    )
+    folded = F.translate(name_col, string.ascii_uppercase, string.ascii_lowercase)
+    pos = F.array_position(F.array(*[F.lit(n) for n in _MONTH_NAMES]), folded)
     return F.when(pos > 0, ((pos - 1) % 12 + 1).cast("int"))
 
 
@@ -234,130 +238,24 @@ def _days_in_month_1900(month: Column) -> Column:
     return F.element_at(F.array(*[F.lit(d) for d in _DAYS_1900]), month)
 
 
-def split_dates(col: Column) -> Column:
-    """F3 as a native when/otherwise cascade.
-
-    Returns ``struct<start_year:int, start_month:int, start_day:int,
-    end_year:int, end_month:int, end_day:int>`` following the
-    split_dates spec (see :func:`split_dates_py`). Entirely JVM-side —
-    regexp_extract + create_map + last_day — so it stays inside
-    whole-stage codegen at 100 TB.
-    """
-    s = F.trim(F.regexp_replace(col, ",", ""))
-
-    def mk(sy, sm, sd, ey, em, ed) -> Column:
-        return F.struct(
-            sy.cast("int").alias("start_year"),
-            sm.cast("int").alias("start_month"),
-            sd.cast("int").alias("start_day"),
-            ey.cast("int").alias("end_year"),
-            em.cast("int").alias("end_month"),
-            ed.cast("int").alias("end_day"),
-        )
-
-    zeros = mk(*(F.lit(0),) * 6)
-    i = F.lit(1)
-
-    # --- textual month shapes -------------------------------------------
-    # month-name + 4-digit year (either order): day defaults to 1,
-    # end_day = real month end for that year.
-    name_my = F.regexp_extract(s, r"^([A-Za-z]+) (\d{4})$", 1)
-    year_my = F.regexp_extract(s, r"^([A-Za-z]+) (\d{4})$", 2).cast("int")
-    name_ym = F.regexp_extract(s, r"^(\d{4}) ([A-Za-z]+)$", 2)
-    year_ym = F.regexp_extract(s, r"^(\d{4}) ([A-Za-z]+)$", 1).cast("int")
-    # day + month-name (either order): strptime default year 1900;
-    # day must fit the 1900 calendar (Feb = 28) or the branch fails.
-    day_dm = F.regexp_extract(s, r"^(\d{1,2}) ([A-Za-z]+)$", 1).cast("int")
-    name_dm = F.regexp_extract(s, r"^(\d{1,2}) ([A-Za-z]+)$", 2)
-    name_md = F.regexp_extract(s, r"^([A-Za-z]+) (\d{1,2})$", 1)
-    day_md = F.regexp_extract(s, r"^([A-Za-z]+) (\d{1,2})$", 2).cast("int")
-
-    def month_year_case(name: Column, year: Column) -> Column:
-        m = _month_num(name)
-        return F.when(
-            m.isNotNull() & year.isNotNull(),
-            mk(year, m, i, year, m, _days_in_month(year, m)),
-        ).otherwise(zeros)
-
-    def day_month_case(day: Column, name: Column) -> Column:
-        m = _month_num(name)
-        ok = m.isNotNull() & (day >= 1) & (day <= _days_in_month_1900(m))
-        y1900 = F.lit(1900)
-        return F.when(ok, mk(y1900, m, day, y1900, m, day)).otherwise(zeros)
-
-    # --- numeric shapes --------------------------------------------------
-    # range 'A/B' where the string also contains '-': strip T-tails,
-    # both sides must be d-d-d; ints taken verbatim (no calendar check).
-    # try_element_at / try_cast keep the cascade null-safe under ANSI
-    # mode (Spark 4 default) — a null condition is simply not taken.
-    range_sides = F.split(s, "/")
-    side0 = F.regexp_replace(F.try_element_at(range_sides, F.lit(1)), "T.*", "")
-    side1 = F.regexp_replace(F.try_element_at(range_sides, F.lit(2)), "T.*", "")
-    ddd = r"^(\d+)-(\d+)-(\d+)$"
-
-    def ymd(side: Column, grp: int) -> Column:
-        return F.regexp_extract(side, ddd, grp).try_cast("int")
-
-    full_range = F.when(
-        (F.size(range_sides) == 2) & side0.rlike(ddd) & side1.rlike(ddd),
-        mk(ymd(side0, 1), ymd(side0, 2), ymd(side0, 3), ymd(side1, 1), ymd(side1, 2), ymd(side1, 3)),
-    ).otherwise(zeros)
-
-    yy = r"^(\d+)/(\d+)$"
-    year_range = F.when(
-        s.rlike(yy),
-        mk(F.regexp_extract(s, yy, 1).try_cast("int"), i, i,
-           F.regexp_extract(s, yy, 2).try_cast("int"), F.lit(12), F.lit(31)),
-    ).otherwise(zeros)
-
-    dd = r"^(\d+)-(\d+)$"
-    y2 = F.regexp_extract(s, dd, 1).try_cast("int")
-    m2 = F.regexp_extract(s, dd, 2).try_cast("int")
-    year_month = F.when(
-        s.rlike(dd),
-        F.when(
-            (m2 > 0) & (m2 <= 12),
-            mk(y2, m2, i, y2, m2, _days_in_month(y2, m2)),
-        ).otherwise(mk(y2, i, i, m2, F.lit(12), F.lit(31))),
-    ).otherwise(zeros)
-
-    full_date = F.when(
-        s.rlike(ddd),
-        mk(ymd(s, 1), ymd(s, 2), ymd(s, 3), ymd(s, 1), ymd(s, 2), ymd(s, 3)),
-    ).otherwise(zeros)
-
-    bare = r"^(\d+)$"
-    y0 = F.regexp_extract(s, bare, 1).try_cast("int")
-    bare_year = F.when(s.rlike(bare), mk(y0, i, i, y0, F.lit(12), F.lit(31))).otherwise(zeros)
-
-    # --- dispatch (mirrors the reference's branch order) -----------------
-    return (
-        F.when(s.rlike(r"^[A-Za-z]+ \d{4}$"), month_year_case(name_my, year_my))
-        .when(s.rlike(r"^\d{4} [A-Za-z]+$"), month_year_case(name_ym, year_ym))
-        .when(s.rlike(r"^\d{1,2} [A-Za-z]+$"), day_month_case(day_dm, name_dm))
-        .when(s.rlike(r"^[A-Za-z]+ \d{1,2}$"), day_month_case(day_md, name_md))
-        .when(s.contains("/") & s.contains("-"), full_range)
-        .when(s.contains("/"), year_range)
-        .when(s.contains("-") & s.rlike(dd), year_month)
-        .when(s.contains("-") & s.rlike(ddd), full_date)
-        .when(s.contains("-"), zeros)
-        .when(s.rlike(bare), bare_year)
-        .otherwise(zeros)
+def date_parts_struct(sy, sm, sd, ey, em, ed) -> Column:
+    """The six date parts as one int struct, in DATE_PARTS_FIELDS order."""
+    return F.struct(
+        *[c.cast("int").alias(f) for c, f in zip((sy, sm, sd, ey, em, ed), DATE_PARTS_FIELDS)]
     )
 
 
-def with_date_parts(df, src: str = "eventDate"):
-    """Attach the six date-part columns (reference cleaner.py:302,333).
+def staged_date_parts(df, src: str):
+    """F3, the split_dates spec (:func:`split_dates_py`), over column
+    ``src``: returns ``df`` plus its staged ``__`` helper columns, and
+    the date-part struct expression over them.
 
-    Same spec as :func:`split_dates`, but evaluated in staged
-    projections: every capture (space/dash/slash splits, month-name
-    lookups) is materialized ONCE per row as a column, then the dispatch
-    cascade is cheap when/struct logic over those attributes plus one
-    rlike per shape. The single-expression cascade re-runs each
-    regexp_extract per struct field per branch (conditional branches
-    defeat codegen subexpression elimination) — measured ~3x slower.
-    The struct is materialized before field extraction so CollapseProject
-    cannot duplicate the cascade six times.
+    Every capture (space/dash/slash splits, month-name lookups) is
+    materialized ONCE per row as a column, then the dispatch cascade is
+    cheap when/struct logic over those attributes plus one rlike per
+    shape. A single-expression cascade re-runs each regexp_extract per
+    struct field per branch (conditional branches defeat codegen
+    subexpression elimination) — measured ~3x slower.
     """
     ddd = r"^(\d+)-(\d+)-(\d+)$"
     dd = r"^(\d+)-(\d+)$"
@@ -392,16 +290,7 @@ def with_date_parts(df, src: str = "eventDate"):
         }
     )
 
-    def mk(sy, sm, sd, ey, em, ed) -> Column:
-        return F.struct(
-            sy.cast("int").alias("start_year"),
-            sm.cast("int").alias("start_month"),
-            sd.cast("int").alias("start_day"),
-            ey.cast("int").alias("end_year"),
-            em.cast("int").alias("end_month"),
-            ed.cast("int").alias("end_day"),
-        )
-
+    mk = date_parts_struct
     zeros = mk(*(F.lit(0),) * 6)
     i = F.lit(1)
     s = F.col("__s")
@@ -471,8 +360,21 @@ def with_date_parts(df, src: str = "eventDate"):
         .when(s.rlike(r"^\d+$"), mk(y0, i, i, y0, F.lit(12), F.lit(31)))
         .otherwise(zeros)
     )
-    staged = d4.withColumn("__parts", parts)
-    return staged.select(
+    return d4, parts
+
+
+def with_date_parts(df, src: str = "eventDate"):
+    """Attach the six date-part columns (reference cleaner.py:302,333)
+    computed by :func:`staged_date_parts`.
+
+    The struct is materialized before field extraction, so
+    CollapseProject cannot duplicate the cascade six times in the
+    projection. That does not hold for a filter over the six columns:
+    predicate pushdown substitutes each field's source, one cascade per
+    named field.
+    """
+    staged, parts = staged_date_parts(df, src)
+    return staged.withColumn("__parts", parts).select(
         *df.columns, *[F.col(f"__parts.{f}").alias(f) for f in DATE_PARTS_FIELDS]
     )
 

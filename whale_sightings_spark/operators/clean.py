@@ -1,5 +1,6 @@
-"""Cleaning operators (SURVEY.md §2: F12/F15 error explode, P6/P7 repair
-split, U1 union, W2 keep-first dedup, W1 surrogate keys, F7/F8 fills).
+"""Cleaning operators (SURVEY.md §2: F12/F15 error export, W2 keep-first
+dedup, W1 surrogate keys, F7/F8 fills) over the channels that
+``operators.validate.classify_occurrences`` assigns.
 
 Reference: ``whalefinder/cleaner.py`` — reimplemented as lazy DataFrame
 lineage with explicit windows over the deterministic ingest ordinal
@@ -11,90 +12,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from whale_sightings_spark.functions.dates import date_is_valid, with_date_parts
-from whale_sightings_spark.operators.validate import ORDINAL_COLS
-from whale_sightings_spark.schemas import DATE_PARTS_FIELDS
+from whale_sightings_spark.functions.dates import date_is_valid
+from whale_sightings_spark.operators.validate import ORDINAL_COLS, UNREPAIRED
 
 #: the keep-first dedup key (reference cleaner.py:353-354)
 DEDUP_KEYS = ("eventDate", "decimalLatitude", "decimalLongitude")
 
 
-def explode_error_details(errors: DataFrame) -> DataFrame:
-    """F12/F15: flatten errors×details into one row per detail with
-    ``detail_type/detail_loc/detail_msg`` columns (the Spark analog of
-    the reference's MultiIndex build, cleaner.py:214-245).
-
-    ``detail_dates_only`` carries, onto every detail row, whether all of
-    the record's details are on ``eventDate`` — the only field the
-    repair pass can fix."""
-    data_cols = [c for c in errors.columns if c != "details"]
-    return errors.select(
-        *data_cols,
-        F.forall("details", lambda d: d["loc"] == "eventDate").alias(
-            "detail_dates_only"
-        ),
-        F.explode("details").alias("_d"),
-    ).select(
-        *data_cols,
-        F.col("_d.type").alias("detail_type"),
-        F.col("_d.loc").alias("detail_loc"),
-        F.col("_d.msg").alias("detail_msg"),
-        "detail_dates_only",
-    )
-
-
-def regroup_error_details(exploded: DataFrame) -> DataFrame:
-    """Inverse of :func:`explode_error_details` (cleaner.py:257-288):
-    collect the detail rows back into a nested ``details`` array for the
-    unprocessed-error JSON export."""
+def unrepaired_export(classified: DataFrame) -> DataFrame:
+    """The unprocessed-error export (cleaner.py:257-288): the
+    ``UNREPAIRED`` records of a classified frame, grouped by their data
+    columns, so records with identical data at different file positions
+    export as one object holding all their details."""
     data_cols = [
         c
-        for c in exploded.columns
-        if not c.startswith("detail_") and c not in ORDINAL_COLS
+        for c in classified.columns
+        if c not in (*ORDINAL_COLS, "_parsed", "details", "_channel")
     ]
-    return exploded.groupBy(*[F.col(c) for c in data_cols]).agg(
-        F.collect_list(
-            F.struct(
-                F.col("detail_type").alias("type"),
-                F.col("detail_loc").alias("loc"),
-                F.col("detail_msg").alias("msg"),
-            )
-        ).alias("details")
+    return (
+        classified.filter(F.col("_channel") == UNREPAIRED)
+        .groupBy(*data_cols)
+        .agg(F.flatten(F.collect_list("details")).alias("details"))
     )
-
-
-def process_error_data(exploded: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """P6/P7: second-chance repair of error rows (cleaner.py:290-321).
-
-    split_dates over the raw eventDate; ``processed`` = every detail of
-    the record is on eventDate and all six parts are nonzero. A record
-    with any other failed field (an unparseable individualCount, a
-    missing latitude) cannot be repaired by a date split and would fail
-    the typed merge, so it stays unrepaired. Repaired rows drop the
-    detail columns and full-row-dedup (U3); unrepaired rows are
-    returned for the JSON export.
-    """
-    with_parts = with_date_parts(exploded, src="eventDate")
-    processed_flag = F.col("detail_dates_only")
-    for f in DATE_PARTS_FIELDS:
-        processed_flag = processed_flag & (F.col(f) != 0)
-    with_parts = with_parts.withColumn("processed", processed_flag)
-
-    repaired = (
-        with_parts.filter("processed")
-        .drop("detail_type", "detail_loc", "detail_msg", "detail_dates_only", "processed")
-        .dropDuplicates()
-    )
-    unrepaired = with_parts.filter(~F.col("processed")).drop("processed")
-    return repaired, unrepaired
-
-
-def merge_channels(valid: DataFrame, repaired: DataFrame) -> DataFrame:
-    """U1: valid ++ repaired-errors with concat order preserved via an
-    explicit channel rank (pandas concat order, cleaner.py:350-351)."""
-    v = valid.withColumn("_channel", F.lit(0))
-    r = repaired.withColumn("_channel", F.lit(1))
-    return v.unionByName(r, allowMissingColumns=True)
 
 
 def _merged_order():

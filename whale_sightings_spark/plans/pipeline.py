@@ -17,16 +17,13 @@ from dataclasses import dataclass, field
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from whale_sightings_spark.functions.dates import with_date_parts
 from whale_sightings_spark.operators.clean import (
     dedup_keep_first,
-    explode_error_details,
     fill_in,
     get_start_and_end,
-    merge_channels,
-    process_error_data,
-    regroup_error_details,
+    unrepaired_export,
     with_date_validity,
 )
 from whale_sightings_spark.operators.dims import (
@@ -36,7 +33,11 @@ from whale_sightings_spark.operators.dims import (
     resolve_water_body_fk,
 )
 from whale_sightings_spark.operators.spatial import spatial_join_water_body
-from whale_sightings_spark.operators.validate import validate_occurrences
+from whale_sightings_spark.operators.validate import (
+    UNREPAIRED,
+    classify_occurrences,
+    typed_occurrences,
+)
 from whale_sightings_spark.sources.files import match_raw_files, read_raw_occurrences
 from whale_sightings_spark.whales import WHALE_NAMES
 
@@ -87,26 +88,25 @@ def clean_occurrences(
 ) -> PipelineResult:
     """Stages 2-3 (validate + clean) as one lineage.
 
-    raw -> validation split (P1-P3) -> error explode + repair (F12/P6)
-    -> union (U1) -> date validity (P4) -> keep-first dedup (W2) ->
-    fills (W1/F7/F8) -> spatial join (J1).
+    raw -> one record-level classification: validation (P1-P3) and date
+    repair (F12/P6) into valid / repaired / unrepaired channels ->
+    typed rows (U1) -> date validity (P4) -> keep-first dedup (W2) ->
+    unrepaired rows dropped -> fills (W1/F7/F8) -> spatial join (J1);
+    the unrepaired channel goes to the error export.
     """
-    valid, errors = validate_occurrences(raw)
-    valid = with_date_parts(valid, src="eventDate")
-
-    exploded = explode_error_details(errors)
-    repaired, unrepaired = process_error_data(exploded)
-
-    merged = merge_channels(valid, repaired)
-    merged = with_date_validity(merged)
-    merged = dedup_keep_first(merged)
+    classified = classify_occurrences(raw)
+    merged = with_date_validity(typed_occurrences(classified))
+    # unrepaired rows sort last in their key group, so dropping them after
+    # the dedup keeps its survivors; above the window the filter is not
+    # pushed down to the scan with a second copy of the classification
+    merged = dedup_keep_first(merged).filter(F.col("_channel") < UNREPAIRED)
     merged = fill_in(merged, ctx.whale)
     if oceans is not None:
         merged = spatial_join_water_body(merged, oceans)
 
     return PipelineResult(
         cleaned=merged,
-        unrepaired_errors=regroup_error_details(unrepaired),
+        unrepaired_errors=unrepaired_export(classified),
         ctx=ctx,
     )
 
