@@ -161,11 +161,6 @@ def test_unrepaired_export_shape(result):
     assert locs == {"eventDate", "decimalLatitude"}
 
 
-def test_bounds_derivation(result):
-    assert result.startdate == "1849-12-04"
-    assert result.enddate == "1971-01-01"
-
-
 def test_star_schema(result):
     star = build_star_schema(result.cleaned)
     locations = {r["waterBody"]: r["id"] for r in star["locations"].collect()}
@@ -205,11 +200,13 @@ def test_cli_process_exports_unrepaired_errors(spark, raw_dir, tmp_path):
 
 def test_cli_db_loads_star_schema_into_sqlite(spark, raw_dir, tmp_path):
     """End-to-end serving contract: `db --db-url sqlite:///...` emits
-    the reference DDL (db.sql:5-44) and loads all three tables."""
+    the reference DDL (db.sql:5-44) and loads all three tables from the
+    curated parquet that `process` wrote."""
     import sqlite3
 
     from whale_sightings_spark.cli import main
 
+    assert main(["process", "beluga_whale", "--data-dir", raw_dir]) == 0
     db_path = str(tmp_path / "whales.db")
     rc = main(["db", "beluga_whale", "--data-dir", raw_dir,
                "--db-url", f"sqlite:///{db_path}"])
@@ -258,6 +255,7 @@ def test_cli_db_loads_star_schema_into_mysql(spark, raw_dir):
     except Exception as exc:  # driver missing or server unreachable
         pytest.skip(f"MySQL unreachable: {exc}")
     try:
+        assert main(["process", "beluga_whale", "--data-dir", raw_dir]) == 0
         rc = main(["db", "beluga_whale", "--data-dir", raw_dir, "--db-url", db_url])
         assert rc == 0
         cur = con.cursor()
@@ -270,6 +268,85 @@ def test_cli_db_loads_star_schema_into_mysql(spark, raw_dir):
         assert cur.fetchone()[0] == n_occ
     finally:
         con.close()
+
+
+_BASE = {"species": "Delphinapterus leucas", "speciesid": 137115,
+         "decimalLatitude": 60.0, "decimalLongitude": -150.0}
+
+
+def _write_zone(data_dir, rows) -> str:
+    """A raw zone under ``data_dir`` with one file holding ``rows``."""
+    whale_dir = data_dir / "beluga_whale"
+    whale_dir.mkdir(parents=True)
+    (whale_dir / "1900-01-01--1950-12-31.json").write_text(
+        json.dumps({"results": rows}, indent=4)
+    )
+    return str(data_dir)
+
+
+def test_cli_db_loads_the_curated_parquet_not_the_raw_zone(spark, raw_dir, tmp_path):
+    """`db` reads what `process` wrote: with the raw zone removed after
+    `process`, it still loads every curated row. Re-cleaning the raw
+    zone instead loaded none."""
+    import shutil
+    import sqlite3
+
+    from whale_sightings_spark.cli import main
+
+    data_dir = tmp_path / "zone"
+    shutil.copytree(f"{raw_dir}/beluga_whale", data_dir / "beluga_whale",
+                    ignore=shutil.ignore_patterns("curated*", "errors"))
+    assert main(["process", "beluga_whale", "--data-dir", str(data_dir)]) == 0
+    for raw_file in (data_dir / "beluga_whale").glob("*.json"):
+        raw_file.unlink()
+    db_path = str(tmp_path / "whales.db")
+    assert main(["db", "beluga_whale", "--data-dir", str(data_dir),
+                 "--db-url", f"sqlite:///{db_path}"]) == 0
+    con = sqlite3.connect(db_path)
+    try:
+        assert con.execute("SELECT count(*) FROM occurrences").fetchone()[0] == 10
+    finally:
+        con.close()
+
+
+def test_cli_db_keeps_stored_location_ids(spark, tmp_path):
+    """A second `db` load encodes water bodies against the stored
+    ``locations`` (procedures.sql:4-28): a stored name keeps its id and
+    a new one gets ``max(id) + 1``. Numbered from 0 on each load, the
+    second zone's first-seen order re-keyed the stored names, and the
+    shared name broke the UNIQUE waterBody constraint."""
+    import sqlite3
+
+    from whale_sightings_spark.cli import main
+
+    db_url = f"sqlite:///{tmp_path / 'whales.db'}"
+    zones = {
+        "first": [("x1", "Alpha Sea"), ("x2", "Shared Sea")],
+        "second": [("y1", "Shared Sea"), ("y2", "New Sea")],
+    }
+    for i, (name, sightings) in enumerate(zones.items()):
+        rows = [
+            {**_BASE, "occurrenceID": oid, "eventDate": f"191{i}-03-1{j}",
+             "waterBody": water}
+            for j, (oid, water) in enumerate(sightings)
+        ]
+        data_dir = _write_zone(tmp_path / name, rows)
+        assert main(["process", "beluga_whale", "--data-dir", data_dir]) == 0
+        assert main(["db", "beluga_whale", "--data-dir", data_dir,
+                     "--db-url", db_url]) == 0
+
+    con = sqlite3.connect(str(tmp_path / "whales.db"))
+    try:
+        locations = dict(con.execute("SELECT waterBody, id FROM locations"))
+        facts = dict(con.execute(
+            "SELECT o.id, l.waterBody FROM occurrences o"
+            " JOIN locations l ON o.waterBodyId = l.id"
+        ))
+    finally:
+        con.close()
+    assert locations == {"Alpha Sea": 0, "Shared Sea": 1, "New Sea": 2}
+    assert facts == {"x1": "Alpha Sea", "x2": "Shared Sea",
+                     "y1": "Shared Sea", "y2": "New Sea"}
 
 
 def test_records_failing_beyond_eventdate_are_exported_not_repaired(spark, tmp_path):
@@ -295,13 +372,10 @@ def test_records_failing_beyond_eventdate_are_exported_not_repaired(spark, tmp_p
         {**base, "occurrenceID": "month_and_count", "eventDate": "1925-11",
          "individualCount": "x"},
     ]
-    data_dir = tmp_path / "raw"
-    (data_dir / "beluga_whale").mkdir(parents=True)
-    (data_dir / "beluga_whale" / "1900-01-01--1950-12-31.json").write_text(
-        json.dumps({"results": rows}, indent=4)
-    )
+    data_dir = _write_zone(tmp_path / "raw", rows)
     db_path = str(tmp_path / "whales.db")
-    assert main(["db", "beluga_whale", "--data-dir", str(data_dir),
+    assert main(["process", "beluga_whale", "--data-dir", data_dir]) == 0
+    assert main(["db", "beluga_whale", "--data-dir", data_dir,
                  "--db-url", f"sqlite:///{db_path}"]) == 0
 
     exported = read_error_json(spark, f"{data_dir}/beluga_whale/errors").collect()
@@ -322,7 +396,7 @@ def test_records_failing_beyond_eventdate_are_exported_not_repaired(spark, tmp_p
 def test_run_pipeline_schedules_zero_jobs(spark, raw_dir):
     """With driver-side polygons, building the ingest lineage runs no
     Spark job, whether the dates are given or open: every action waits
-    for a sink, and open bounds wait for their first read."""
+    for a sink, and open dates only widen the file listing."""
     import numpy as np
 
     from whale_sightings_spark.operators.spatial import parse_wkt_polygon
@@ -388,18 +462,10 @@ def test_cleaning_lineage_classifies_each_record_once(result):
 
 def _ingest_rows(spark, tmp_path, rows):
     """run_pipeline over one raw-zone file holding ``rows``."""
-    whale_dir = tmp_path / "raw" / "beluga_whale"
-    whale_dir.mkdir(parents=True)
-    (whale_dir / "1900-01-01--1950-12-31.json").write_text(
-        json.dumps({"results": rows}, indent=4)
-    )
     ctx = PipelineContext(whale="beluga_whale", startdate="1900-01-01",
-                          enddate="1950-12-31", data_dir=str(tmp_path / "raw"))
+                          enddate="1950-12-31",
+                          data_dir=_write_zone(tmp_path / "raw", rows))
     return run_pipeline(spark, ctx)
-
-
-_BASE = {"species": "Delphinapterus leucas", "speciesid": 137115,
-         "decimalLatitude": 60.0, "decimalLongitude": -150.0}
 
 
 def test_error_export_merges_records_with_identical_data(spark, tmp_path):

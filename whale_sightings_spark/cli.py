@@ -1,9 +1,12 @@
 """CLI mirroring the reference's entry points (``main.py:33-84``):
-``pipeline`` (full ETL), ``obis`` (fetch only), ``process``
-(validate+clean only), ``db`` (load only from curated data).
+``obis`` (fetch to the raw zone), ``process`` (validate + clean into the
+curated parquet and the error JSON), ``db`` (load the star schema from
+the curated parquet only) and ``pipeline`` (the three in order).
 
-argparse instead of Typer (not shipped in this environment); the
-command surface and resumable-checkpoint contract match the reference.
+Each stage hands off to the next through files, as the reference's
+checkpointed sub-commands do: ``db`` reads what ``process`` wrote at
+``{data_dir}/{whale}/curated`` and never re-runs the cleaning lineage.
+argparse instead of Typer (not shipped in this environment).
 """
 
 from __future__ import annotations
@@ -11,13 +14,22 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.sql import SparkSession
+
 from whale_sightings_spark.plans.pipeline import (
     PipelineContext,
     build_star_schema,
     run_pipeline,
 )
 from whale_sightings_spark.session import get_spark
+from whale_sightings_spark.sources.ddl import (
+    connection_factory_for_url,
+    create_star_schema,
+    load_star_schema,
+    stored_locations,
+)
 from whale_sightings_spark.sources.files import (
+    read_curated_parquet,
     write_curated_csv,
     write_curated_parquet,
     write_error_json,
@@ -28,11 +40,38 @@ from whale_sightings_spark.sources.obis import (
 )
 
 
-def _add_common(p: argparse.ArgumentParser) -> None:
-    p.add_argument("whale", help="whale name, e.g. beluga_whale")
-    p.add_argument("startdate", nargs="?", default=None, help="YYYY-MM-DD")
-    p.add_argument("enddate", nargs="?", default=None, help="YYYY-MM-DD")
-    p.add_argument("--data-dir", default="data")
+def obis(ctx: PipelineContext) -> None:
+    """Stage 1: fetch the OBIS records into the raw zone."""
+    fetch_occurrences_to_raw_zone(
+        ObisClient(), ctx.whale, ctx.scientificname, ctx.data_dir,
+        ctx.startdate, ctx.enddate,
+    )
+
+
+def process(spark: SparkSession, ctx: PipelineContext, out: str, csv: bool) -> None:
+    """Stages 2-3: raw zone -> curated parquet at ``out``; unrepaired
+    error rows are exported next to it rather than dropped
+    (cleaner.py:248-288)."""
+    result = run_pipeline(spark, ctx)
+    write_curated_parquet(result.cleaned, out)
+    if csv:
+        write_curated_csv(result.cleaned, out + "_csv")
+    write_error_json(result.unrepaired_errors, f"{ctx.data_dir}/{ctx.whale}/errors")
+
+
+def db(spark: SparkSession, out: str, db_url: str | None) -> None:
+    """Stage 4: the curated parquet at ``out`` -> star schema, loaded
+    into ``db_url`` or written as parquet under ``{out}_star``."""
+    curated = read_curated_parquet(spark, out)
+    if not db_url:
+        for name, df in build_star_schema(curated).items():
+            write_curated_parquet(df, f"{out}_star/{name}")
+        return
+    factory, dialect = connection_factory_for_url(db_url)
+    create_star_schema(factory, dialect)
+    # new water bodies are numbered after the stored ones, never over them
+    star = build_star_schema(curated, stored_locations(spark, factory))
+    load_star_schema(star, factory, dialect)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -41,7 +80,10 @@ def main(argv: list[str] | None = None) -> int:
 
     for name in ("pipeline", "obis", "process", "db"):
         sp = sub.add_parser(name)
-        _add_common(sp)
+        sp.add_argument("whale", help="whale name, e.g. beluga_whale")
+        sp.add_argument("startdate", nargs="?", default=None, help="YYYY-MM-DD")
+        sp.add_argument("enddate", nargs="?", default=None, help="YYYY-MM-DD")
+        sp.add_argument("--data-dir", default="data")
         if name in ("pipeline", "process"):
             sp.add_argument("--out", default=None, help="curated output dir")
             sp.add_argument("--csv", action="store_true", help="also write CSV (reference parity)")
@@ -61,39 +103,15 @@ def main(argv: list[str] | None = None) -> int:
         enddate=args.enddate,
         data_dir=args.data_dir,
     )
+    out = getattr(args, "out", None) or f"{ctx.data_dir}/{ctx.whale}/curated"
 
     if args.cmd in ("pipeline", "obis"):
-        fetch_occurrences_to_raw_zone(
-            ObisClient(), ctx.whale, ctx.scientificname, ctx.data_dir,
-            ctx.startdate, ctx.enddate,
-        )
-        if args.cmd == "obis":
-            return 0
-
-    spark = get_spark()
-    result = run_pipeline(spark, ctx)
-    out = getattr(args, "out", None) or f"{ctx.data_dir}/{ctx.whale}/curated"
-    write_curated_parquet(result.cleaned, out)
-    if getattr(args, "csv", False):
-        write_curated_csv(result.cleaned, out + "_csv")
-    # reference cleaner.py:248-288: unrepaired error rows are exported
-    # next to the curated output rather than dropped
-    write_error_json(result.unrepaired_errors, f"{ctx.data_dir}/{ctx.whale}/errors")
+        obis(ctx)
+    if args.cmd in ("pipeline", "process"):
+        process(get_spark(), ctx, out, args.csv)
+        print(f"curated output at {out}", file=sys.stderr)
     if args.cmd in ("pipeline", "db"):
-        star = build_star_schema(result.cleaned)
-        db_url = getattr(args, "db_url", None)
-        if db_url:
-            from whale_sightings_spark.sources.ddl import (
-                connection_factory_for_url,
-                load_star_schema,
-            )
-
-            factory, dialect = connection_factory_for_url(db_url)
-            load_star_schema(star, factory, dialect)
-        else:
-            for name, df in star.items():
-                write_curated_parquet(df, f"{out}_star/{name}")
-    print(f"curated output at {out}", file=sys.stderr)
+        db(get_spark(), out, args.db_url)
     return 0
 
 

@@ -103,18 +103,3 @@ def fill_in(df: DataFrame, whale: str) -> DataFrame:
 def with_date_validity(df: DataFrame) -> DataFrame:
     """P4 applied to the merged frame (cleaner.py:352)."""
     return df.withColumn("date_is_valid", date_is_valid(F.col("eventDate")))
-
-
-def get_start_and_end(
-    df: DataFrame, startdate: str | None, enddate: str | None
-) -> tuple[str, str]:
-    """A2/P5 (cleaner.py:170-192): derive missing bounds from min/max of
-    ISO-valid eventDates (string min/max == chronological on ISO)."""
-    if startdate and enddate:
-        return startdate, enddate
-    bounds = (
-        df.filter(F.col("date_is_valid"))
-        .agg(F.min("eventDate").alias("mn"), F.max("eventDate").alias("mx"))
-        .collect()[0]
-    )
-    return startdate or bounds["mn"], enddate or bounds["mx"]

@@ -54,15 +54,8 @@ def encode_locations_dim(
     if existing_dim is None:
         existing_dim = spark.createDataFrame([], "id int, waterBody string")
 
-    order_cols = [c for c in ("_channel", "_ingest_file", "_ingest_pos") if c in cleaned.columns]
-    first_seen = (
-        cleaned.groupBy("waterBody").agg(
-            *(
-                [F.min(F.struct(*[F.col(c) for c in order_cols])).alias("_first")]
-                if order_cols
-                else [F.min(F.lit(0)).alias("_first")]
-            )
-        )
+    first_seen = cleaned.groupBy("waterBody").agg(
+        F.min(F.struct(*_merged_order())).alias("_first")
     )
     new_names = first_seen.join(
         existing_dim,
@@ -72,8 +65,7 @@ def encode_locations_dim(
     mx = existing_dim.agg(F.coalesce(F.max("id"), F.lit(-1)).alias("_mx"))
     # global window is intentional here: input is post-groupBy DISTINCT
     # dim names (bounded dictionary cardinality, not fact-table rows),
-    # so the single-partition stage holds at any fact scale; a
-    # high-cardinality dim would switch to operators.ordinal
+    # so the single-partition stage holds at any fact scale
     assigned = (
         new_names.crossJoin(F.broadcast(mx))
         .select(

@@ -1,20 +1,20 @@
 """End-to-end whale pipeline (SURVEY.md §3.1): one lazy DataFrame
-lineage from raw-zone JSON to the curated frame + star schema.
+lineage from raw-zone JSON to the curated frame, and the star schema
+built from a curated frame.
 
 Reference lifecycle (``main.py:33-50``): fetch -> validate -> clean ->
 load, eager and single-threaded with file checkpoints between stages.
-Here stages 2-4 are one Catalyst plan and building it runs no Spark
-job: actions happen only at the sinks, plus one bounds scan when the
-context leaves a start or end date open and the caller reads a bound.
-The only wide operators are the dedup window, the per-file null-ID
-numbering window and the dim aggregations — every dim join broadcasts
-(SURVEY §7.0).
+Here stages 2-3 are one Catalyst plan and building it runs no Spark
+job: actions happen only at the sinks. Stage 4 starts from the curated
+parquet those sinks wrote (the reference's file checkpoint), so the
+star load never re-runs the cleaning lineage. The only wide operators
+are the dedup window, the per-file null-ID numbering window and the
+dim aggregations — every dim join broadcasts (SURVEY §7.0).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from whale_sightings_spark.operators.clean import (
     dedup_keep_first,
     fill_in,
-    get_start_and_end,
     unrepaired_export,
     with_date_validity,
 )
@@ -64,21 +63,6 @@ class PipelineContext:
 class PipelineResult:
     cleaned: DataFrame
     unrepaired_errors: DataFrame
-    ctx: PipelineContext
-
-    @cached_property
-    def _bounds(self) -> tuple[str, str]:
-        # an open bound costs a run of the whole cleaning lineage, so
-        # it is derived on first read, not when the result is built
-        return get_start_and_end(self.cleaned, self.ctx.startdate, self.ctx.enddate)
-
-    @property
-    def startdate(self) -> str:
-        return self._bounds[0]
-
-    @property
-    def enddate(self) -> str:
-        return self._bounds[1]
 
 
 def clean_occurrences(
@@ -107,7 +91,6 @@ def clean_occurrences(
     return PipelineResult(
         cleaned=merged,
         unrepaired_errors=unrepaired_export(classified),
-        ctx=ctx,
     )
 
 
@@ -126,8 +109,9 @@ def run_pipeline(
 def build_star_schema(
     cleaned: DataFrame, existing_locations: DataFrame | None = None
 ) -> dict[str, DataFrame]:
-    """Stage 4 dims + fact (S12-S14): locations surrogate encoding,
-    species dim, FK-resolved fact."""
+    """Stage 4 dims + fact (S12-S14) from a curated frame: locations
+    surrogate encoding against ``existing_locations``, species dim,
+    FK-resolved fact."""
     locations = encode_locations_dim(cleaned, existing_locations)
     species = derive_species_dim(cleaned)
     fact = build_occurrences_fact(resolve_water_body_fk(cleaned, locations))

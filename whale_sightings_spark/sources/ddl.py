@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -102,6 +102,22 @@ def create_star_schema(connection_factory: Callable[[], object], dialect: str) -
         conn.close()
 
 
+def stored_locations(
+    spark: SparkSession, connection_factory: Callable[[], object]
+) -> DataFrame:
+    """The ``locations`` dim as the database holds it, for the next load
+    to encode against: stored names keep their ids and new ones follow
+    ``max(id)`` (procedures.sql:4-28)."""
+    conn = connection_factory()
+    try:
+        cur = conn.cursor()
+        cur.execute("SELECT id, waterBody FROM locations")
+        rows = cur.fetchall()
+    finally:
+        conn.close()
+    return spark.createDataFrame(rows, "id int, waterBody string")
+
+
 def _upsert_sql(dialect: str, table: str, columns, update_cols, key_cols) -> str:
     if dialect == "mysql":
         return mysql_upsert_sql(table, columns, update_cols)
@@ -111,17 +127,16 @@ def _upsert_sql(dialect: str, table: str, columns, update_cols, key_cols) -> str
 def load_star_schema(
     star: dict[str, DataFrame],
     connection_factory: Callable[[], object],
-    dialect: str = "mysql",
-    batch_size: int = 1000,
+    dialect: str,
 ) -> None:
-    """End-to-end load of the three serving tables (storage.py:137-146
-    behavior, set-based): DDL if missing, then dims, then the fact.
+    """Load of the three serving tables (storage.py:137-146 behavior,
+    set-based) into the tables ``create_star_schema`` made: dims, then
+    the fact.
 
     Conflict semantics per table: dims update their name columns;
     the fact updates measures + date parts but never the FK columns
     (OCCURRENCES_UPDATE_COLS — storage.py:71-76).
     """
-    create_star_schema(connection_factory, dialect)
     plans = [
         ("locations", LOCATIONS_COLS, ("waterBody",), ("id",), True),
         ("species", SPECIES_COLS, ("speciesName", "vernacularName"), ("id",), True),
@@ -146,7 +161,6 @@ def load_star_schema(
             df,
             _upsert_sql(dialect, table, cols, update_cols, key_cols),
             connection_factory,
-            batch_size=batch_size,
         )
 
 
