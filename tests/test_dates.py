@@ -17,8 +17,6 @@ from whale_sightings_spark.functions.dates import (
     date_is_valid,
     is_bad_date_format,
     normalize_event_date,
-    pad_end_date,
-    pad_start_date,
     parse_event_date,
     split_dates_duckdb_sql,
     split_dates_py,
@@ -205,21 +203,15 @@ def test_parse_event_date_accepted_formats(spark):
     assert got == cases
 
 
-def test_date_is_valid_and_padding(spark):
+def test_date_is_valid(spark):
     df = spark.createDataFrame(
         [("1913-03-17",), ("1985",), ("1925-11",), (None,)], "d string"
     )
-    rows = df.select(
-        "d",
-        date_is_valid(F.col("d")).alias("ok"),
-        pad_start_date(F.col("d")).alias("s"),
-        pad_end_date(F.col("d")).alias("e"),
-    ).collect()
+    rows = df.select("d", date_is_valid(F.col("d")).alias("ok")).collect()
     by = {r["d"]: r for r in rows}
-    assert by["1913-03-17"]["ok"] is True and by["1913-03-17"]["s"] == "1913-03-17"
+    assert by["1913-03-17"]["ok"] is True
     assert by["1985"]["ok"] is False
-    assert by["1985"]["s"] == "1985-01-01" and by["1985"]["e"] == "1985-12-31"
-    assert by["1925-11"]["ok"] is False and by["1925-11"]["s"] == "1925-11"
+    assert by["1925-11"]["ok"] is False
     assert by[None]["ok"] is False
 
 

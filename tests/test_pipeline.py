@@ -349,6 +349,105 @@ def test_cli_db_keeps_stored_location_ids(spark, tmp_path):
                      "y1": "Shared Sea", "y2": "New Sea"}
 
 
+class _FakeObis:
+    """Offline stand-in for ``ObisClient``: canned per-year statistics,
+    and occurrence requests answered from ``records`` filtered to the
+    requested inclusive date range and cut at ``size``, as the API
+    does."""
+
+    def __init__(self, statistics, records):
+        self.statistics = statistics
+        self.records = records
+
+    def get(self, endpoint, params):
+        start, end = params.get("startdate"), params.get("enddate")
+        if endpoint == "/statistics/years":
+            return [
+                y for y in self.statistics
+                if (not start or int(y["year"]) >= int(start[:4]))
+                and (not end or int(y["year"]) <= int(end[:4]))
+            ]
+        assert endpoint == "/occurrence", endpoint
+        rows = [
+            r for r in self.records
+            if (not start or r["eventDate"][:10] >= start)
+            and (not end or r["eventDate"][:10] <= end)
+        ]
+        return {"results": rows[: int(params["size"])]}
+
+
+def test_cli_obis_lands_batches_that_process_and_db_load(spark, tmp_path, monkeypatch):
+    """The `obis` stage offline: planned year batches land as
+    ``{start}--{end}.json`` files that the raw-zone listing accepts,
+    and `process` then `db` load every fetched record. 2002 alone holds
+    more records than one request returns (10,000), so it is fetched by
+    itself between two packed batches."""
+    import sqlite3
+
+    from whale_sightings_spark.cli import main
+
+    statistics = [{"year": "2000", "records": 6000},
+                  {"year": "2001", "records": 3000},
+                  {"year": "2002", "records": 12000},
+                  {"year": "2003", "records": 500}]
+    records = [
+        {**_BASE, "occurrenceID": f"o{i}", "eventDate": date,
+         "decimalLatitude": 60.0 + i}
+        for i, date in enumerate(["2000-02-01", "2000-07-04", "2001-12-31",
+                                  "2002-01-01", "2002-05-05", "2003-03-03"])
+    ]
+    monkeypatch.setattr("whale_sightings_spark.cli.ObisClient",
+                        lambda: _FakeObis(statistics, records))
+    data_dir = str(tmp_path)
+    assert main(["obis", "beluga_whale", "--data-dir", data_dir]) == 0
+
+    landed = sorted((tmp_path / "beluga_whale").glob("*.json"))
+    assert [p.name for p in landed] == ["2000-01-01--2001-12-31.json",
+                                        "2002-01-01--2002-12-31.json",
+                                        "2003-01-01--2003-12-31.json"]
+    assert match_raw_files(data_dir, "beluga_whale", None, None) == [
+        str(p) for p in landed
+    ]
+    fetched = sum(len(json.loads(p.read_text())["results"]) for p in landed)
+    assert fetched == len(records)
+
+    db_path = str(tmp_path / "whales.db")
+    assert main(["process", "beluga_whale", "--data-dir", data_dir]) == 0
+    assert main(["db", "beluga_whale", "--data-dir", data_dir,
+                 "--db-url", f"sqlite:///{db_path}"]) == 0
+    con = sqlite3.connect(db_path)
+    try:
+        ids = {r[0] for r in con.execute("SELECT id FROM occurrences")}
+    finally:
+        con.close()
+    assert ids == {r["occurrenceID"] for r in records}
+
+
+def test_process_writes_empty_curated_zone_when_no_raw_file_matches(spark, tmp_path):
+    """A whale directory with no files, and dates that match no file,
+    both give a 0-row curated parquet with the columns a non-empty
+    ingest writes."""
+    from whale_sightings_spark.cli import main
+
+    data_dir = _write_zone(tmp_path / "zone", [
+        {**_BASE, "occurrenceID": "a", "eventDate": "1913-03-17"},
+    ])
+    assert main(["process", "beluga_whale", "--data-dir", data_dir]) == 0
+    full = spark.read.parquet(f"{data_dir}/beluga_whale/curated")
+    assert full.count() == 1
+
+    no_match = str(tmp_path / "no_match")
+    assert main(["process", "beluga_whale", "2000-01-01", "2010-12-31",
+                 "--data-dir", data_dir, "--out", no_match]) == 0
+    empty_dir = tmp_path / "empty"
+    (empty_dir / "beluga_whale").mkdir(parents=True)
+    assert main(["process", "beluga_whale", "--data-dir", str(empty_dir)]) == 0
+    for out in (no_match, f"{empty_dir}/beluga_whale/curated"):
+        curated = spark.read.parquet(out)
+        assert curated.count() == 0
+        assert curated.schema == full.schema
+
+
 def test_records_failing_beyond_eventdate_are_exported_not_repaired(spark, tmp_path):
     """Only a record whose every detail is on eventDate goes through the
     date repair. One that also fails another field (an individualCount
@@ -567,48 +666,20 @@ def test_spatial_join_accepts_driver_side_polygons(spark):
     assert got_list == expect
 
 
-def test_sedona_st_intersects_parity_with_broadcast_path(spark):
-    """Feature-flagged Sedona path (VERDICT r8 stretch #8): when the
-    optional apache-sedona package is present, the ST_Intersects join
-    must assign identically to the broadcast pandas-UDF path on the
-    WKT fixture (left join, overwrite, first-polygon-order wins).
-    Skips when sedona is absent (this sandbox); the gate itself —
-    HAVE_SEDONA False -> RuntimeError — is always asserted."""
-    import pytest
+def test_ray_cast_counts_edge_points_as_inside():
+    """A point on a polygon's edge or vertex intersects it, as under the
+    reference's ``sjoin(predicate='intersects')``, on every side of the
+    ring. The crossing rule alone dropped the right and top edges."""
+    import numpy as np
 
-    from whale_sightings_spark.operators.spatial import (
-        HAVE_SEDONA,
-        spatial_join_water_body,
-        spatial_join_water_body_sedona,
-    )
+    from whale_sightings_spark.operators.spatial import _ray_cast, parse_wkt_polygon
 
-    wkt = [
-        ("West Box", "POLYGON ((-10 -10, 0 -10, 0 10, -10 10, -10 -10))"),
-        ("East Box", "POLYGON ((0 -10, 10 -10, 10 10, 0 10, 0 -10))"),
-    ]
-    pts = spark.createDataFrame(
-        [(1, -5.0, 0.0), (2, 5.0, 0.0), (3, 55.0, 55.0), (4, None, 3.0)],
-        "id int, lon double, lat double",
-    )
-    if not HAVE_SEDONA:
-        with pytest.raises(RuntimeError, match="sedona"):
-            spatial_join_water_body_sedona(
-                pts, wkt, lon_col="lon", lat_col="lat"
-            )
-        pytest.skip("apache-sedona not installed; gate verified")
-    broadcast = {
-        r["id"]: r["waterBody"]
-        for r in spatial_join_water_body(
-            pts, oceans_from_wkt(spark, wkt), lon_col="lon", lat_col="lat"
-        ).collect()
-    }
-    sedona = {
-        r["id"]: r["waterBody"]
-        for r in spatial_join_water_body_sedona(
-            pts, wkt, lon_col="lon", lat_col="lat"
-        ).collect()
-    }
-    assert sedona == broadcast
+    ring = np.array(parse_wkt_polygon("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"))
+    expect = {(0, 5): True, (5, 0): True, (0, 0): True,
+              (10, 5): True, (5, 10): True, (10, 10): True,
+              (5, 5): True, (11, 5): False, (0, 11): False}
+    lon, lat = (np.array(c, dtype="float64") for c in zip(*expect))
+    assert dict(zip(expect, _ray_cast(lon, lat, ring).tolist())) == expect
 
 
 def _shp_bytes(rings):

@@ -298,46 +298,6 @@ def test_schema_evolution_merge_and_declared_projection(spark, tmp_path):
     assert pinned.count() == 3
 
 
-def test_orc_round_trip_partition_pruning_and_pushdown(spark, sf_dir, tmp_path):
-    # the ORC zone must honor the same layout contracts as parquet:
-    # identical data back, partition pruning on the layout column,
-    # predicate pushdown into the ORC scan
-    from pyspark.sql import functions as F
-
-    from whale_sightings_spark.sources.files import (
-        read_curated_orc,
-        write_curated_orc,
-    )
-
-    src = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .withColumn("o_year", F.year("o_orderdate"))
-    )
-    out = str(tmp_path / "orders_orc")
-    write_curated_orc(src, out, partition_by=("o_year",))
-
-    back = read_curated_orc(spark, out)
-    assert back.count() == src.count()
-    assert set(back.columns) == set(src.columns)
-
-    filtered = back.filter(F.col("o_year") == 1995).filter(
-        F.col("o_totalprice") > 1000
-    )
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    # partition column never reaches the scan as a data filter; the
-    # price predicate must be pushed into the ORC reader
-    assert "PushedFilters: [" in plan and "o_totalprice" in plan.split(
-        "PushedFilters"
-    )[1][:200], plan
-    exp = (
-        src.filter((F.col("o_year") == 1995) & (F.col("o_totalprice") > 1000))
-        .agg(F.count("*"), F.sum("o_orderkey"))
-        .collect()[0]
-    )
-    got = filtered.agg(F.count("*"), F.sum("o_orderkey")).collect()[0]
-    assert tuple(got) == tuple(exp)
-
-
 def test_raw_scan_reads_the_zone_once(spark, tmp_path):
     """One scan of a raw-zone file reads its bytes once. Spark's exact
     string parsing re-read the multiLine document for every JSON number

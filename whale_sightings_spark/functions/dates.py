@@ -117,20 +117,6 @@ def date_is_valid(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# F2: bare-year padding (reference obis.py:103-122)
-# ---------------------------------------------------------------------------
-
-def pad_start_date(col: Column) -> Column:
-    """Bare YYYY -> YYYY-01-01; full dates pass through."""
-    return F.when(col.rlike(r"^\d{4}$"), F.concat(col, F.lit("-01-01"))).otherwise(col)
-
-
-def pad_end_date(col: Column) -> Column:
-    """Bare YYYY -> YYYY-12-31; full dates pass through."""
-    return F.when(col.rlike(r"^\d{4}$"), F.concat(col, F.lit("-12-31"))).otherwise(col)
-
-
-# ---------------------------------------------------------------------------
 # F3: split_dates — the messy-date normalizer (reference cleaner.py:76-158)
 # ---------------------------------------------------------------------------
 

@@ -9,9 +9,9 @@ polygons), so this is a **broadcast nested-loop join with a vectorized
 predicate** — the polygon rings ride to every executor as a broadcast
 variable and an Arrow-batched pandas UDF ray-casts each batch of points
 with numpy. The fact side never shuffles; cost is O(rows × vertices)
-map-side, which holds at 100 TB. Shapely is used when importable
-(identical semantics on convex fixture polygons), numpy otherwise —
-both boundary behavior notes in SURVEY §7.3.5.
+map-side, which holds at 100 TB. A point on a polygon's edge or vertex
+matches it, as under the reference's ``intersects`` predicate (SURVEY
+§7.3.5).
 
 Multi-match policy: first polygon in table order wins (GOaS oceans are
 non-overlapping, so at most one matches in practice).
@@ -28,23 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from whale_sightings_spark.schemas import OCEAN_POLYGON_SCHEMA
-from whale_sightings_spark.session import barrier
-
-try:  # optional accelerator; container may not ship it
-    import shapely  # type: ignore
-
-    # only the shapely>=2 vectorized predicate is worth taking: the 1.x
-    # API forces a per-point Python loop, slower than the numpy ray-cast
-    _HAVE_SHAPELY = hasattr(shapely, "intersects_xy")
-except Exception:  # pragma: no cover
-    _HAVE_SHAPELY = False
-
-try:  # optional JVM-side spatial join engine (jars + python package)
-    from sedona.spark import SedonaContext  # type: ignore
-
-    HAVE_SEDONA = True
-except Exception:  # pragma: no cover
-    HAVE_SEDONA = False
 
 
 def parse_wkt_polygon(wkt: str) -> list[tuple[float, float]]:
@@ -176,19 +159,29 @@ def oceans_from_shp(
 
 def _ray_cast(lon: np.ndarray, lat: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Vectorized even-odd ray casting: inside-test for all points at
-    once against one polygon ring. Boundary points count as inside on
-    the edge crossing rule's side — fixtures keep points off borders."""
+    once against one polygon ring. A point on an edge or a vertex counts
+    as inside: a zero cross product within the edge's bounding box."""
     x, y = lon, lat
     inside = np.zeros(len(x), dtype=bool)
+    on_edge = np.zeros(len(x), dtype=bool)
     n = len(ring)
     for i in range(n):
         x1, y1 = ring[i]
         x2, y2 = ring[(i + 1) % n]
-        crosses = ((y1 > y) != (y2 > y)) & (
-            x < (x2 - x1) * (y - y1) / (y2 - y1 + 1e-300) + x1
-        )
-        inside ^= crosses
-    return inside
+        # > 0 left of the edge (x1, y1) -> (x2, y2), 0 on its line
+        cross = (x2 - x1) * (y - y1) - (y2 - y1) * (x - x1)
+        straddles = (y1 > y) != (y2 > y)
+        # the rightward ray from (x, y) crosses an upward edge that has
+        # the point on its left, and a downward one that has it on its right
+        inside ^= straddles & ((cross > 0) if y2 > y1 else (cross < 0))
+        on_line = cross == 0
+        if on_line.any():
+            on_edge |= (
+                on_line
+                & (min(x1, x2) <= x) & (x <= max(x1, x2))
+                & (min(y1, y2) <= y) & (y <= max(y1, y2))
+            )
+    return inside | on_edge
 
 
 def spatial_join_water_body(
@@ -219,7 +212,6 @@ def spatial_join_water_body(
         ]
     else:
         polys = [(name, np.asarray(ring, dtype="float64")) for name, ring in oceans]
-    use_shapely = _HAVE_SHAPELY
     ray_cast = _ray_cast  # bind by value into the closure
 
     @F.pandas_udf(T.StringType())
@@ -231,74 +223,10 @@ def spatial_join_water_body(
         for name, ring in polys:
             if not unassigned.any():
                 break
-            if use_shapely:
-                import shapely  # type: ignore
-
-                # vectorized boundary-inclusive predicate over the whole
-                # Arrow batch — one C call per polygon, no Python loop
-                poly = shapely.Polygon(ring)
-                hit = unassigned & shapely.intersects_xy(poly, lon_v, lat_v)
-            else:
-                hit = unassigned & ray_cast(lon_v, lat_v, ring)
+            hit = unassigned & ray_cast(lon_v, lat_v, ring)
             out[hit] = name
             unassigned &= ~hit
         return pd.Series(out)
 
     return df.withColumn("waterBody", ocean_name(F.col(lon_col), F.col(lat_col)))
 
-
-def spatial_join_water_body_sedona(
-    df: DataFrame,
-    named_wkt: list[tuple[str, str]],
-    lon_col: str = "decimalLongitude",
-    lat_col: str = "decimalLatitude",
-) -> DataFrame:
-    """ST_Intersects left join via Apache Sedona (VERDICT r8 stretch
-    #8) — the scale path for a polygon side too large to ride a task
-    closure: Sedona plans a real spatial join (spatial-partitioned,
-    R-tree probed) instead of the broadcast O(rows × polygons) scan.
-    Semantics match `spatial_join_water_body`: left join, ``waterBody``
-    OVERWRITTEN with the matched ocean name (NULL on no match), first
-    polygon in table order wins on multi-match. Gated on the optional
-    ``apache-sedona`` package + jars (`HAVE_SEDONA`); raises
-    RuntimeError when absent — callers fall back to the broadcast path
-    (the matplotlib import-try convention, `plans/notebook.py`)."""
-    if not HAVE_SEDONA:  # pragma: no cover - exercised via the gate test
-        raise RuntimeError(
-            "apache-sedona is not installed; use spatial_join_water_body"
-        )
-    from pyspark.sql import Window as W
-
-    spark = df.sparkSession
-    SedonaContext.create(spark)  # registers ST_* functions (idempotent)
-    polys = spark.createDataFrame(
-        [(i, name, wkt) for i, (name, wkt) in enumerate(named_wkt)],
-        "poly_id int, name string, wkt string",
-    ).select("poly_id", "name", F.expr("ST_GeomFromWKT(wkt)").alias("geom"))
-    # __rid keys the first-match window; monotonically_increasing_id
-    # is nondeterministic across task retries/speculation, so the
-    # stamped frame is pinned BEFORE the join (ADVICE r9) so ids are not
-    # re-assigned mid-stage, duplicating/dropping rows at the rn==1
-    # filter
-    pts = (
-        df.withColumn("__rid", F.monotonically_increasing_id())
-        .transform(barrier)
-        .withColumn(
-            "__pt",
-            F.expr(
-                f"ST_Point(CAST({lon_col} AS DOUBLE), CAST({lat_col} AS DOUBLE))"
-            ),
-        )
-    )
-    j = pts.join(
-        polys,
-        F.col("__pt").isNotNull() & F.expr("ST_Intersects(geom, __pt)"),
-        "left",
-    )
-    first = W.partitionBy("__rid").orderBy(F.asc_nulls_last("poly_id"))
-    return (
-        j.withColumn("__rn", F.row_number().over(first))
-        .filter(F.col("__rn") == 1)
-        .withColumn("waterBody", F.col("name"))
-        .drop("__rid", "__pt", "__rn", "poly_id", "name", "geom")
-    )

@@ -41,28 +41,6 @@ ORDINAL_COLS = ("_ingest_file", "_ingest_pos")
 VALID, REPAIRED, UNREPAIRED = 0, 1, 2
 
 
-def with_ingest_ordinal(df: DataFrame) -> DataFrame:
-    """Stamp the deterministic ingest ordinal at source.
-
-    ``_ingest_file`` is the input file path (empty for in-memory data);
-    ``_ingest_pos`` is the row position within that file. The pair is a
-    total order over the input that is stable across partitioning —
-    unlike ``monotonically_increasing_id`` alone, which shifts when the
-    scan splits differently. No global sort is ever materialized; the
-    ordinal is only used inside window ``orderBy`` clauses.
-    """
-    if all(c in df.columns for c in ORDINAL_COLS):
-        return df
-    return df.withColumns(
-        {
-            "_ingest_file": F.coalesce(F.input_file_name(), F.lit("")),
-            # per-partition monotonic id: stable for a fixed file split;
-            # files are read in order within a partition
-            "_ingest_pos": F.monotonically_increasing_id(),
-        }
-    )
-
-
 def _detail(cond: Column, typ: str, loc: str, msg: str) -> Column:
     return F.when(
         cond,
@@ -213,7 +191,7 @@ def typed_occurrences(classified: DataFrame) -> DataFrame:
         .alias("individualCount"),
         F.col("basisOfRecord"),
         F.col("bibliographicCitation"),
-        *[c for c in classified.columns if c in ORDINAL_COLS],
+        *ORDINAL_COLS,
         *DATE_PARTS_FIELDS,
         "_channel",
     )

@@ -256,8 +256,3 @@ def _fan_out(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
         return df.repartition(parallelism)
     return df
 
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for Spark SQL."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

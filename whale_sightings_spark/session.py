@@ -65,9 +65,6 @@ def get_spark(
         .config("spark.sql.constraintPropagation.enabled", "false")
         .config("spark.sql.json.enableExactStringParsing", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python Data Source filter pushdown (R2: the obis source
-        # absorbs eventDate/species predicates into request params)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_memory())
         # long sessions run hundreds of plans: reclaim shuffle files,

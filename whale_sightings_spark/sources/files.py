@@ -19,7 +19,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whale_sightings_spark.operators.validate import with_ingest_ordinal
 from whale_sightings_spark.schemas import OCCURRENCE_RAW_SCHEMA
 
 FILE_RANGE_RE = re.compile(r"(\d{4})-\d{2}-\d{2}--(\d{4})-\d{2}-\d{2}")
@@ -61,7 +60,8 @@ def read_raw_occurrences(spark: SparkSession, paths: list[str]) -> DataFrame:
 
     ``multiLine=True`` because the reference writes indented JSON
     documents, not JSONL. The ``results`` array is exploded in file
-    order and stamped with the deterministic ingest ordinal.
+    order and stamped with the deterministic ingest ordinal; no paths
+    give the same columns with no rows.
     """
     import pyspark.sql.types as T
 
@@ -69,8 +69,12 @@ def read_raw_occurrences(spark: SparkSession, paths: list[str]) -> DataFrame:
         [T.StructField("results", T.ArrayType(OCCURRENCE_RAW_SCHEMA), True)]
     )
     if not paths:
-        return with_ingest_ordinal(
-            spark.createDataFrame([], OCCURRENCE_RAW_SCHEMA)
+        ordinal = [
+            T.StructField("_ingest_file", T.StringType()),
+            T.StructField("_ingest_pos", T.LongType()),
+        ]
+        return spark.createDataFrame(
+            [], T.StructType(OCCURRENCE_RAW_SCHEMA.fields + ordinal)
         )
     docs = spark.read.schema(doc_schema).option("multiLine", "true").json(paths)
     rows = (
@@ -170,29 +174,6 @@ def read_curated_parquet(spark: SparkSession, path: str, schema=None) -> DataFra
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(path)
-
-
-def write_curated_orc(
-    df: DataFrame, out_dir: str, partition_by: tuple[str, ...] = ()
-) -> None:
-    """ORC twin of the parquet curated zone (native Spark writer, zlib
-    default). Same partition-pruning layout contract; kept so the
-    engine can serve warehouses standardized on ORC without a
-    conversion hop."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(out_dir)
-
-
-def read_curated_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """ORC re-entry point; same declared-schema projection contract as
-    the parquet reader (predicate pushdown and column pruning are
-    native for ORC too — asserted in tests/test_sources.py)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
 
 
 def write_error_json(unrepaired: DataFrame, out_dir: str) -> None:
